@@ -722,11 +722,19 @@ object AnnIndex {
     * cell: (planes, probe_bits, n_candidates, n_corpus, n_hits,
     * recall_x10k, cand_frac_x10k). Scale shape: the exact top-k
     * baseline is computed once; each cell is one bucket pass over the
-    * corpus plus a broadcast probe join and a k-row intersection. */
+    * corpus plus a broadcast probe join and a k-row intersection.
+    *
+    * Input contract: `idCol` is a bigint (checked — the cells' bounded
+    * top-k buffer binds ids as Long) and unique across the corpus (not
+    * checked — n_hits intersects id SETS, so a duplicated id would be
+    * counted once where the exact page holds it twice). */
   def annTuning(corpus: DataFrame, embCol: String, idCol: String,
                 query: DataFrame, queryCol: String, dim: Int, k: Int,
                 cells: Seq[(Int, Int)]): DataFrame = {
     import graft.functions.{text, vectors}
+    val idType = corpus.schema(idCol).dataType
+    require(idType == org.apache.spark.sql.types.LongType,
+      s"annTuning needs a bigint idCol: `$idCol` is ${idType.simpleString}")
     // ONE query row, the annTopK/ivfTopK contract — checked loudly AND
     // collected once: the exact baseline, candidate counts and candidate
     // top-k are all per-ONE-query globals computed in SEPARATE sub-plans,
@@ -778,8 +786,8 @@ object AnnIndex {
       // ORDER BY __sim DESC, id LIMIT k it replaces — where the r14 form
       // re-ran the bucket kernel over the corpus once for the count and
       // again for the sort-limit page (2 passes x |cells|); n_hits is the
-      // page's intersection with the broadcast exact ids, bit-identical
-      // to the old semi-join count
+      // page's intersection with the broadcast exact ids — a SET
+      // intersection, hence the unique-id contract (scaladoc)
       cand
         .withColumn("__sim", vectors.cosineSim(col(embCol), col("__qe")))
         .agg(count(lit(1)).as("n_candidates"),

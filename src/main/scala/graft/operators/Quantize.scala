@@ -180,7 +180,19 @@ object Quantize {
     * does `maxIter`: on a small-corpus fit the cost is m × maxIter Spark
     * JOBS of launch overhead, not arithmetic, so a handful of Lloyd
     * iterations is the right trade when the fit runs inline (offline
-    * codebook builds can afford the default). */
+    * codebook builds can afford the default).
+    *
+    * Concurrency policy (the engine's one statement of it): the m
+    * per-subspace fits run as driver `Future`s — the only driver-side
+    * concurrency in the engine. Everywhere else a query or operator
+    * builds in one sequential code path, because overlapping independent
+    * jobs changes no result and was never shown to pay in a whole-catalog
+    * run. These fits stay concurrent because they are most of the
+    * build-time jobs the benchmark exercises (q_pq_topk's m=8 fit: nearly
+    * all of its ~70) and what serializing them would cost is unmeasured.
+    * Failure contract: every fit settles before pqFit returns or throws,
+    * so a failed subspace leaves no sibling job running and no checkpoint
+    * block held; the first failure in subspace order is rethrown. */
   def pqFit(corpus: DataFrame, embCol: String, dim: Int, m: Int,
             nCentroids: Int = 16, seed: Long = 42L,
             maxIter: Int = 10): Array[Array[Array[Double]]] = {
@@ -196,11 +208,8 @@ object Quantize {
     val clean = corpus.filter(col(embCol).isNotNull)
       .select(col(embCol).cast("array<double>").as("__emb"))
       .localCheckpoint(true)
-    // the m per-subspace fits are independent seeded jobs — submit them
-    // concurrently (Spark schedules jobs from multiple threads fine) so
-    // the inline-fit wall-clock is the longest single fit, not the sum;
     // each fit's result depends only on (its subvectors, its seed), so
-    // concurrency cannot change the codebooks
+    // concurrency cannot change the codebooks (policy: scaladoc above)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
@@ -781,76 +790,50 @@ object Quantize {
       s"ivfPqTuning reserves column name(s): ${reserved.mkString(", ")}")
     val q = oneQueryRow(query, "ivfPqTuning")
       .select(col("qe").cast("array<double>").as("qe"))
-    // r14 shape (the ivfTuning/annTuning union-of-cells shape, plus the
-    // guide's overlap-independent-jobs rule): the corpus residual encode
-    // is computed ONCE and shared by every code budget (residuals are
-    // model-only, m never enters them — the r13 loop re-encoded per m),
-    // both code budgets' pqFits run CONCURRENTLY (each already fans its
-    // per-subspace KMeans fits out; the two budgets' fits now overlap
-    // too, so sweep fit wall-clock is the longest single fit), and the
-    // |ms|·|overFetches| cells are LAZY 1-row frames unioned into the
-    // returned plan — the r13 form ran 8 sequential count() actions,
-    // serializing 8 tiny jobs the one sink action now schedules
-    // together. Each budget's scored frame is an eager localCheckpoint
-    // where r13 cached+unpersisted: the returned plan references it, so
-    // per the checkpoint-release policy the final leaves are the
-    // caller's to hold (same class as the r13 cache while it lived —
-    // corpus-sized, the probe-all sweep's documented cost).
+    // the ivfTuning/annTuning union-of-cells shape, built in order: the
+    // exact ids, the corpus residual encode (computed ONCE and shared by
+    // every code budget — residuals are model-only, m never enters
+    // them), then per code budget the fit, the encode and the scored
+    // page; the |ms|·|overFetches| cells are LAZY 1-row frames unioned
+    // into the returned plan, so the one sink action schedules them
+    // together. Each budget's scored frame is an eager localCheckpoint:
+    // the returned plan references it, so per the checkpoint-release
+    // policy the final leaves are the caller's to hold (corpus-sized,
+    // the probe-all sweep's documented cost).
     //
-    // r15: the three materializations that do not depend on each other —
-    // the exact baseline, the shared residual encode, and the subspace
-    // fits — now ALL start concurrently (r14 only overlapped the fits
-    // with each other), and each budget's scored-page checkpoint runs in
-    // its own Future instead of serializing after the slower fit.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     // the exact baseline really is computed ONCE: localCheckpoint — a
     // lazy plan here would re-run the full-corpus exact scan inside
     // every cell's left_semi probe (|ms|·|overFetches| scans)
-    val exactIdsF = Future {
-      corpus.crossJoin(broadcast(q))
-        .withColumn("__sim", vectors.cosineSim(col(embCol), col("qe")))
-        .orderBy(desc("__sim"), col(idCol))
-        .limit(k)
-        .select(col(idCol))
-        .localCheckpoint()
-    }
+    val exactIds = corpus.crossJoin(broadcast(q))
+      .withColumn("__sim", vectors.cosineSim(col(embCol), col("qe")))
+      .orderBy(desc("__sim"), col(idCol))
+      .limit(k)
+      .select(col(idCol))
+      .localCheckpoint()
     val nCorpus = corpus.agg(count(lit(1)).as("n_corpus"))
     val nLists = model.clusterCenters.length
     val cents = centroidFrame(spark, model)
-    val residF = Future {
-      ivfResiduals(model, corpus, embCol)
-        .withColumn("__en", vectors.l2Norm(col(embCol).cast("array<double>")))
-        .localCheckpoint(true)
-    }
+    val resid = ivfResiduals(model, corpus, embCol)
+      .withColumn("__en", vectors.l2Norm(col(embCol).cast("array<double>")))
+      .localCheckpoint(true)
     val residFit = ivfResiduals(model, fitSample, embCol)
-    // NAMED maxIter: the positional form bound maxIter into pqFit's
-    // seed parameter (Int -> Long weak conformance compiled silently),
-    // so the sweep fitted DIFFERENT codebooks (seed=maxIter, 10 Lloyd
-    // iterations) than the serving face it claims to measure
-    val fits = ms.map(m => m -> Future {
-      pqFit(residFit, "__res", dim, m, nCentroids, maxIter = maxIter) })
-    val exactIds = Await.result(exactIdsF, Duration.Inf)
-    val resid = Await.result(residF, Duration.Inf)
-    val scoredFs = fits.map { case (m, fit) =>
-      m -> Future {
-        val cb = Await.result(fit, Duration.Inf)
-        val coded = pqEncode(resid, "__res", cb)
-        // probe-all page from the SHARED builder (n = nLists isolates code
-        // resolution; nProbe is ivfTuning's dial)
-        val probes = probePage(q, cents, cb, nLists)
-        val adcUdf = adcUdfFor(cb)
-        (cb, coded.join(broadcast(probes), "list_id")
-          .withColumn("approx_sim",
-            when(col("__en") === 0.0 || col("__qn") === 0.0, lit(0.0))
-              .otherwise((col("__qdotc") + adcUdf(col("pq_codes"), col("__lut"))) /
-                (col("__en") * col("__qn"))))
-          .localCheckpoint(true))
-      }
-    }
-    val cells = scoredFs.flatMap { case (m, sf) =>
-      val (_, scored) = Await.result(sf, Duration.Inf)
+    val cells = ms.flatMap { m =>
+      // NAMED maxIter: the positional form bound maxIter into pqFit's
+      // seed parameter (Int -> Long weak conformance compiled silently),
+      // so the sweep fitted DIFFERENT codebooks (seed=maxIter, 10 Lloyd
+      // iterations) than the serving face it claims to measure
+      val cb = pqFit(residFit, "__res", dim, m, nCentroids, maxIter = maxIter)
+      // probe-all page from the SHARED builder (n = nLists isolates code
+      // resolution; nProbe is ivfTuning's dial)
+      val probes = probePage(q, cents, cb, nLists)
+      val adcUdf = adcUdfFor(cb)
+      val scored = pqEncode(resid, "__res", cb)
+        .join(broadcast(probes), "list_id")
+        .withColumn("approx_sim",
+          when(col("__en") === 0.0 || col("__qn") === 0.0, lit(0.0))
+            .otherwise((col("__qdotc") + adcUdf(col("pq_codes"), col("__lut"))) /
+              (col("__en") * col("__qn"))))
+        .localCheckpoint(true)
       overFetches.map { of =>
         scored
           .orderBy(desc("approx_sim"), col(idCol))

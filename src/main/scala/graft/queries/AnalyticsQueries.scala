@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,6 +38,32 @@ object AnalyticsQueries {
     "(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))"
   private val CorrExpr = s"$CorrNum / (sqrt($VarX) * sqrt($VarY))"
   private val SlopeExpr = s"$CorrNum / $VarX"
+
+  /** The batch ANN gates' exact per-query cosine top-3 of `corpus`
+    * against `queries` (both vec_id, emb) — the replayable half of
+    * q_ivf_join_indexed and q_pq_join_indexed, a lazy subtree of the
+    * returned plan: (neighbor_id, ce, query_id, qe, sim, rnk). */
+  private def exactTop3PerQuery(corpus: DataFrame, queries: DataFrame)
+      : DataFrame =
+    corpus
+      .select(col("vec_id").as("neighbor_id"), col("emb").as("ce"))
+      .crossJoin(broadcast(queries
+        .select(col("vec_id").as("query_id"), col("emb").as("qe"))))
+      .withColumn("sim", vectors.cosineSim(col("ce"), col("qe")))
+      .withColumn("rnk", row_number().over(Window.partitionBy("query_id")
+        .orderBy(desc("sim"), col("neighbor_id"))))
+      .filter(col("rnk") <= 3)
+
+  /** The point ANN gates' exact cosine top-5 of `corpus` (vec_id, label,
+    * emb) against the 1-row `q` (qe) — the replayable half of q_pq_topk,
+    * q_ivf_topk and q_ivfpq_topk, a lazy subtree of the returned plan. */
+  private def exactTop5(corpus: DataFrame, q: DataFrame): DataFrame =
+    corpus.crossJoin(broadcast(q))
+      .withColumn("similarity", vectors.cosineSim(col("emb"), col("qe")))
+      .orderBy(desc("similarity"), col("vec_id"))
+      .limit(5)
+      .select(col("vec_id"), col("label"),
+        expr(text.fixedPoint("similarity", 4)).as("sim_x10k"))
 
   val all: Seq[Q] = Seq(
 
@@ -551,26 +577,6 @@ object AnalyticsQueries {
         .withColumn("sv", expr("transform(emb, x -> x / greatest(__n, 1e-12d))"))
       val queries = all.filter(col("vec_id") < 20)
       val corpus = all.filter(col("vec_id") >= 20)
-      // exact per-query baseline (the gate's replayable half): it depends
-      // only on (corpus, queries), never on the routing fit, so it
-      // materializes CONCURRENTLY with the driver-blocking KMeans fit
-      // below (the recall-trilogy Future recipe, guide §2.6 — independent
-      // jobs back-fill the executors the sequential fit leaves idle)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val w = Window.partitionBy("query_id")
-        .orderBy(desc("sim"), col("neighbor_id"))
-      val exactF = Future {
-        corpus
-          .select(col("vec_id").as("neighbor_id"), col("emb").as("ce"))
-          .crossJoin(broadcast(queries
-            .select(col("vec_id").as("query_id"), col("emb").as("qe"))))
-          .withColumn("sim", vectors.cosineSim(col("ce"), col("qe")))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
-          .localCheckpoint(true)
-      }
       // same quarter-sample routing fit as q_ivf_topk — once-offline at
       // scale, and what keeps the bench cost at the serving path
       val model = AnnIndex.ivfFit(
@@ -583,8 +589,8 @@ object AnalyticsQueries {
       val routed = AnnIndex.ivfJoinIndexed(queries, "vec_id", "sv",
           model, store, "vec_id", "sv", k = 3, nProbe = 10)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      val exact = Await.result(exactF, Duration.Inf)
-      exact.join(broadcast(routed), Seq("query_id", "neighbor_id"), "left")
+      exactTop3PerQuery(corpus, queries)
+        .join(broadcast(routed), Seq("query_id", "neighbor_id"), "left")
         .withColumn("nhit",
           sum(coalesce(col("hit"), lit(0L)))
             .over(Window.partitionBy("query_id")))
@@ -640,26 +646,6 @@ object AnalyticsQueries {
         col("embedding").cast("array<double>").as("emb"))
       val queries = all.filter(col("vec_id") < 20)
       val corpus = all.filter(col("vec_id") >= 20)
-      // exact per-query baseline (the gate's replayable half), the
-      // q_ivf_join_indexed shape — and like there, it depends only on
-      // (corpus, queries), never on the codebooks, so it materializes
-      // CONCURRENTLY with the driver-blocking subspace fits below (the
-      // recall-trilogy Future recipe, guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val w = Window.partitionBy("query_id")
-        .orderBy(desc("sim"), col("neighbor_id"))
-      val exactF = Future {
-        corpus
-          .select(col("vec_id").as("neighbor_id"), col("emb").as("ce"))
-          .crossJoin(broadcast(queries
-            .select(col("vec_id").as("query_id"), col("emb").as("qe"))))
-          .withColumn("sim", vectors.cosineSim(col("ce"), col("qe")))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
-          .localCheckpoint(true)
-      }
       // the q_pq_topk fit recipe: codebooks from a deterministic quarter
       // sample (once-offline at scale); overFetch 64 (vs q_pq_topk's 32)
       // because this gate binds the WORST query of 20, not one — at
@@ -673,8 +659,8 @@ object AnalyticsQueries {
       val routed = Quantize.pqJoinIndexed(queries, "vec_id", "emb", cb,
           store, "vec_id", "emb", k = 3, overFetch = 64)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      val exact = Await.result(exactF, Duration.Inf)
-      exact.join(broadcast(routed), Seq("query_id", "neighbor_id"), "left")
+      exactTop3PerQuery(corpus, queries)
+        .join(broadcast(routed), Seq("query_id", "neighbor_id"), "left")
         .withColumn("nhit",
           sum(coalesce(col("hit"), lit(0L)))
             .over(Window.partitionBy("query_id")))
@@ -723,22 +709,6 @@ object AnalyticsQueries {
       // 100 TB the fit is a once-offline pass over a sample, never per
       // query) — which is also what keeps this query's bench cost at the
       // encode+search path instead of 8 subspace KMeans fits on everything
-      // exact top-5 baseline: independent of the codebooks, so it
-      // materializes CONCURRENTLY with the driver-blocking subspace fits
-      // (the q_ivfpq_topk Future recipe, guide §2.6); the checkpoint also
-      // stops the two `marked` consumers re-running the corpus scan
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val exactF = Future {
-        corpus.crossJoin(broadcast(q))
-          .withColumn("similarity", vectors.cosineSim(col("emb"), col("qe")))
-          .orderBy(desc("similarity"), col("vec_id"))
-          .limit(5)
-          .select(col("vec_id"), col("label"),
-            expr(text.fixedPoint("similarity", 4)).as("sim_x10k"))
-          .localCheckpoint(true)
-      }
       val cb = Quantize.pqFit(corpus.filter(col("vec_id") % 4 === 1),
         "emb", dim = 64, m = 8, nCentroids = 32, maxIter = 2)
       // overFetch 32: the near-uniform synthetic corpus bunches cosine gaps
@@ -748,8 +718,8 @@ object AnalyticsQueries {
       val approx = Quantize.pqTopK(corpus, "emb", cb, q, k = 5,
           overFetch = 32, tieBreak = Seq("vec_id"))
         .select(col("vec_id"), lit(1L).as("pq_hit"))
-      val exact = Await.result(exactF, Duration.Inf)
-      val marked = exact.join(broadcast(approx), Seq("vec_id"), "left")
+      val marked = exactTop5(corpus, q)
+        .join(broadcast(approx), Seq("vec_id"), "left")
       marked.crossJoin(broadcast(
           marked.agg(coalesce(sum("pq_hit"), lit(0L)).as("nhit"))))
         .select(col("vec_id"), col("label"), col("sim_x10k"),
@@ -787,22 +757,6 @@ object AnalyticsQueries {
           col("embedding").cast("array<double>").as("emb"))
       val q = embeddings(s, dir).filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>").as("qe"))
-      // exact top-5 baseline: independent of the routing fit, so it
-      // materializes CONCURRENTLY with the driver-blocking KMeans fit
-      // (the q_ivfpq_topk Future recipe, guide §2.6); the checkpoint also
-      // stops the two `marked` consumers re-running the corpus scan
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val exactF = Future {
-        corpus.crossJoin(broadcast(q))
-          .withColumn("similarity", vectors.cosineSim(col("emb"), col("qe")))
-          .orderBy(desc("similarity"), col("vec_id"))
-          .limit(5)
-          .select(col("vec_id"), col("label"),
-            expr(text.fixedPoint("similarity", 4)).as("sim_x10k"))
-          .localCheckpoint(true)
-      }
       // routing centroids fit on a deterministic quarter sample — at scale
       // the fit is a once-offline pass (ivfFit doc), never per query
       val model = AnnIndex.ivfFit(
@@ -810,8 +764,8 @@ object AnalyticsQueries {
       val approx = AnnIndex.ivfTopK(model, corpus, "emb", q, "qe",
           k = 5, nProbe = 4, tieBreak = Seq("vec_id"))
         .select(col("vec_id"), lit(1L).as("ivf_hit"))
-      val exact = Await.result(exactF, Duration.Inf)
-      val marked = exact.join(broadcast(approx), Seq("vec_id"), "left")
+      val marked = exactTop5(corpus, q)
+        .join(broadcast(approx), Seq("vec_id"), "left")
       marked.crossJoin(broadcast(
           marked.agg(coalesce(sum("ivf_hit"), lit(0L)).as("nhit"))))
         .select(col("vec_id"), col("label"), col("sim_x10k"),
@@ -918,23 +872,6 @@ object AnalyticsQueries {
           col("embedding").cast("array<double>").as("emb"))
       val q = embeddings(s, dir).filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>").as("qe"))
-      // exact top-5 baseline: depends only on (corpus, q), never on the
-      // fits, so it materializes CONCURRENTLY with the two sequential
-      // driver-blocking KMeans fits below (the q_ivf_join_indexed Future
-      // recipe, guide §2.6); checkpointing the 5-row page also stops the
-      // two `marked` consumers below re-running the corpus scan
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val exactF = Future {
-        corpus.crossJoin(broadcast(q))
-          .withColumn("similarity", vectors.cosineSim(col("emb"), col("qe")))
-          .orderBy(desc("similarity"), col("vec_id"))
-          .limit(5)
-          .select(col("vec_id"), col("label"),
-            expr(text.fixedPoint("similarity", 4)).as("sim_x10k"))
-          .localCheckpoint(true)
-      }
       // routing + residual codebooks fit on the same deterministic quarter
       // sample — both are once-offline passes at scale (ivfFit/pqFit docs)
       val sample = corpus.filter(col("vec_id") % 4 === 1)
@@ -944,8 +881,8 @@ object AnalyticsQueries {
       val approx = Quantize.ivfPqTopK(model, corpus, "emb", cb, q, k = 5,
           nProbe = 4, overFetch = 32, tieBreak = Seq("vec_id"))
         .select(col("vec_id"), lit(1L).as("pq_hit"))
-      val exact = Await.result(exactF, Duration.Inf)
-      val marked = exact.join(broadcast(approx), Seq("vec_id"), "left")
+      val marked = exactTop5(corpus, q)
+        .join(broadcast(approx), Seq("vec_id"), "left")
       marked.crossJoin(broadcast(
           marked.agg(coalesce(sum("pq_hit"), lit(0L)).as("nhit"))))
         .select(col("vec_id"), col("label"), col("sim_x10k"),

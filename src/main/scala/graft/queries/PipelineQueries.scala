@@ -207,15 +207,13 @@ object PipelineQueries {
   }
 
   /** Broadcast fixed-depth (≤3 hop) closure over an undirected (a_id,
-    * b_id) edge set, shared by the recall-audit queries
-    * (q_dedup_cap_recall, q_dedup_lsh_recall): returns every ordered
-    * (s, d) pair connected within 3 hops. The edge side is KB-sized on
-    * the audit fixtures, so every hop join BROADCASTS — no exchange —
-    * and the single distinct at the end bounds the path enumeration
-    * (intermediate distincts would each cost a full AQE-wide exchange
-    * for nothing at this size). */
-  private[queries] def threeHopClosure(pairs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+    * b_id) edge set, the connectivity half of [[recallReport]]: returns
+    * every ordered (s, d) pair connected within 3 hops. The edge side is
+    * KB-sized on the audit fixtures, so every hop join BROADCASTS — no
+    * exchange — and the single distinct at the end bounds the path
+    * enumeration (intermediate distincts would each cost a full AQE-wide
+    * exchange for nothing at this size). */
+  private def threeHopClosure(pairs: DataFrame): DataFrame = {
     val e1 = pairs
       .select(col("a_id").as("s"), col("b_id").as("d"))
       .unionByName(pairs
@@ -227,6 +225,29 @@ object PipelineQueries {
         p2.select(col("s"), col("d").as("__m"))
           .join(be1, "__m").select(col("s"), col("d")))
       .distinct()
+  }
+
+  /** The recall trilogy's one-row report (q_dedup_cap_recall,
+    * q_dedup_lsh_recall, q_embed_cap_recall) over three (a_id, b_id) pair
+    * frames — the uncapped ground truth, the capped face, and the salvage
+    * edges: n_true_pairs, n_capped_pairs, n_salvage_pairs (capped ∪
+    * salvage edges, distinct), n_true_connected_salvaged (true pairs the
+    * salvaged graph connects within 3 hops, [[threeHopClosure]]) and
+    * salvage_full_recall. A lazy plan: the four counts are global
+    * aggregates cross-joined into one row, so building it runs no job. */
+  private[graft] def recallReport(truePairs: DataFrame, capped: DataFrame,
+                                  salvageEdges: DataFrame): DataFrame = {
+    val salvaged = capped.unionByName(salvageEdges).distinct()
+    val connected = truePairs.join(broadcast(threeHopClosure(salvaged)),
+      col("a_id") === col("s") && col("b_id") === col("d"), "left_semi")
+    def n(pairs: DataFrame, name: String) =
+      pairs.agg(count(lit(1)).as(name))
+    n(truePairs, "n_true_pairs")
+      .crossJoin(broadcast(n(capped, "n_capped_pairs")))
+      .crossJoin(broadcast(n(salvaged, "n_salvage_pairs")))
+      .crossJoin(broadcast(n(connected, "n_true_connected_salvaged")))
+      .withColumn("salvage_full_recall",
+        col("n_true_connected_salvaged") === col("n_true_pairs"))
   }
 
   /** Efraimidis-Spirakis key for q_weighted_sample — one shared string so
@@ -1737,7 +1758,6 @@ object PipelineQueries {
              |     WHERE EXISTS (SELECT 1 FROM r3
              |       WHERE r3.s = tp.a_id AND r3.d = tp.b_id))
              |    AS salvage_full_recall""".stripMargin)) { (s, dir) =>
-      import s.implicits._
       import graft.operators.{Dedup, Multimodal}
       val docs = documents(s, dir)
       // the engine never sees the closed forms: monos and edits are real
@@ -1770,47 +1790,20 @@ object PipelineQueries {
       // checkpointed EAGERLY (one short-plan job each over the index
       // leaf; a fused single-job variant raced the unmaterialized
       // intermediates and re-ran the salvage chain — measured ~1.6x
-      // slower in the r8 cached shape), and since r14 the three
-      // index-only legs checkpoint CONCURRENTLY (q_dedup_lsh_recall's
-      // overlap-independent-jobs recipe: each leg reads only the index
-      // leaf, so concurrency cannot change a count — measured 3.59 →
-      // 2.8-3.1 s on the LSH sibling, interleaved REPS=5)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val truePairsF = Future {
-        Dedup.hammingPairsFromIndex(index, maxHamming = 3)
-          .select(col("a_id"), col("b_id")).localCheckpoint(true) }
-      val cappedF = Future {
-        Dedup.hammingPairsFromIndex(index, maxHamming = 3, maxBucket = 64)
-          .select(col("a_id"), col("b_id")).localCheckpoint(true) }
-      val salvageEdgesF = Future {
-        Dedup.hammingSalvageEdges(index, maxHamming = 3, maxBucket = 64,
-          maxReps = 16).select(col("a_id"), col("b_id"))
-          .localCheckpoint(true) }
-      val truePairs = Await.result(truePairsF, Duration.Inf)
-      val capped = Await.result(cappedF, Duration.Inf)
-      val salvaged = capped.unionByName(
-          Await.result(salvageEdgesF, Duration.Inf))
-        .distinct().localCheckpoint(true)
+      // slower in the r8 cached shape)
+      val truePairs = Dedup.hammingPairsFromIndex(index, maxHamming = 3)
+        .select(col("a_id"), col("b_id")).localCheckpoint(true)
+      val capped = Dedup.hammingPairsFromIndex(index, maxHamming = 3,
+          maxBucket = 64)
+        .select(col("a_id"), col("b_id")).localCheckpoint(true)
+      val salvageEdges = Dedup.hammingSalvageEdges(index, maxHamming = 3,
+          maxBucket = 64, maxReps = 16)
+        .select(col("a_id"), col("b_id")).localCheckpoint(true)
       // the EXACT fixed-depth closure (see docstring: <= 3 hops covers
       // every recoverable true pair by construction, so no iterative
-      // propagation belongs in this plan); threeHopClosure broadcasts
-      // every hop — the closure side is KB-sized (<= |V|² = 19 600);
-      // the four scalar counts read checkpointed leaves, concurrent too
-      val countsF = Seq(
-        Future { truePairs.count() },
-        Future { capped.count() },
-        Future { salvaged.count() },
-        Future { truePairs.join(broadcast(threeHopClosure(salvaged)),
-          col("a_id") === col("s") && col("b_id") === col("d"),
-          "left_semi").count() })
-      val Seq(nTrue, nCapped, nSalv, nConn) =
-        Await.result(Future.sequence(countsF), Duration.Inf)
-      Seq((nTrue, nCapped, nSalv, nConn))
-        .toDF("n_true_pairs", "n_capped_pairs", "n_salvage_pairs",
-          "n_true_connected_salvaged")
-        .withColumn("salvage_full_recall", lit(nConn == nTrue))
+      // propagation belongs in this plan); the closure side is KB-sized
+      // (<= |V|² = 19 600)
+      recallReport(truePairs, capped, salvageEdges)
     },
 
     Q("q_dedup_lsh_recall",
@@ -1910,7 +1903,6 @@ object PipelineQueries {
               |     WHERE EXISTS (SELECT 1 FROM r3
               |       WHERE r3.s = tp.a_id AND r3.d = tp.b_id))
               |    AS salvage_full_recall""".stripMargin)) { (s, dir) =>
-      import s.implicits._
       import graft.operators.Dedup
       val boiler = "this software is provided as is without warranty of " +
         "any kind express or implied including fitness for a particular " +
@@ -1931,51 +1923,23 @@ object PipelineQueries {
         k = 16, shingleN = 3).localCheckpoint(true)
       // ground truth: exact Jaccard over ALL pairs (one constant block —
       // affordable on the planted fixture, the join you cannot run at
-      // 100 TB, which is why the recall number matters). The three pair
-      // legs depend only on the signature leaf, so their eager
-      // checkpoints run CONCURRENTLY (r14, the guide's overlap-
-      // independent-jobs rule and pqFit's precedent: Spark schedules
-      // jobs from several threads fine, and each leg's frame depends
-      // only on sigs, so concurrency cannot change a count) — the r13
-      // form ran 4 checkpoint jobs + 4 count jobs strictly in sequence
-      // and was job-launch-bound, not compute-bound.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val truePairsF = Future { Dedup.pairJoin(
+      // 100 TB, which is why the recall number matters); each pair leg
+      // checkpoints eagerly over the signature leaf
+      val truePairs = Dedup.pairJoin(
           sigs.select(col("id"), col("hs"), lit(1).as("blk")), Seq("blk"))
         .filter(size(array_intersect(col("a_hs"), col("b_hs")))
           .cast("double") /
           size(array_union(col("a_hs"), col("b_hs"))) >= 0.6)
-        .select(col("a_id"), col("b_id")).localCheckpoint(true) }
-      val cappedF = Future { Dedup.minhashLshVerifiedPairsFromSignatures(sigs,
+        .select(col("a_id"), col("b_id")).localCheckpoint(true)
+      val capped = Dedup.minhashLshVerifiedPairsFromSignatures(sigs,
           k = 16, bands = 4, threshold = 0.6, maxBucket = 64)
-        .select(col("a_id"), col("b_id")).localCheckpoint(true) }
-      val salvageEdgesF = Future { Dedup.minhashSalvageVerifiedPairs(sigs,
+        .select(col("a_id"), col("b_id")).localCheckpoint(true)
+      val salvageEdges = Dedup.minhashSalvageVerifiedPairs(sigs,
           k = 16, bands = 4, threshold = 0.6, maxBucket = 64, maxReps = 64)
-        .select(col("a_id"), col("b_id")).localCheckpoint(true) }
-      val truePairs = Await.result(truePairsF, Duration.Inf)
-      val capped = Await.result(cappedF, Duration.Inf)
-      val salvaged = capped.unionByName(
-          Await.result(salvageEdgesF, Duration.Inf))
-        .distinct().localCheckpoint(true)
-      // the same broadcast 3-hop closure as q_dedup_cap_recall — here a
-      // MEASURE of the construction's radius, not a theorem; the four
-      // scalar counts read checkpointed leaves and run concurrently too
-      val r3 = threeHopClosure(salvaged)
-      val countsF = Seq(
-        Future { truePairs.count() },
-        Future { capped.count() },
-        Future { salvaged.count() },
-        Future { truePairs.join(broadcast(r3),
-          col("a_id") === col("s") && col("b_id") === col("d"),
-          "left_semi").count() })
-      val Seq(nTrue, nCapped, nSalv, nConn) =
-        Await.result(Future.sequence(countsF), Duration.Inf)
-      Seq((nTrue, nCapped, nSalv, nConn))
-        .toDF("n_true_pairs", "n_capped_pairs", "n_salvage_pairs",
-          "n_true_connected_salvaged")
-        .withColumn("salvage_full_recall", lit(nConn == nTrue))
+        .select(col("a_id"), col("b_id")).localCheckpoint(true)
+      // the same 3-hop closure as q_dedup_cap_recall — here a MEASURE of
+      // the construction's radius, not a theorem
+      recallReport(truePairs, capped, salvageEdges)
     },
 
     Q("q_dedup_apply_salvaged",

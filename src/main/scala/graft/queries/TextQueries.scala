@@ -561,7 +561,6 @@ object TextQueries {
               |     WHERE EXISTS (SELECT 1 FROM r3
               |       WHERE r3.s = tp.a_id AND r3.d = tp.b_id))
               |    AS salvage_full_recall""".stripMargin)) { (s, dir) =>
-      import s.implicits._
       import graft.operators.{AnnIndex, Dedup}
       val e120 = embeddings(s, dir).filter(col("vec_id") < 120)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
@@ -586,45 +585,16 @@ object TextQueries {
         .withColumn("bucket", AnnIndex.bucketExpr("emb", 64, 8))
         .filter(col("vec_id") >= 200000 || col("bucket") =!= floodBucket)
         .localCheckpoint(true)
-      // the three fixture-leaf-only legs checkpoint CONCURRENTLY and the
-      // four scalar counts run concurrently too (r14 — the
-      // q_dedup_lsh_recall overlap-independent-jobs recipe; each leg
-      // reads only the checkpointed fixture, so concurrency cannot
-      // change a count)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val truePairsF = Future {
-        Dedup.embeddingPairs(filtered, "vec_id", "emb",
-            "bucket", threshold = 0.99)
-          .select(col("a_id"), col("b_id")).localCheckpoint(true) }
-      val cappedF = Future {
-        Dedup.embeddingPairs(filtered, "vec_id", "emb",
-            "bucket", threshold = 0.99, maxBucket = 64)
-          .select(col("a_id"), col("b_id")).localCheckpoint(true) }
-      val salvageEdgesF = Future {
-        Dedup.embeddingSalvageEdges(filtered, "vec_id", "emb", "bucket",
-            threshold = 0.99, maxBucket = 64, maxReps = 8)
-          .select(col("a_id"), col("b_id")).localCheckpoint(true) }
-      val truePairs = Await.result(truePairsF, Duration.Inf)
-      val capped = Await.result(cappedF, Duration.Inf)
-      val salvaged = capped.unionByName(
-          Await.result(salvageEdgesF, Duration.Inf))
-        .distinct().localCheckpoint(true)
-      val countsF = Seq(
-        Future { truePairs.count() },
-        Future { capped.count() },
-        Future { salvaged.count() },
-        Future { truePairs.join(
-          broadcast(PipelineQueries.threeHopClosure(salvaged)),
-          col("a_id") === col("s") && col("b_id") === col("d"),
-          "left_semi").count() })
-      val Seq(nTrue, nCapped, nSalv, nConn) =
-        Await.result(Future.sequence(countsF), Duration.Inf)
-      Seq((nTrue, nCapped, nSalv, nConn))
-        .toDF("n_true_pairs", "n_capped_pairs", "n_salvage_pairs",
-          "n_true_connected_salvaged")
-        .withColumn("salvage_full_recall", lit(nConn == nTrue))
+      val truePairs = Dedup.embeddingPairs(filtered, "vec_id", "emb",
+          "bucket", threshold = 0.99)
+        .select(col("a_id"), col("b_id")).localCheckpoint(true)
+      val capped = Dedup.embeddingPairs(filtered, "vec_id", "emb",
+          "bucket", threshold = 0.99, maxBucket = 64)
+        .select(col("a_id"), col("b_id")).localCheckpoint(true)
+      val salvageEdges = Dedup.embeddingSalvageEdges(filtered, "vec_id",
+          "emb", "bucket", threshold = 0.99, maxBucket = 64, maxReps = 8)
+        .select(col("a_id"), col("b_id")).localCheckpoint(true)
+      PipelineQueries.recallReport(truePairs, capped, salvageEdges)
     },
 
     Q("q_lang_id",

@@ -2241,6 +2241,78 @@ class ModulesSpec extends AnyFunSuite {
         s"superseded rounds not released): $leaked")
   }
 
+  test("pqFit: one failed subspace fit fails the call, leaving no job or persisted RDD") {
+    import spark.implicits._
+    import graft.operators.Quantize
+    def live(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = live()
+    // one null element inside subspace 1's slice (elements 8..15) of one
+    // row: that fit cannot vectorize it, subspace 0's slice is clean
+    val corpus = (1 to 64).map(i => (i.toLong, Seq.tabulate(16)(j =>
+        if (i == 7 && j == 12) null
+        else java.lang.Double.valueOf(((i * 31 + j * 7) % 13).toDouble))))
+      .toDF("vec_id", "emb")
+    Quantize.pqFit(corpus.select(slice(col("emb"), 1, 8).as("emb")), "emb",
+      dim = 8, m = 1, nCentroids = 4, maxIter = 2)
+    assert((live() -- before).isEmpty)
+    intercept[Exception] {
+      Quantize.pqFit(corpus, "emb", dim = 16, m = 2, nCentroids = 4,
+        maxIter = 2)
+    }
+    // every sibling fit settled before the throw, and nothing it
+    // persisted (the fit corpus checkpoint, KMeans' own caches) stays
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a sibling subspace fit was still running after pqFit threw")
+    assert((live() -- before).isEmpty,
+      s"failed pqFit leaked persisted RDDs: ${live() -- before}")
+  }
+
+  test("recallReport: one lazy row of in-plan counts; a 4-hop true pair breaks full recall") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.queries.PipelineQueries.recallReport
+    def pairs(ps: (Long, Long)*) = ps.toDF("a_id", "b_id")
+    // jobs started on this thread under a private job group; the
+    // sentinel job marks the end of the build window on the event bus
+    val group = "recall-report-build"
+    val built = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "sentinel")
+            sentinel.countDown()
+          else built.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    // truth 1-2, 1-3, 1-4, 5-6; the salvaged graph (capped 1-2, 5-6 plus
+    // edges 2-3, 3-4 and a duplicate 5-6) is the path 1-2-3-4 and 5-6,
+    // so every true pair is within 3 hops
+    val report = try {
+      sc.setJobGroup(group, "build")
+      val r = recallReport(pairs((1, 2), (1, 3), (1, 4), (5, 6)),
+        pairs((1, 2), (5, 6)), pairs((2, 3), (3, 4), (5, 6)))
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      r
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(built.get == 0, s"building the report started ${built.get} jobs")
+    assert(report.columns.toSeq == Seq("n_true_pairs", "n_capped_pairs",
+      "n_salvage_pairs", "n_true_connected_salvaged", "salvage_full_recall"))
+    assert(report.collect().toSeq == Seq(Row(4L, 2L, 4L, 4L, true)))
+    // path 1-2-3-4-5: the true pair 1-5 is 4 hops out, beyond the closure
+    val far = recallReport(pairs((1, 2), (1, 5)), pairs((1, 2)),
+      pairs((2, 3), (3, 4), (4, 5)))
+    assert(far.collect().toSeq == Seq(Row(2L, 1L, 4L, 1L, false)))
+  }
+
   test("streaming star tier: duplicate redeliveries cannot exhaust the rep slots") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -4192,6 +4264,19 @@ class ModulesSpec extends AnyFunSuite {
         e.limit(2).select(col("emb").as("qe")), "qe",
         dim = 64, k = 5, cells = Seq((4, 0)))
     }
+  }
+
+  test("annTuning: a non-bigint idCol fails loudly, naming the column and its type") {
+    import graft.operators.AnnIndex
+    val e = graft.core.Tables.embeddings(spark, sf)
+      .select(col("vec_id").cast("string").as("sid"),
+        col("embedding").cast("array<double>").as("emb"))
+    val err = intercept[IllegalArgumentException] {
+      AnnIndex.annTuning(e.filter(col("sid") =!= "0"), "emb", "sid",
+        e.filter(col("sid") === "0").select(col("emb").as("qe")), "qe",
+        dim = 64, k = 5, cells = Seq((4, 0)))
+    }
+    assert(err.getMessage.contains("`sid` is string"), err.getMessage)
   }
 
   test("multi-probe wide-store serving: pruned scan, tuning-cell recall parity, indexed batch join") {

@@ -337,11 +337,11 @@ class PlanGuardSpec extends AnyFunSuite {
     }
     assert(cmc.isEmpty,
       s"q_crossmodal_ann_cos: shuffled join planned:\n${cmc.mkString("\n")}")
-    // q_dedup_cap_recall collects its cells eagerly (the tuning-family
-    // shape), so its returned frame is a LocalRelation with no pipeline
-    // to pin here — its operators (hammingPairsFromIndex / SalvageEdges)
-    // carry the shuffle_hash + broadcast-anti shapes pinned above and in
-    // the round-8 test, and ModulesSpec pins salvage semantics.
+    // q_dedup_cap_recall's returned frame is the recall report over
+    // checkpointed pair legs, so its operators (hammingPairsFromIndex /
+    // SalvageEdges) are pinned where they run: the shuffle_hash +
+    // broadcast-anti shapes above and in the round-8 test; ModulesSpec
+    // pins salvage semantics.
   }
 
   test("round-10 queries keep their scale-critical plan shapes") {
@@ -475,7 +475,7 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("minhash salvage tier keeps its scale-critical plan shapes") {
-    // q_dedup_lsh_recall also collects eagerly, so the tier is pinned at
+    // q_dedup_lsh_recall checkpoints its pair legs, so the tier is pinned at
     // the OPERATOR level: the two key gates (oversized buckets, rep-
     // pairable buckets) must broadcast their small-by-construction key
     // sets as semi builds, and the rep pair join must inherit pairJoin's
@@ -503,7 +503,7 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("embedding salvage tier keeps its scale-critical plan shapes") {
-    // q_embed_cap_recall collects eagerly like its trilogy siblings, so
+    // q_embed_cap_recall checkpoints its pair legs like its siblings, so
     // the tier is pinned at the OPERATOR level: the oversized-block
     // census must gate through a broadcast semi (tiny key list — a
     // window THERE would shuffle the whole corpus with its embeddings),
