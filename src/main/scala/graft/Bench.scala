@@ -53,7 +53,12 @@ object Bench {
         .withColumn("rn", row_number().over(w))
         .groupBy("n_regionkey").agg(count(lit(1)), sum(col("rn")))
         .write.mode("overwrite").format("noop").save()
-    } catch { case _: Throwable => }
+    } catch {
+      // a failed warm-up still times the catalog, but leaves its one-time
+      // init inside the first query's seconds — say so on stderr
+      case e: Throwable =>
+        System.err.println(s"[bench] warm-up failed: ${e.getClass.getName}: ${e.getMessage}")
+    }
     // dev-only: SPARK_GRAFT_ONLY=q_a,q_b times just those queries (the
     // driver never sets it, so the published line always covers the full
     // catalog)

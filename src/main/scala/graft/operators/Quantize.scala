@@ -162,8 +162,10 @@ object Quantize {
   // --- Product quantization (PQ) -------------------------------------------
   //
   // The codebook step past int8: split each dim-vector into m subvectors,
-  // k-means each subspace into nCentroids centroids, store one centroid id
-  // (a byte) per subspace — m bytes per vector where int8 stores dim bytes
+  // k-means each subspace into nCentroids centroids (one Lloyd loop fits
+  // all m subspaces together, one Spark pass per iteration — [[pqFit]]),
+  // store one centroid id (a byte) per subspace — m bytes per vector where
+  // int8 stores dim bytes
   // (dim=64, m=4: 64x smaller than float32, 16x smaller than int8). Search
   // uses the asymmetric-distance trick (ADC, Jégou et al., "Product
   // Quantization for Nearest Neighbor Search", TPAMI'11): per query, ONE
@@ -172,75 +174,210 @@ object Quantize {
   // multiplies. Shapes at 100 TB: codebooks are KBs (broadcast), encoding
   // is one projection over the corpus, search scans only the m-byte code
   // column + LUT — the float column is touched just for the final re-rank
-  // page. Like IVF, k-means is engine-specific, so PQ is spec-pinned (ADC
+  // page. Like IVF, the codebook fit is engine-specific (seeded and
+  // deterministic, but not SQL-expressible), so PQ is spec-pinned (ADC
   // consistency + two-stage recall), not DuckDB-oracled.
 
-  /** per-subspace codebooks: (m, nCentroids, dim/m). Fit on a sample at
-    * scale — codebook quality degrades gracefully with sampling, and so
-    * does `maxIter`: on a small-corpus fit the cost is m × maxIter Spark
-    * JOBS of launch overhead, not arithmetic, so a handful of Lloyd
+  /** per-subspace codebooks: (m, nCentroids, dim/m), fit by ONE fused
+    * Lloyd loop over all m subspaces. Fit on a sample at scale — codebook
+    * quality degrades gracefully with sampling, and so does `maxIter`: on
+    * a small-corpus fit the cost is 2 + maxIter Spark JOBS of launch
+    * overhead whatever m is (the fit-corpus checkpoint, the seeding pass,
+    * one pass per iteration), not arithmetic, so a handful of Lloyd
     * iterations is the right trade when the fit runs inline (offline
     * codebook builds can afford the default).
     *
-    * Concurrency policy (the engine's one statement of it): the m
-    * per-subspace fits run as driver `Future`s — the only driver-side
-    * concurrency in the engine. Everywhere else a query or operator
-    * builds in one sequential code path, because overlapping independent
-    * jobs changes no result and was never shown to pay in a whole-catalog
-    * run. These fits stay concurrent because they are most of the
-    * build-time jobs the benchmark exercises (q_pq_topk's m=8 fit: nearly
-    * all of its ~70) and what serializing them would cost is unmeasured.
-    * Failure contract: every fit settles before pqFit returns or throws,
-    * so a failed subspace leaves no sibling job running and no checkpoint
-    * block held; the first failure in subspace order is rethrown. */
+    * - Seeding: subspace `s` draws a pool of the `8 × nCentroids`
+    *   distinct subvectors with the smallest 64-bit hash of (seed + s,
+    *   content) — a seeded uniform sample that no partitioning can
+    *   change — and picks its `nCentroids` starting centers from the
+    *   pool by k-means++ on the driver (k-means||'s recluster step, with
+    *   the pool in place of its sampling rounds: no extra job). On the
+    *   sf0.1 embeddings this lowers the fit's distortion against taking
+    *   the first `nCentroids` of the pool. A subspace with fewer distinct
+    *   subvectors repeats them; a repeat never wins a tie (lowest id), so
+    *   it stays an empty cluster.
+    * - Iteration: every row is assigned in every subspace with
+    *   [[nearest]] — the kernel [[pqEncode]] codes with, so the fit and
+    *   the codes agree on ties — and each partition returns its
+    *   m × nCentroids × (w+1) sums and counts, merged on the driver in
+    *   partition order (deterministic for a given input). An empty
+    *   cluster keeps its center. The loop stops early once no center
+    *   moves more than 1e-4 (Spark KMeans' default tolerance).
+    * - Input contract: null rows are skipped (pqEncode null-guards the
+    *   same rows); a null element, or a row whose length is not `dim`,
+    *   fails with an IllegalArgumentException naming it, before any
+    *   Lloyd pass.
+    *
+    * Concurrency policy (the engine's one statement of it): the engine
+    * runs no driver-side concurrency. A query or operator builds in one
+    * sequential code path, because overlapping independent jobs changes
+    * no result and was never shown to pay in a whole-catalog run. */
   def pqFit(corpus: DataFrame, embCol: String, dim: Int, m: Int,
             nCentroids: Int = 16, seed: Long = 42L,
             maxIter: Int = 10): Array[Array[Array[Double]]] = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
     require(nCentroids <= 256, "codes are stored as one byte per subspace")
     val w = dim / m
-    // null embeddings crash KMeans.fit; pqEncode null-guards the same rows,
-    // so fitting must skip them too (codebooks fit on the non-null corpus)
-    // — eagerly localCheckpoint'd for the duration (r13; was cache+count):
-    // the m per-subspace fits would otherwise re-scan the source
-    // m × iterations times, and each concurrent fit re-optimized the
-    // cached plan's full lineage where the leaf is free to re-plan
+    // eagerly localCheckpoint'd for the duration: the seeding pass and
+    // every Lloyd pass read it, where the source plan would re-run
+    // 1 + maxIter times
     val clean = corpus.filter(col(embCol).isNotNull)
       .select(col(embCol).cast("array<double>").as("__emb"))
       .localCheckpoint(true)
-    // each fit's result depends only on (its subvectors, its seed), so
-    // concurrency cannot change the codebooks (policy: scaladoc above)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fits = (0 until m).map { s => Future {
-      val sub = clean.select(org.apache.spark.ml.functions.array_to_vector(
-        slice(col("__emb"), s * w + 1, w)).as("__features"))
-      new org.apache.spark.ml.clustering.KMeans()
-        .setK(nCentroids).setSeed(seed + s).setMaxIter(maxIter)
-        // seeded random init, not k-means||: the parallel init alone is
-        // ~5 extra distributed rounds PER SUBSPACE, which on an inline
-        // small-sample fit is pure job-launch overhead; quality-critical
-        // offline builds can still pre-cluster their own way and pass
-        // custom codebooks to pqEncode
-        .setInitMode("random")
-        .setFeaturesCol("__features")
-        .fit(sub).clusterCenters.map(_.toArray)
-    } }
     // the codebooks are driver arrays, so nothing references the fit
     // corpus after this returns — release its checkpoint blocks
-    // deterministically (incl. on a failed fit) rather than leaving one
-    // corpus copy pinned per pqFit call until driver GC. Settle EVERY
-    // future before releasing (Future.sequence fails fast on the first
-    // error, but sibling fits may still be mid-job against the checkpoint
-    // blocks — releasing under them turns one clean KMeans failure into a
-    // cascade of confusing block-fetch errors), then rethrow the first
-    // failure in subspace order.
-    import scala.util.Try
-    val settled = Await.result(
-      Future.sequence(fits.map(f => f.transform(Try(_)))), Duration.Inf)
-    Dedup.releaseLocalCheckpoint(clean)
-    settled.map(_.get).toArray
+    // deterministically (incl. on a refused input) rather than leaving
+    // one corpus copy pinned per pqFit call until driver GC
+    val pool = 8 * nCentroids
+    try {
+      import scala.jdk.CollectionConverters._
+      val rows = clean.queryExecution.toRdd
+      // one pass: the input contract, and per subspace the pool's
+      // smallest (hash, content) keys of the partition
+      val seeded = rows.mapPartitions { it =>
+        val heaps =
+          Array.fill(m)(new java.util.TreeSet[(Long, Array[Double])](seedOrder))
+        var problem: Option[String] = None
+        while (problem.isEmpty && it.hasNext) {
+          val a = it.next().getArray(0)
+          if (a.numElements() != dim)
+            problem =
+              Some(s"a row of length ${a.numElements()}, expected dim=$dim")
+          else (0 until dim).find(a.isNullAt).foreach { j =>
+            problem = Some(s"a null element at index $j")
+          }
+          if (problem.isEmpty) {
+            val v = a.toDoubleArray()
+            var s = 0
+            while (s < m) {
+              offerSeed(heaps(s), pool, seed + s, v, s * w, w); s += 1
+            }
+          }
+        }
+        Iterator.single(
+          (problem, heaps.map(_.toArray(Array.empty[(Long, Array[Double])]))))
+      }.collect()
+      seeded.flatMap(_._1).headOption.foreach { p =>
+        throw new IllegalArgumentException(
+          s"pqFit: column '$embCol' has $p — every non-null embedding must " +
+            s"be $dim non-null doubles")
+      }
+      require(seeded.exists(_._2.exists(_.nonEmpty)),
+        s"pqFit: column '$embCol' has no non-null embedding to fit")
+      var cb = Array.tabulate(m) { s =>
+        val merged = new java.util.TreeSet[(Long, Array[Double])](seedOrder)
+        seeded.foreach(_._2(s).foreach(merged.add))
+        plusPlus(merged.iterator.asScala.take(pool).toArray, nCentroids)
+      }
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        val centers = cb
+        val parts = rows.mapPartitions { it =>
+          val sums = new Array[Double](m * nCentroids * w)
+          val counts = new Array[Long](m * nCentroids)
+          it.foreach { r =>
+            val v = r.getArray(0).toDoubleArray()
+            var s = 0
+            while (s < m) {
+              val c = nearest(centers(s), v, s * w) & 0xff
+              val base = (s * nCentroids + c) * w
+              var j = 0
+              while (j < w) { sums(base + j) += v(s * w + j); j += 1 }
+              counts(s * nCentroids + c) += 1
+              s += 1
+            }
+          }
+          Iterator.single((sums, counts))
+        }.collect()
+        val sums = new Array[Double](m * nCentroids * w)
+        val counts = new Array[Long](m * nCentroids)
+        parts.foreach { case (ps, pc) =>
+          var i = 0
+          while (i < sums.length) { sums(i) += ps(i); i += 1 }
+          i = 0
+          while (i < counts.length) { counts(i) += pc(i); i += 1 }
+        }
+        var maxMove2 = 0.0
+        cb = Array.tabulate(m, nCentroids) { (s, c) =>
+          val n = counts(s * nCentroids + c)
+          if (n == 0L) centers(s)(c)
+          else {
+            val base = (s * nCentroids + c) * w
+            val nc = Array.tabulate(w)(j => sums(base + j) / n)
+            var d2 = 0.0; var j = 0
+            while (j < w) {
+              val t = nc(j) - centers(s)(c)(j); d2 += t * t; j += 1
+            }
+            maxMove2 = math.max(maxMove2, d2)
+            nc
+          }
+        }
+        converged = maxMove2 <= 1e-4 * 1e-4
+        iter += 1
+      }
+      cb
+    } finally Dedup.releaseLocalCheckpoint(clean)
+  }
+
+  /** pqFit's seed order: (hash, content) — total, so the pool of the
+    * smallest distinct subvectors is one set however rows partition */
+  private val seedOrder: Ordering[(Long, Array[Double])] = (a, b) => {
+    val h = java.lang.Long.compare(a._1, b._1)
+    if (h != 0) h else java.util.Arrays.compare(a._2, b._2)
+  }
+
+  /** k-means++ over a uniform candidate pool (ascending hash): the first
+    * candidate, then each next center drawn with probability ∝ D² (the
+    * squared distance to the nearest center picked so far) by an
+    * exponential race on per-round hashes, so the draw is deterministic.
+    * Fewer distinct candidates than k: the picks repeat. */
+  private def plusPlus(pool: Array[(Long, Array[Double])],
+                       k: Int): Array[Array[Double]] = {
+    def d2(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0; var j = 0
+      while (j < a.length) { val t = a(j) - b(j); acc += t * t; j += 1 }
+      acc
+    }
+    val picked = scala.collection.mutable.ArrayBuffer(pool(0)._2)
+    val near = pool.map(p => d2(p._2, pool(0)._2))
+    while (picked.length < k && near.exists(_ > 0.0)) {
+      val r = picked.length
+      val next = pool.indices.filter(near(_) > 0.0).maxBy { i =>
+        val u = ((mix64(pool(i)._1 + r) >>> 11) + 1) * math.pow(2, -53)
+        near(i) / -math.log(u)
+      }
+      picked += pool(next)._2
+      pool.indices.foreach { i =>
+        near(i) = math.min(near(i), d2(pool(i)._2, pool(next)._2))
+      }
+    }
+    Array.tabulate(k)(c => picked(c % picked.length))
+  }
+
+  private def mix64(x: Long): Long = {
+    var z = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
+  /** offer v[off, off+w) to a bounded seed set (distinct by content;
+    * -0.0 folds into 0.0 so equal subvectors hash equal) */
+  private def offerSeed(heap: java.util.TreeSet[(Long, Array[Double])],
+                        cap: Int, salt: Long, v: Array[Double],
+                        off: Int, w: Int): Unit = {
+    var h = mix64(salt)
+    var j = 0
+    while (j < w) {
+      h = mix64((h + 0x9e3779b97f4a7c15L) ^
+        java.lang.Double.doubleToLongBits(v(off + j) + 0.0))
+      j += 1
+    }
+    if (heap.size < cap || h <= heap.last._1) {
+      heap.add((h, Array.tabulate(w)(i => v(off + i) + 0.0)))
+      if (heap.size > cap) heap.pollLast()
+    }
   }
 
   /** nearest-centroid id for one subvector (ties → lowest id; exact

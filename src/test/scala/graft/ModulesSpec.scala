@@ -40,6 +40,37 @@ class ModulesSpec extends AnyFunSuite {
   private def parquetFiles(d: String): Long =
     graft.sources.Maintenance.parquetFileCount(d)
 
+  /** `body`'s result and the Spark jobs it started on this thread, counted
+    * under a private job group; a sentinel job marks the end of the
+    * window on the event bus. */
+  private def jobsStartedBy[T](group: String)(body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "sentinel")
+            sentinel.countDown()
+          else started.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val r = body
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (r, started.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   val refCsv =
     "/root/reference/backend/datasets/Behavioral_Health_Services_San_Diego_County_1657686067853346365.csv"
   val refJson = "/root/reference/backend/datasets/healthcare_resources.json"
@@ -2247,7 +2278,7 @@ class ModulesSpec extends AnyFunSuite {
     def live(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val before = live()
     // one null element inside subspace 1's slice (elements 8..15) of one
-    // row: that fit cannot vectorize it, subspace 0's slice is clean
+    // row: the fit refuses that row, subspace 0's slice alone is clean
     val corpus = (1 to 64).map(i => (i.toLong, Seq.tabulate(16)(j =>
         if (i == 7 && j == 12) null
         else java.lang.Double.valueOf(((i * 31 + j * 7) % 13).toDouble))))
@@ -2255,55 +2286,102 @@ class ModulesSpec extends AnyFunSuite {
     Quantize.pqFit(corpus.select(slice(col("emb"), 1, 8).as("emb")), "emb",
       dim = 8, m = 1, nCentroids = 4, maxIter = 2)
     assert((live() -- before).isEmpty)
-    intercept[Exception] {
+    val e = intercept[Exception] {
       Quantize.pqFit(corpus, "emb", dim = 16, m = 2, nCentroids = 4,
         maxIter = 2)
     }
-    // every sibling fit settled before the throw, and nothing it
-    // persisted (the fit corpus checkpoint, KMeans' own caches) stays
+    assert(e.isInstanceOf[IllegalArgumentException] &&
+      e.getMessage.contains("null element at index 12"), e.getMessage)
+    // the refused input ran no Lloyd pass and left no job behind, and
+    // the fit corpus checkpoint was released on the failure path
     assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
-      "a sibling subspace fit was still running after pqFit threw")
+      "a fit job was still running after pqFit threw")
     assert((live() -- before).isEmpty,
       s"failed pqFit leaked persisted RDDs: ${live() -- before}")
   }
 
+  test("pqFit: one fused Lloyd loop starts at most 2 + maxIter jobs at any m") {
+    import spark.implicits._
+    import graft.operators.Quantize
+    val corpus = (1 to 96).map(i => (i.toLong, Seq.tabulate(16)(j =>
+        ((i * 31 + j * 7) % 13).toDouble))).toDF("vec_id", "emb")
+    def fitJobs(m: Int, maxIter: Int): Int =
+      jobsStartedBy(s"pq-fit-jobs-$m") {
+        Quantize.pqFit(corpus, "emb", dim = 16, m = m, nCentroids = 8,
+          maxIter = maxIter)
+      }._2
+    // checkpoint + seeding + one pass per iteration, whatever m is
+    val at2 = fitJobs(m = 2, maxIter = 5)
+    val at8 = fitJobs(m = 8, maxIter = 5)
+    assert(at2 >= 3 && at2 <= 7, s"m=2 fit started $at2 jobs")
+    assert(at8 >= 3 && at8 <= 7, s"m=8 fit started $at8 jobs")
+  }
+
+  test("pqFit: deterministic codebooks; seeding does not depend on partitioning") {
+    import spark.implicits._
+    import graft.operators.Quantize
+    val corpus = (1 to 200).map(i => (i.toLong, Seq.tabulate(16)(j =>
+        math.sin(i * 0.37 + j * 1.3)))).toDF("vec_id", "emb")
+    def fp(df: org.apache.spark.sql.DataFrame, maxIter: Int) =
+      Quantize.cbFingerprint(Quantize.pqFit(df, "emb", dim = 16, m = 4,
+        nCentroids = 8, maxIter = maxIter))
+    assert(fp(corpus, 10) == fp(corpus, 10), "two fits of one input differ")
+    // maxIter = 0 returns the seeds: the same set on 1 partition, or on
+    // 4 hash partitions whose row order varies from run to run
+    val seeds = fp(corpus, 0)
+    assert(fp(corpus.coalesce(1), 0) == seeds &&
+      fp(corpus.repartition(4, col("vec_id")), 0) == seeds,
+      "the seeded centroids changed with the partitioning")
+  }
+
+  test("pqFit: codebooks are the exact cloud means; row length is checked") {
+    import spark.implicits._
+    import graft.operators.Quantize
+    // subspace 0 holds clouds around (0, 0) and (100, 100), subspace 1
+    // around (-50, 7) and (30, -40), drawn independently; offsets are
+    // quarters, so every sum and every 32-point mean is exact in doubles
+    val c0 = Seq(Seq(0.0, 0.0), Seq(100.0, 100.0))
+    val c1 = Seq(Seq(-50.0, 7.0), Seq(30.0, -40.0))
+    val rows = (0 until 64).map { i =>
+      val off = Seq((i % 4) * 0.25, ((i / 4) % 4) * 0.25)
+      (i.toLong, (c0(i % 2).zip(off).map(t => t._1 + t._2) ++
+        c1((i / 2) % 2).zip(off.reverse).map(t => t._1 + t._2)))
+    }
+    val corpus = rows.toDF("vec_id", "emb")
+    val cb = Quantize.pqFit(corpus, "emb", dim = 4, m = 2, nCentroids = 2,
+      maxIter = 10)
+    def means(s: Int, cloud: Int => Int): Set[Seq[Double]] =
+      rows.groupBy(r => cloud(r._1.toInt)).values.map { g =>
+        Seq(0, 1).map(j => g.map(_._2(s * 2 + j)).sum / g.size)
+      }.toSet
+    val want = Seq(means(0, _ % 2), means(1, i => (i / 2) % 2))
+    (0 until 2).foreach { s =>
+      want(s).foreach { mu =>
+        assert(cb(s).exists(c => c.indices.forall(j =>
+          math.abs(c(j) - mu(j)) <= 1e-12)),
+          s"subspace $s: no centroid at the cloud mean $mu: " +
+            cb(s).map(_.toSeq).toSeq)
+      }
+    }
+    val e = intercept[IllegalArgumentException] {
+      Quantize.pqFit(corpus, "emb", dim = 8, m = 2, nCentroids = 2)
+    }
+    assert(e.getMessage.contains("a row of length 4, expected dim=8"),
+      e.getMessage)
+  }
+
   test("recallReport: one lazy row of in-plan counts; a 4-hop true pair breaks full recall") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.queries.PipelineQueries.recallReport
     def pairs(ps: (Long, Long)*) = ps.toDF("a_id", "b_id")
-    // jobs started on this thread under a private job group; the
-    // sentinel job marks the end of the build window on the event bus
-    val group = "recall-report-build"
-    val built = new java.util.concurrent.atomic.AtomicInteger
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "sentinel")
-            sentinel.countDown()
-          else built.incrementAndGet()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
     // truth 1-2, 1-3, 1-4, 5-6; the salvaged graph (capped 1-2, 5-6 plus
     // edges 2-3, 3-4 and a duplicate 5-6) is the path 1-2-3-4 and 5-6,
     // so every true pair is within 3 hops
-    val report = try {
-      sc.setJobGroup(group, "build")
-      val r = recallReport(pairs((1, 2), (1, 3), (1, 4), (5, 6)),
+    val (report, built) = jobsStartedBy("recall-report-build") {
+      recallReport(pairs((1, 2), (1, 3), (1, 4), (5, 6)),
         pairs((1, 2), (5, 6)), pairs((2, 3), (3, 4), (5, 6)))
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      r
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
-    assert(built.get == 0, s"building the report started ${built.get} jobs")
+    assert(built == 0, s"building the report started $built jobs")
     assert(report.columns.toSeq == Seq("n_true_pairs", "n_capped_pairs",
       "n_salvage_pairs", "n_true_connected_salvaged", "salvage_full_recall"))
     assert(report.collect().toSeq == Seq(Row(4L, 2L, 4L, 4L, true)))
