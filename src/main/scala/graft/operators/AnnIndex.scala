@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{text, vectors}
 
+/** IVF routing centroids ([[AnnIndex.ivfFit]]), indexed by `list_id`. */
+final case class IvfModel(centers: Array[Array[Double]])
+
 /** Approximate nearest-neighbor search over an embedding column.
   *
   * The reference's vector index is pgvector HNSW
@@ -828,37 +831,45 @@ object AnnIndex {
 
   /** Fit the routing centroids. At scale, fit on `corpus.sample(...)` —
     * centroid quality degrades gracefully with sampling, recall does not
-    * depend on seeing every row at training time. */
+    * depend on seeing every row at training time. Spark ML's KMeans
+    * (k-means||, 10 iterations at most): 11 fixed jobs plus one per
+    * iteration. pqFit's Lloyd loop (2 + 10 jobs, lower distortion) lost
+    * the q_ivf_topk, q_ivf_tuning and q_ivfpq_topk recall gates at seed
+    * 42 at sf0.1, so this fit stays. Null rows are skipped; a null
+    * element or a length mismatch fails the fit (a SparkException). Fit,
+    * [[ivfAssign]] ([[Quantize.nearest]]) and the probes ([[routeDist2]],
+    * then `list_id`) all break ties to the lowest list id. */
   def ivfFit(corpus: DataFrame, embCol: String, nLists: Int,
-             seed: Long = 42L): org.apache.spark.ml.clustering.KMeansModel =
-    new org.apache.spark.ml.clustering.KMeans()
+             seed: Long = 42L): IvfModel =
+    IvfModel(new org.apache.spark.ml.clustering.KMeans()
       .setK(nLists).setSeed(seed).setMaxIter(10).setFeaturesCol("__features")
-      .fit(corpus.select(org.apache.spark.ml.functions.array_to_vector(
-        col(embCol).cast("array<double>")).as("__features")))
+      .fit(corpus.filter(col(embCol).isNotNull)
+        .select(org.apache.spark.ml.functions.array_to_vector(
+          col(embCol).cast("array<double>")).as("__features")))
+      .clusterCenters.map(_.toArray))
 
-  /** Corpus with its inverted-list assignment — persist partitioned by
-    * `list_id` as the index build. */
-  def ivfAssign(model: org.apache.spark.ml.clustering.KMeansModel,
-                df: DataFrame, embCol: String): DataFrame =
-    // NULL (or null-element) embeddings cannot be routed: they reach
-    // KMeansModel's prediction udf as a null/partial Vector and kill the
-    // job with a bare executor NPE — the dirty-row class every bucket
-    // face maps to "never joins" instead. Dropping them here gives the
-    // whole IVF family (store build, refresh, residual encode, serving)
-    // one consistent verdict: an unroutable row is not in the index.
-    model.transform(df
-        .filter(col(embCol).isNotNull &&
-          !exists(col(embCol), x => x.isNull))
-        .withColumn("__features",
-          org.apache.spark.ml.functions.array_to_vector(col(embCol).cast("array<double>"))))
-      .withColumnRenamed(model.getPredictionCol, "list_id")
-      .drop("__features")
+  /** Corpus with its inverted-list assignment (`list_id`, the nearest
+    * center by [[Quantize.nearest]]) — persist partitioned by `list_id`
+    * as the index build. */
+  def ivfAssign(model: IvfModel, df: DataFrame, embCol: String): DataFrame = {
+    val centers = model.centers
+    val dim = centers(0).length
+    val route = udf { (emb: Array[Double]) =>
+      require(emb.length == dim, s"ivfAssign: embedding dim ${emb.length} " +
+        s"does not match the centroids' dim $dim")
+      Quantize.nearest(centers, emb, 0)
+    }
+    // NULL (or null-element) embeddings cannot be routed: dropping them
+    // gives the whole IVF family (store build, refresh, residual encode,
+    // serving) one verdict — an unroutable row is not in the index.
+    df.filter(col(embCol).isNotNull && !exists(col(embCol), x => x.isNull))
+      .withColumn("list_id", route(col(embCol).cast("array<double>")))
+  }
 
   /** Deterministic fingerprint of the routing centroids ([[Quantize.cbFingerprint]]
     * over the center matrix): the IVF store's freshness token. */
-  private[graft] def ivfModelSig(
-      model: org.apache.spark.ml.clustering.KMeansModel): Long =
-    Quantize.cbFingerprint(Array(model.clusterCenters.map(_.toArray)))
+  private[graft] def ivfModelSig(model: IvfModel): Long =
+    Quantize.cbFingerprint(Array(model.centers))
 
   /** The PERSISTABLE IVF store: [[ivfAssign]] output + `ivf_sig`, the
     * routing-fit fingerprint stamped per row — write partitioned by
@@ -866,8 +877,7 @@ object AnnIndex {
     * a checkable contract: [[ivfRefresh]] refuses a store built under a
     * different fit, the same loud-failure stance as the int8 `q_sig` and
     * PQ `pq_cb_sig` tokens. */
-  def ivfStore(model: org.apache.spark.ml.clustering.KMeansModel,
-               df: DataFrame, embCol: String): DataFrame = {
+  def ivfStore(model: IvfModel, df: DataFrame, embCol: String): DataFrame = {
     require(!df.columns.contains("ivf_sig"),
       "ivfStore would overwrite an existing ivf_sig column")
     ivfAssign(model, df, embCol).withColumn("ivf_sig", lit(ivfModelSig(model)))
@@ -893,7 +903,7 @@ object AnnIndex {
     * maintenance-time, one column, stats-pruned — never on the search
     * path. */
   def ivfRefresh(spark: org.apache.spark.sql.SparkSession,
-                 model: org.apache.spark.ml.clustering.KMeansModel,
+                 model: IvfModel,
                  storeDir: String, newBatch: DataFrame, embCol: String): Unit = {
     val store = spark.read.parquet(storeDir)
     requireBatchStore(store, s"ivfRefresh($storeDir)")
@@ -912,8 +922,7 @@ object AnnIndex {
     * [[ivfStoreIngestBatch]] micro-batches
     * ([[graft.operators.Dedup.seedEmbedIngestStore]]'s contract on the
     * serving-store family). */
-  def seedIvfIngestStore(model: org.apache.spark.ml.clustering.KMeansModel,
-                         corpus: DataFrame, embCol: String,
+  def seedIvfIngestStore(model: IvfModel, corpus: DataFrame, embCol: String,
                          storeDir: String): Unit =
     ivfStore(model, corpus, embCol)
       .withColumn("ingest_batch", lit(-1L))
@@ -935,7 +944,7 @@ object AnnIndex {
     * [[graft.sources.Maintenance.compactPartitionedTo]]
     * `dropCols = Seq("ingest_batch")` graduation). */
   def ivfStoreIngestBatch(spark: org.apache.spark.sql.SparkSession,
-                          model: org.apache.spark.ml.clustering.KMeansModel,
+                          model: IvfModel,
                           storeDir: String, batchId: Long,
                           batch: DataFrame, embCol: String): Unit =
     Dedup.storeIngestBatch(spark, storeDir, batchId,
@@ -954,17 +963,35 @@ object AnnIndex {
     * ranking — a query TABLE goes through [[ivfJoinIndexed]] (r12), which
     * serves every query in one plan with per-query windows and refuses
     * duplicate ids loudly. */
-  def ivfTopK(model: org.apache.spark.ml.clustering.KMeansModel,
-              corpus: DataFrame, embCol: String,
+  def ivfTopK(model: IvfModel, corpus: DataFrame, embCol: String,
               query: DataFrame, queryCol: String,
               k: Int, nProbe: Int, tieBreak: Seq[String] = Nil): DataFrame =
     ivfTopKAssigned(model, ivfAssign(model, corpus, embCol), embCol,
       query, queryCol, k, nProbe, tieBreak)
 
-  /** [[ivfTopK]] over a PRE-ASSIGNED corpus (the persisted index build —
-    * [[ivfAssign]] output stored partitioned by `list_id`): only the query
-    * routes through the centroids at search time, and the list join prunes
-    * partitions instead of re-running assignment over the whole corpus. */
+  /** The nLists × dim centroid table as a broadcastable frame — the one
+    * builder for [[probeLists]], [[ivfJoinIndexed]], the IVFPQ faces and
+    * the catalog's own routing pages, so the routing geometry lives
+    * exactly once (the [[probeSetExpr]]/[[probeSetSqlDuck]]
+    * adjacent-bodies discipline: a routing change edits one builder,
+    * not N inlined copies that silently drift apart). */
+  private[graft] def centroidFrame(spark: org.apache.spark.sql.SparkSession,
+                                   model: IvfModel): DataFrame = {
+    import spark.implicits._
+    model.centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("list_id", "centroid")
+  }
+
+  /** Squared euclidean query→centroid distance via the staged-dot
+    * identity — the ONE routing score the single-query [[probeLists]],
+    * the batch [[ivfJoinIndexed]] and the IVFPQ probe page rank by (always
+    * tie-broken by `list_id`, so probe sets are nested deterministic
+    * prefixes on both faces and batch serving can never drift from the
+    * single-query routing or the [[ivfTuning]] measurement). */
+  private[graft] def routeDist2(qe: Column, centroid: Column): Column =
+    vectors.dot(qe, qe) - lit(2.0) * vectors.dot(qe, centroid) +
+      vectors.dot(centroid, centroid)
+
   /** The `nProbe` nearest inverted lists to the query, by centroid
     * distance — the routing stage shared by [[ivfTopKAssigned]] and
     * [[ivfTuning]]. Squared euclidean via the staged-dot identity;
@@ -972,32 +999,7 @@ object AnnIndex {
     * TakeOrderedAndProject. Deterministic total order (dist2, list_id),
     * so probe sets are NESTED prefixes across nProbe values — the
     * property [[ivfTuning]]'s monotonicity checks rest on. */
-  /** The nLists × dim centroid table as a broadcastable frame — shared
-    * by [[probeLists]] and [[ivfJoinIndexed]] so the routing geometry
-    * lives exactly once (the [[probeSetExpr]]/[[probeSetSqlDuck]]
-    * adjacent-bodies discipline: a routing change edits one builder,
-    * not N inlined copies that silently drift apart). */
-  private def centroidFrame(spark: org.apache.spark.sql.SparkSession,
-                            model: org.apache.spark.ml.clustering.KMeansModel)
-      : DataFrame = {
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-  }
-
-  /** Squared euclidean query→centroid distance via the staged-dot
-    * identity — the ONE routing score both the single-query
-    * [[probeLists]] and the batch [[ivfJoinIndexed]] rank by (always
-    * tie-broken by `list_id`, so probe sets are nested deterministic
-    * prefixes on both faces and batch serving can never drift from the
-    * single-query routing or the [[ivfTuning]] measurement). */
-  private def routeDist2(qe: Column, centroid: Column): Column =
-    vectors.dot(qe, qe) - lit(2.0) * vectors.dot(qe, centroid) +
-      vectors.dot(centroid, centroid)
-
-  private def probeLists(model: org.apache.spark.ml.clustering.KMeansModel,
-                         query: DataFrame, queryCol: String,
+  private def probeLists(model: IvfModel, query: DataFrame, queryCol: String,
                          nProbe: Int): DataFrame = {
     val spark = query.sparkSession
     query.select(col(queryCol).cast("array<double>").as("__q"))
@@ -1008,8 +1010,11 @@ object AnnIndex {
       .select(col("list_id"))
   }
 
-  def ivfTopKAssigned(model: org.apache.spark.ml.clustering.KMeansModel,
-                      assigned: DataFrame, embCol: String,
+  /** [[ivfTopK]] over a PRE-ASSIGNED corpus (the persisted index build —
+    * [[ivfAssign]] output stored partitioned by `list_id`): only the query
+    * routes through the centroids at search time, and the list join prunes
+    * partitions instead of re-running assignment over the whole corpus. */
+  def ivfTopKAssigned(model: IvfModel, assigned: DataFrame, embCol: String,
                       query: DataFrame, queryCol: String,
                       k: Int, nProbe: Int,
                       tieBreak: Seq[String] = Nil): DataFrame = {
@@ -1083,7 +1088,7 @@ object AnnIndex {
     * amortized over the whole batch is noise — the [[annJoinIndexed]]
     * stance. */
   def ivfJoinIndexed(queries: DataFrame, qIdCol: String, qEmbCol: String,
-                     model: org.apache.spark.ml.clustering.KMeansModel,
+                     model: IvfModel,
                      store: DataFrame, idCol: String, embCol: String,
                      k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1130,7 +1135,7 @@ object AnnIndex {
     * properties q_ivf_tuning's oracle pins. Scale shape: each dial is
     * one probed partition-pruned scan + a k-row broadcast intersection;
     * the exact top-k baseline is computed once. */
-  def ivfTuning(model: org.apache.spark.ml.clustering.KMeansModel,
+  def ivfTuning(model: IvfModel,
                 assigned: DataFrame, embCol: String, idCol: String,
                 query: DataFrame, queryCol: String,
                 k: Int, nProbes: Seq[Int]): DataFrame = {

@@ -281,7 +281,7 @@ object Quantize {
             val v = r.getArray(0).toDoubleArray()
             var s = 0
             while (s < m) {
-              val c = nearest(centers(s), v, s * w) & 0xff
+              val c = nearest(centers(s), v, s * w)
               val base = (s * nCentroids + c) * w
               var j = 0
               while (j < w) { sums(base + j) += v(s * w + j); j += 1 }
@@ -381,9 +381,11 @@ object Quantize {
   }
 
   /** nearest-centroid id for one subvector (ties → lowest id; exact
-    * doubles, so assignment replays identically anywhere) */
-  private def nearest(cb: Array[Array[Double]], v: Array[Double],
-                      off: Int): Byte = {
+    * doubles, so assignment replays identically anywhere) — the one
+    * assignment kernel of [[pqFit]], [[pqEncode]] (which narrows it to a
+    * byte) and [[AnnIndex.ivfAssign]] (IVF lists are not limited to 256) */
+  private[graft] def nearest(cb: Array[Array[Double]], v: Array[Double],
+                             off: Int): Int = {
     var best = 0; var bestD = Double.MaxValue
     var c = 0
     while (c < cb.length) {
@@ -394,7 +396,7 @@ object Quantize {
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
-    best.toByte
+    best
   }
 
   /** corpus + `pq_codes` (BINARY, m bytes) + `pq_norm` (the vector's true
@@ -469,7 +471,8 @@ object Quantize {
           s"pqEncode: embedding dim ${emb.length} does not match the " +
             s"codebooks' m*w = $fullDim — these codebooks were fit for a " +
             "different column or dim")
-        codebooks.indices.map(s => nearest(codebooks(s), emb, s * w)).toArray
+        codebooks.indices.map(s => nearest(codebooks(s), emb, s * w).toByte)
+          .toArray
       }
     }
     df.withColumn("pq_codes", enc(col(embCol).cast("array<double>")))
@@ -777,11 +780,11 @@ object Quantize {
     * are much smaller than raw-vector magnitudes at the same code budget.
     * The centroid table is driver-side (nLists × dim, tiny) and closes
     * over the kernel; the corpus never shuffles. */
-  def ivfResiduals(model: org.apache.spark.ml.clustering.KMeansModel,
+  def ivfResiduals(model: IvfModel,
                    df: DataFrame, embCol: String): DataFrame = {
     require(!df.columns.contains("__res"),
       "ivfResiduals would overwrite an existing __res column")
-    val centers = model.clusterCenters.map(_.toArray)
+    val centers = model.centers
     val resUdf = udf { (emb: Array[Double], list: Int) =>
       if (emb == null) null
       else {
@@ -799,6 +802,25 @@ object Quantize {
         resUdf(col(embCol).cast("array<double>"), col("list_id")))
   }
 
+  /** The IVFPQ probe page — the `n` nearest lists by centroid distance,
+    * each carrying q·centroid, the residual ADC LUT (list-independent:
+    * LUTs are linear in q), the query norm, and the query itself for
+    * the exact re-rank. ONE builder shared by [[ivfPqTopK]] (n = nProbe)
+    * and [[ivfPqTuning]] (n = nLists), so the sweep provably measures
+    * the serving layout; lists rank by [[AnnIndex.routeDist2]], the IVF
+    * faces' one routing score, ties to the lowest `list_id`. */
+  private def probePage(q: DataFrame, cents: DataFrame,
+                        codebooks: Array[Array[Array[Double]]],
+                        n: Int): DataFrame =
+    q.crossJoin(broadcast(cents))
+      .withColumn("dist2", AnnIndex.routeDist2(col("qe"), col("centroid")))
+      .orderBy(col("dist2"), col("list_id"))
+      .limit(n)
+      .select(col("list_id"),
+        vectors.dot(col("qe"), col("centroid")).as("__qdotc"),
+        lutUdfFor(codebooks)(col("qe")).as("__lut"),
+        vectors.l2Norm(col("qe")).as("__qn"), col("qe"))
+
   /** IVFPQ search — the two ANN layouts composed the way FAISS ships
     * them: IVF routes the query to `nProbe` lists (a partition-pruned
     * scan of the persisted index at scale), PQ's ADC ranks only the
@@ -812,39 +834,7 @@ object Quantize {
     * residual shows up as recall collapse, which is why the catalog query
     * carries a recall bound. `nProbe = nLists` + a corpus-sized overFetch
     * degenerates to exact brute force (asserted in ModulesSpec). */
-  /** The nLists × dim centroid table as a broadcastable frame — one
-    * builder for [[ivfPqTopK]] and [[ivfPqTuning]]. */
-  private def centroidFrame(spark: org.apache.spark.sql.SparkSession,
-      model: org.apache.spark.ml.clustering.KMeansModel): DataFrame = {
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-  }
-
-  /** The IVFPQ probe page — the `n` nearest lists by centroid distance,
-    * each carrying q·centroid, the residual ADC LUT (list-independent:
-    * LUTs are linear in q), the query norm, and the query itself for
-    * the exact re-rank. ONE builder shared by [[ivfPqTopK]] (n = nProbe)
-    * and [[ivfPqTuning]] (n = nLists), so the sweep provably measures
-    * the serving layout — two hand-maintained copies of the dist2
-    * ranking could silently diverge. */
-  private def probePage(q: DataFrame, cents: DataFrame,
-                        codebooks: Array[Array[Array[Double]]],
-                        n: Int): DataFrame =
-    q.crossJoin(broadcast(cents))
-      .withColumn("dist2",
-        vectors.dot(col("qe"), col("qe"))
-          - lit(2.0) * vectors.dot(col("qe"), col("centroid"))
-          + vectors.dot(col("centroid"), col("centroid")))
-      .orderBy(col("dist2"), col("list_id"))
-      .limit(n)
-      .select(col("list_id"),
-        vectors.dot(col("qe"), col("centroid")).as("__qdotc"),
-        lutUdfFor(codebooks)(col("qe")).as("__lut"),
-        vectors.l2Norm(col("qe")).as("__qn"), col("qe"))
-
-  def ivfPqTopK(model: org.apache.spark.ml.clustering.KMeansModel,
+  def ivfPqTopK(model: IvfModel,
                 corpus: DataFrame, embCol: String,
                 codebooks: Array[Array[Array[Double]]],
                 query: DataFrame, k: Int, nProbe: Int, overFetch: Int = 4,
@@ -868,7 +858,7 @@ object Quantize {
         "the raw embedding column here")
     val coded = pqEncode(ivfResiduals(model, corpus, embCol), "__res", codebooks)
       .withColumn("__en", vectors.l2Norm(col(embCol).cast("array<double>")))
-    val cents = centroidFrame(corpus.sparkSession, model)
+    val cents = AnnIndex.centroidFrame(corpus.sparkSession, model)
     // the probe page: nProbe nearest lists (shared builder, so the
     // tuning sweep measures EXACTLY the serving layout)
     val qLocal = oneQueryRow(query, "ivfPqTopK")
@@ -910,7 +900,7 @@ object Quantize {
     * brute force and n_hits = k regardless of m. Across DIFFERENT m no
     * theorem holds (more bytes usually help, nothing guarantees it) —
     * that column is measurement, asserted in ModulesSpec. */
-  def ivfPqTuning(model: org.apache.spark.ml.clustering.KMeansModel,
+  def ivfPqTuning(model: IvfModel,
                   corpus: DataFrame, embCol: String, idCol: String,
                   fitSample: DataFrame, query: DataFrame,
                   k: Int, dim: Int, ms: Seq[Int], overFetches: Seq[Int],
@@ -948,8 +938,8 @@ object Quantize {
       .select(col(idCol))
       .localCheckpoint()
     val nCorpus = corpus.agg(count(lit(1)).as("n_corpus"))
-    val nLists = model.clusterCenters.length
-    val cents = centroidFrame(spark, model)
+    val nLists = model.centers.length
+    val cents = AnnIndex.centroidFrame(spark, model)
     val resid = ivfResiduals(model, corpus, embCol)
       .withColumn("__en", vectors.l2Norm(col(embCol).cast("array<double>")))
       .localCheckpoint(true)

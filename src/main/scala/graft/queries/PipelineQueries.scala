@@ -2171,7 +2171,6 @@ object PipelineQueries {
               |  TRUE AS recall_ok
               |FROM r WHERE rnk <= 3
               |ORDER BY doc_id, rnk""".stripMargin)) { (s, dir) =>
-      import s.implicits._
       import graft.operators.{AnnIndex, Multimodal}
       val caps = documents(s, dir).filter(col("doc_id") < 50)
         .select(col("doc_id"), expr(text.tokenHashes(S, "text")).as("th"))
@@ -2201,9 +2200,7 @@ object PipelineQueries {
       val model = AnnIndex.ivfFit(imgs, "ivd", nLists = 8)
       val assigned = AnnIndex.ivfAssign(model, imgs, "ivd")
         .select(col("img_id"), col("iv"), col("list_id"))
-      val cents = model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("list_id", "centroid")
+      val cents = AnnIndex.centroidFrame(s, model)
       // MIPS routing: the score is linear in the image vector, so the
       // best lists for a caption are the centroids maximizing cv . c
       val wRoute = Window.partitionBy("doc_id")
@@ -2311,7 +2308,6 @@ object PipelineQueries {
               |  TRUE AS recall_ok
               |FROM r WHERE rnk <= 3
               |ORDER BY doc_id, rnk""".stripMargin)) { (s, dir) =>
-      import s.implicits._
       import graft.operators.{AnnIndex, Multimodal}
       val caps = documents(s, dir).filter(col("doc_id") < 50)
         .select(col("doc_id"), expr(text.tokenHashes(S, "text")).as("th"))
@@ -2342,9 +2338,7 @@ object PipelineQueries {
       val model = AnnIndex.ivfFit(imgs, "ivn", nLists = 8)
       val assigned = AnnIndex.ivfAssign(model, imgs, "ivn")
         .select(col("img_id"), col("ivd"), col("inorm"), col("list_id"))
-      val cents = model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("list_id", "centroid")
+      val cents = AnnIndex.centroidFrame(s, model)
       // cosine routing: rank lists by cos(cv, centroid); |cv| is constant
       // within a caption, so the ranking needs only dot / |centroid| —
       // genuinely approximate for the cosine score, hence the recall pin

@@ -1075,7 +1075,7 @@ object EventsStream {
     * already ships. Seed with
     * [[graft.operators.AnnIndex.seedIvfIngestStore]]. */
   def ivfStoreIngest(rows: DataFrame,
-                     model: org.apache.spark.ml.clustering.KMeansModel,
+                     model: graft.operators.IvfModel,
                      storeDir: String, embCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     rows.writeStream.foreachBatch {
@@ -1232,7 +1232,7 @@ object EventsStream {
     * store never re-assigned or broadcast): the quantized serving
     * family's streaming face, same exactly-once result ledger. */
   def ivfServeStream(rows: DataFrame, qIdCol: String, qEmbCol: String,
-                     model: org.apache.spark.ml.clustering.KMeansModel,
+                     model: graft.operators.IvfModel,
                      store: DataFrame, idCol: String, embCol: String,
                      k: Int, nProbe: Int, outDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =

@@ -927,7 +927,7 @@ class ModulesSpec extends AnyFunSuite {
     val assign = AnnIndex.ivfAssign(model, imgDf, "ivn")
       .select(col("img_id"), col("list_id"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val cents = model.clusterCenters.map(_.toArray)
+    val cents = model.centers
     def cos(a: Array[Double], b: Array[Double]) = {
       val d = a.zip(b).map { case (x, y) => x * y }.sum
       d / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
@@ -2332,6 +2332,10 @@ class ModulesSpec extends AnyFunSuite {
     assert(fp(corpus.coalesce(1), 0) == seeds &&
       fp(corpus.repartition(4, col("vec_id")), 0) == seeds,
       "the seeded centroids changed with the partitioning")
+    // the IVF routing fit is seeded the same way: one input, one fit
+    import graft.operators.AnnIndex
+    def ivfSig() = AnnIndex.ivfModelSig(AnnIndex.ivfFit(corpus, "emb", nLists = 8))
+    assert(ivfSig() == ivfSig(), "two ivfFit calls of one input differ")
   }
 
   test("pqFit: codebooks are the exact cloud means; row length is checked") {
@@ -2363,11 +2367,77 @@ class ModulesSpec extends AnyFunSuite {
             cb(s).map(_.toSeq).toSeq)
       }
     }
+    // the IVF router over subspace 0 alone: its two lists are the two
+    // subspace-0 cloud means
+    val ivf = graft.operators.AnnIndex.ivfFit(
+      corpus.select(slice(col("emb"), 1, 2).as("emb")), "emb", nLists = 2)
+    want(0).foreach { mu =>
+      assert(ivf.centers.exists(c => c.indices.forall(j =>
+        math.abs(c(j) - mu(j)) <= 1e-12)),
+        s"ivfFit: no list center at the cloud mean $mu: " +
+          ivf.centers.map(_.toSeq).toSeq)
+    }
     val e = intercept[IllegalArgumentException] {
       Quantize.pqFit(corpus, "emb", dim = 8, m = 2, nCentroids = 2)
     }
     assert(e.getMessage.contains("a row of length 4, expected dim=8"),
       e.getMessage)
+  }
+
+  test("ivfFit: null rows are skipped; a null element or a length mismatch fails the fit, leaving no job or persisted RDD") {
+    import spark.implicits._
+    import graft.operators.AnnIndex
+    def live(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val rows = (1 to 64).map(i => (i.toLong, Seq.tabulate(4)(j =>
+      java.lang.Double.valueOf(((i * 31 + j * 7) % 13).toDouble))))
+    def sig(df: org.apache.spark.sql.DataFrame) =
+      AnnIndex.ivfModelSig(AnnIndex.ivfFit(df, "emb", nLists = 4))
+    val clean = rows.toDF("vec_id", "emb")
+    val withNull = clean.union(Seq((99L, null.asInstanceOf[Seq[java.lang.Double]]))
+      .toDF("vec_id", "emb"))
+    assert(sig(withNull) == sig(clean), "a null row changed the fit")
+    Seq(
+      "null element" -> rows.map { case (i, v) =>
+        (i, if (i == 7L) v.updated(2, null) else v) },
+      "short row" -> rows.map { case (i, v) =>
+        (i, if (i == 7L) v.take(3) else v) },
+      "long row" -> rows.map { case (i, v) =>
+        (i, if (i == 7L) v :+ java.lang.Double.valueOf(1.0) else v) }
+    ).foreach { case (what, bad) =>
+      val before = live()
+      intercept[org.apache.spark.SparkException] {
+        AnnIndex.ivfFit(bad.toDF("vec_id", "emb"), "emb", nLists = 4)
+      }
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+        s"$what: a fit job was still running after ivfFit threw")
+      assert((live() -- before).isEmpty,
+        s"$what: failed ivfFit leaked persisted RDDs: ${live() -- before}")
+    }
+  }
+
+  test("Spark ML stays confined to the IVF routing fit") {
+    import scala.jdk.CollectionConverters._
+    // one k-means fit on Spark ML (AnnIndex.ivfFit), none elsewhere: a
+    // second library k-means or a KMeansModel in an operator signature
+    // fails here
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"no $root under ${sys.props("user.dir")}")
+    val uses = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("org.apache.spark.ml") =>
+            s"${root.relativize(p)}:${i + 1}: ${l.trim}"
+        }
+      }
+    val allowed = Seq(
+      "new org.apache.spark.ml.clustering.KMeans()",
+      "org.apache.spark.ml.functions.array_to_vector(")
+    assert(uses.size == allowed.size &&
+      uses.forall(u => u.startsWith("graft/operators/AnnIndex.scala:") &&
+        allowed.exists(u.contains)),
+      s"Spark ML outside AnnIndex.ivfFit:\n${uses.mkString("\n")}")
   }
 
   test("recallReport: one lazy row of in-plan counts; a 4-hop true pair breaks full recall") {
