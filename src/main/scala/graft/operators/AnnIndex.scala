@@ -723,98 +723,122 @@ object AnnIndex {
     * ModulesSpec-pinned property), while ACROSS planes nothing is
     * ordered — that trade-off surface is the measurement. One row per
     * cell: (planes, probe_bits, n_candidates, n_corpus, n_hits,
-    * recall_x10k, cand_frac_x10k). Scale shape: the exact top-k
-    * baseline is computed once; each cell is one bucket pass over the
-    * corpus plus a broadcast probe join and a k-row intersection.
-    *
-    * Input contract: `idCol` is a bigint (checked — the cells' bounded
-    * top-k buffer binds ids as Long) and unique across the corpus (not
-    * checked — n_hits intersects id SETS, so a duplicated id would be
-    * counted once where the exact page holds it twice). */
+    * recall_x10k, cand_frac_x10k). One [[gridPass]]: each row hashes
+    * once per distinct `planes` ([[wideBucketExpr]], as [[annJoin]]
+    * serves) and joins every cell whose [[probeSetExpr]] set holds its
+    * bucket; a null embedding joins only the exact cell. `idCol` must be
+    * a unique bigint (both checked). */
   def annTuning(corpus: DataFrame, embCol: String, idCol: String,
                 query: DataFrame, queryCol: String, dim: Int, k: Int,
                 cells: Seq[(Int, Int)]): DataFrame = {
-    import graft.functions.{text, vectors}
-    val idType = corpus.schema(idCol).dataType
-    require(idType == org.apache.spark.sql.types.LongType,
-      s"annTuning needs a bigint idCol: `$idCol` is ${idType.simpleString}")
-    // ONE query row, the annTopK/ivfTopK contract — checked loudly AND
-    // collected once: the exact baseline, candidate counts and candidate
-    // top-k are all per-ONE-query globals computed in SEPARATE sub-plans,
-    // so beyond the multi-row blend, a non-deterministic 1-row query
-    // plan (sample/limit over a bigger frame) re-executed per sub-plan
-    // could measure the baseline for one embedding and the cells for
-    // another — recall garbage that LOOKS like a measurement, feeding a
-    // wrong production dial. Every sub-plan below reads the same LOCAL
-    // collected row.
-    val qLocal = oneQueryRow(query, queryCol, "annTuning")
-    val exactIds = corpus
-      .crossJoin(broadcast(qLocal.select(col(queryCol))))
-      .withColumn("__sim", vectors.cosineSim(col(embCol), col(queryCol)))
-      .orderBy(desc("__sim"), col(idCol))
-      .limit(k)
-      .select(col(idCol))
-      // computed ONCE for the whole sweep (localCheckpoint): lazy, the
-      // full-corpus exact scan would re-run inside every cell's semi-join
-      .localCheckpoint()
-    val nCorpus = corpus.agg(count(lit(1)).as("n_corpus"))
-    // the k exact ids as ONE broadcastable row: each cell's hit count is
-    // an array intersection against it, so the per-cell semi-join (and
-    // its second full candidate pass) disappears below
-    val exactArr = exactIds
-      .agg(sort_array(collect_list(col(idCol))).as("__exact"))
-    val tk = graft.operators.TopK.topK(k)
-    val stats = cells.map { case (planes, probeBits) =>
-      // null embeddings are dropped BEFORE the bucket projection and the
-      // probe keys compare null-safely — plain `=` would make Catalyst
-      // infer isnotnull(__cb) and push it below the projection,
-      // re-running the planes × dim bucket kernel a second time per
-      // corpus row per cell (the measured [[Dedup.pairJoin]] trap
-      // [[annJoin]] avoids the same way). Dropping nulls first preserves
-      // `=`'s semantics exactly: a null embedding never joined a probe.
-      val assigned = corpus.filter(col(embCol).isNotNull)
-        .withColumn("__cb", wideBucketExpr(embCol, dim, planes))
-      val q0 = qLocal.select(col(queryCol).as("__qe"),
-        wideBucketExprOf(col(queryCol), dim, planes).as("__qb0"))
-      // probed buckets are distinct per query ([[probeSetExpr]] — the
-      // SAME builder annJoin serves with, so the measurement cannot
-      // drift from the join), so a corpus row lands in at most one
-      // candidate row
-      val probes = q0.select(col("__qe"),
-        explode(expr(probeSetExpr(planes, probeBits))).as("__qb"))
-      val cand = assigned.join(broadcast(probes), col("__cb") <=> col("__qb"))
-      // ONE candidate pass per cell (r15): count and the candidate top-k
-      // fold in the same partial-aggregated pass via the bounded TopK
-      // Aggregator — its (score DESC, id ASC) buffer order is exactly the
-      // ORDER BY __sim DESC, id LIMIT k it replaces — where the r14 form
-      // re-ran the bucket kernel over the corpus once for the count and
-      // again for the sort-limit page (2 passes x |cells|); n_hits is the
-      // page's intersection with the broadcast exact ids — a SET
-      // intersection, hence the unique-id contract (scaladoc)
-      cand
-        .withColumn("__sim", vectors.cosineSim(col(embCol), col("__qe")))
-        .agg(count(lit(1)).as("n_candidates"),
-          tk(col(idCol), col("__sim")).as("__tk"))
-        .crossJoin(broadcast(exactArr))
-        .select(
-          lit(planes).cast("long").as("planes"),
-          lit(probeBits).cast("long").as("probe_bits"),
-          col("n_candidates").cast("long").as("n_candidates"),
-          coalesce(size(array_intersect(
-              expr("transform(__tk, x -> x.id)"), col("__exact"))), lit(0))
-            .cast("long").as("n_hits"))
+    val planes = cells.map(_._1).distinct
+    requireSweepInput(corpus, idCol, Seq("__qe", "__sim") ++
+      cells.indices.map(i => s"__pr$i") ++ planes.map(p => s"__cb$p"),
+      "annTuning")
+    val q0 = oneQueryRow(query, queryCol, "annTuning")
+      .select(col(queryCol).as("__qe"))
+    val q = cells.zipWithIndex.foldLeft(q0) { case (df, ((p, probeBits), i)) =>
+      df.withColumn("__qb0", wideBucketExprOf(col("__qe"), dim, p))
+        .withColumn(s"__pr$i", expr(probeSetExpr(p, probeBits)))
+    }.drop("__qb0")
+    val rows = planes.foldLeft(corpus.crossJoin(broadcast(q))
+        .withColumn("__sim", vectors.cosineSim(col(embCol), col("__qe")))) {
+      (df, p) => df.withColumn(s"__cb$p", wideBucketExpr(embCol, dim, p))
     }
-    stats.reduce(_.unionByName(_))
-      .crossJoin(broadcast(nCorpus))
-      .select(col("planes"), col("probe_bits"), col("n_candidates"),
-        col("n_corpus").cast("long").as("n_corpus"), col("n_hits"),
-        expr(text.fixedPoint(s"CAST(n_hits AS DOUBLE) / $k", 4))
-          .as("recall_x10k"),
-        expr(text.fixedPoint(
-          "CAST(n_candidates AS DOUBLE) / greatest(n_corpus, 1)", 4))
-          .as("cand_frac_x10k"))
-      .orderBy("planes", "probe_bits")
+    // probe buckets compare null-safely, as annJoin's `<=>` join does
+    val g = gridPass(rows, idCol, cells.zipWithIndex.map { case ((p, _), i) =>
+      (col(embCol).isNotNull &&
+        exists(col(s"__pr$i"), _ <=> col(s"__cb$p")), col("__sim"))
+    }, page = k)
+    tuningReport(g, Seq("planes", "probe_bits"),
+      cells.map { case (p, probeBits) => Seq(p.toLong, probeBits.toLong) },
+      idCol, k, "annTuning")
   }
+
+  /** A sweep's input: a bigint `idCol` (the pages bind ids as Long;
+    * [[gridHits]] asserts uniqueness in-plan) and none of `reserved`. */
+  private[graft] def requireSweepInput(df: DataFrame, idCol: String,
+      reserved: Seq[String], what: String): Unit = {
+    val idType = df.schema(idCol).dataType
+    require(idType == org.apache.spark.sql.types.LongType,
+      s"$what needs a bigint idCol: `$idCol` is ${idType.simpleString}")
+    val taken = reserved.filter(df.columns.contains)
+    require(taken.isEmpty,
+      s"$what reserves column name(s): ${taken.mkString(", ")}")
+  }
+
+  /** The dial sweeps' one pass: every row of `rows` joins the exact cell
+    * (-1, ranked by `__sim`) and each cell `i` it qualifies for
+    * (`cells(i)`: condition, score). ONE groupBy(cell) aggregate keeps
+    * each cell's count, the exact cell's distinct ids, and a page of its
+    * best `page` rows by (score DESC, id ASC) — entries (id, score,
+    * `__sim`), combined map-side ([[Quantize.TopCandAgg]]); a null score
+    * ranks last, as `orderBy(desc)` ranks it. The cells fold into ONE row
+    * (`__g`, read by [[gridCell]]), so a report never self-joins. */
+  private[graft] def gridPass(rows: DataFrame, idCol: String,
+                              cells: Seq[(Column, Column)],
+                              page: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    def last(score: Column) = coalesce(score, lit(Double.NegativeInfinity))
+    val joined = struct(lit(-1).as("c"), last(col("__sim")).as("s")) +:
+      cells.zipWithIndex.map { case ((ok, score), i) =>
+        when(ok, struct(lit(i).as("c"), last(score).as("s")))
+      }
+    val pageOf = udaf(new Quantize.TopCandAgg[Double](page),
+      ExpressionEncoder[(Long, Long, Double, Double)]())
+    rows.select(col(idCol).as("__id"), last(col("__sim")).as("__sim"),
+        explode(filter(array(joined: _*), _.isNotNull)).as("__e"))
+      .groupBy(col("__e.c").as("cell"))
+      .agg(count(lit(1)).as("n"),
+        count_distinct(when(col("__e.c") === -1, col("__id"))).as("n_ids"),
+        pageOf(col("__e.c").cast("long"), col("__id"), col("__e.s"),
+          col("__sim")).as("page"))
+      .agg(collect_list(struct(col("cell"), col("n"), col("n_ids"),
+        col("page"))).as("__g"))
+  }
+
+  /** [[gridPass]]'s cell `i` (-1 = exact): (cell, n, n_ids, page), or
+    * null when no row joined it. */
+  private[graft] def gridCell(i: Int): Column =
+    get(filter(col("__g"), _("cell") === i), lit(0))
+
+  /** The first `k` ids of a [[gridPass]] page (null stays null). */
+  private def pageIds(page: Column, k: Int): Column =
+    transform(slice(page, 1, k), _("_1"))
+
+  /** |ids ∩ exact top-k| (0 for a cell no row joined), with the unique-id
+    * assert folded in: a duplicate would silently miscount the SET. */
+  private[graft] def gridHits(ids: Column, k: Int, idCol: String,
+                              what: String): Column = {
+    val exact = gridCell(-1)
+    val unique = coalesce(assert_true(
+        coalesce(exact("n_ids") === exact("n"), lit(true)),
+        lit(s"$what needs unique non-null ids: `$idCol` repeats a value " +
+          "or holds a null — n_hits intersects id sets")).cast("long"),
+      lit(0L))
+    when(ids.isNull || exact.isNull, lit(0L))
+      .otherwise(size(array_intersect(ids, pageIds(exact("page"), k)))
+        .cast("long")) + unique
+  }
+
+  /** One report row per cell `i`, keyed by `cells(i)`: n_candidates,
+    * n_corpus (the exact cell's count), n_hits and the x10k ratios. */
+  private def tuningReport(g: DataFrame, keys: Seq[String],
+                           cells: Seq[Seq[Long]], idCol: String, k: Int,
+                           what: String): DataFrame =
+    g.select(explode(array(cells.zipWithIndex.map { case (key, i) =>
+        val c = gridCell(i)
+        struct(keys.zip(key).map { case (n, v) => lit(v).as(n) } :+
+          coalesce(c("n"), lit(0L)).as("n_candidates") :+
+          gridHits(pageIds(c("page"), k), k, idCol, what).as("n_hits"): _*)
+      }: _*)).as("__r"), coalesce(gridCell(-1)("n"), lit(0L)).as("n_corpus"))
+      .select(keys.map(n => col(s"__r.$n")) ++ Seq(col("__r.n_candidates"),
+        col("n_corpus"), col("__r.n_hits")): _*)
+      .withColumn("recall_x10k",
+        expr(text.fixedPoint(s"CAST(n_hits AS DOUBLE) / $k", 4)))
+      .withColumn("cand_frac_x10k", expr(text.fixedPoint(
+        "CAST(n_candidates AS DOUBLE) / greatest(n_corpus, 1)", 4)))
+      .orderBy(keys.map(col): _*)
 
   // --- IVF (inverted-file) variant -----------------------------------------
   //
@@ -851,7 +875,19 @@ object AnnIndex {
   /** Corpus with its inverted-list assignment (`list_id`, the nearest
     * center by [[Quantize.nearest]]) — persist partitioned by `list_id`
     * as the index build. */
-  def ivfAssign(model: IvfModel, df: DataFrame, embCol: String): DataFrame = {
+  def ivfAssign(model: IvfModel, df: DataFrame, embCol: String): DataFrame =
+    // NULL (or null-element) embeddings cannot be routed: dropping them
+    // gives the whole IVF family (store build, refresh, residual encode,
+    // serving) one verdict — an unroutable row is not in the index.
+    df.filter(routable(embCol))
+      .withColumn("list_id", listOf(model, embCol))
+
+  /** Routable: a non-null embedding with no null element. */
+  private[graft] def routable(embCol: String): Column =
+    col(embCol).isNotNull && !exists(col(embCol), x => x.isNull)
+
+  /** A routable row's nearest list ([[Quantize.nearest]]). */
+  private[graft] def listOf(model: IvfModel, embCol: String): Column = {
     val centers = model.centers
     val dim = centers(0).length
     val route = udf { (emb: Array[Double]) =>
@@ -859,11 +895,7 @@ object AnnIndex {
         s"does not match the centroids' dim $dim")
       Quantize.nearest(centers, emb, 0)
     }
-    // NULL (or null-element) embeddings cannot be routed: dropping them
-    // gives the whole IVF family (store build, refresh, residual encode,
-    // serving) one verdict — an unroutable row is not in the index.
-    df.filter(col(embCol).isNotNull && !exists(col(embCol), x => x.isNull))
-      .withColumn("list_id", route(col(embCol).cast("array<double>")))
+    route(col(embCol).cast("array<double>"))
   }
 
   /** Deterministic fingerprint of the routing centroids ([[Quantize.cbFingerprint]]
@@ -993,10 +1025,10 @@ object AnnIndex {
       vectors.dot(centroid, centroid)
 
   /** The `nProbe` nearest inverted lists to the query, by centroid
-    * distance — the routing stage shared by [[ivfTopKAssigned]] and
-    * [[ivfTuning]]. Squared euclidean via the staged-dot identity;
-    * centroid count is tiny, so this is a broadcast cross join +
-    * TakeOrderedAndProject. Deterministic total order (dist2, list_id),
+    * distance — [[ivfTopKAssigned]]'s routing stage; [[ivfTuning]] ranks
+    * every list in the same order. Squared euclidean via the staged-dot
+    * identity; centroid count is tiny, so this is a broadcast cross join
+    * + TakeOrderedAndProject. Deterministic total order (dist2, list_id),
     * so probe sets are NESTED prefixes across nProbe values — the
     * property [[ivfTuning]]'s monotonicity checks rest on. */
   private def probeLists(model: IvfModel, query: DataFrame, queryCol: String,
@@ -1009,6 +1041,17 @@ object AnnIndex {
       .limit(nProbe)
       .select(col("list_id"))
   }
+
+  /** `sim` + the `ivf_sig` token assert when `assigned` carries one (in
+    * the load-bearing score, so the optimizer cannot prune it). */
+  private def sigChecked(model: IvfModel, assigned: DataFrame,
+                         sim: Column): Column =
+    if (!assigned.columns.contains("ivf_sig")) sim
+    else sim + coalesce(assert_true(
+      col("ivf_sig") === lit(ivfModelSig(model)),
+      lit("stale IVF store: ivf_sig does not match this model's " +
+        "centroids — the routing fit changed; rebuild the store"))
+      .cast("double"), lit(0.0))
 
   /** [[ivfTopK]] over a PRE-ASSIGNED corpus (the persisted index build —
     * [[ivfAssign]] output stored partitioned by `list_id`): only the query
@@ -1038,14 +1081,8 @@ object AnnIndex {
     // column rides the join under the reserved name __qe so a store
     // whose embedding column is also `queryCol` (the natural call
     // against a persisted store) cannot throw AMBIGUOUS_REFERENCE.
-    val sim = vectors.cosineSim(col(embCol), col("__qe"))
-    val checked =
-      if (!assigned.columns.contains("ivf_sig")) sim
-      else sim + coalesce(assert_true(
-        col("ivf_sig") === lit(ivfModelSig(model)),
-        lit("stale IVF store: ivf_sig does not match this model's " +
-          "centroids — the routing fit changed; rebuild the store"))
-        .cast("double"), lit(0.0))
+    val checked = sigChecked(model, assigned,
+      vectors.cosineSim(col(embCol), col("__qe")))
     assigned
       .join(broadcast(probes), "list_id")
       .crossJoin(broadcast(qLocal.select(col(queryCol).as("__qe"))))
@@ -1132,50 +1169,31 @@ object AnnIndex {
     * candidate superset can only gain true-top-k members, both
     * n_candidates and n_hits are non-decreasing in nProbe, and
     * nProbe = nLists is exactly brute force — the theorem-backed
-    * properties q_ivf_tuning's oracle pins. Scale shape: each dial is
-    * one probed partition-pruned scan + a k-row broadcast intersection;
-    * the exact top-k baseline is computed once. */
+    * properties q_ivf_tuning's oracle pins. One [[gridPass]]: the query
+    * ranks every list once in [[probeLists]]' order; a row joins each
+    * dial whose nProbe covers its list's rank, scored as
+    * [[ivfTopKAssigned]] scores it. `idCol`: a unique bigint (checked). */
   def ivfTuning(model: IvfModel,
                 assigned: DataFrame, embCol: String, idCol: String,
                 query: DataFrame, queryCol: String,
                 k: Int, nProbes: Seq[Int]): DataFrame = {
-    // [[annTuning]]'s collect-once discipline: the baseline, each dial's
-    // candidate count, and each dial's served top-k are separate
-    // sub-plans — a non-deterministic 1-row query plan re-executed per
-    // sub-plan could price one embedding's routing against another's
-    // baseline; and a multi-row frame is refused loudly instead of
-    // blending every query's probes into one meaningless ranking
-    val qLocal = oneQueryRow(query, queryCol, "ivfTuning")
-    val exactIds = assigned
-      .crossJoin(broadcast(qLocal.select(col(queryCol))))
-      .withColumn("__sim", vectors.cosineSim(col(embCol), col(queryCol)))
-      .orderBy(desc("__sim"), col(idCol))
-      .limit(k)
-      .select(col(idCol))
-      .localCheckpoint() // once per sweep, not once per dial
-    val nCorpus = assigned.agg(count(lit(1)).as("n_corpus"))
-    val stats = nProbes.map { np =>
-      val nCand = assigned
-        .join(broadcast(probeLists(model, qLocal, queryCol, np)), "list_id")
-        .agg(count(lit(1)).as("n_candidates"))
-      val nHits = ivfTopKAssigned(model, assigned, embCol, qLocal, queryCol,
-          k, np, tieBreak = Seq(idCol))
-        .select(col(idCol))
-        .join(broadcast(exactIds), Seq(idCol), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      nCand.crossJoin(nHits).select(lit(np).cast("long").as("nprobe"),
-        col("n_candidates").cast("long").as("n_candidates"),
-        col("n_hits").cast("long").as("n_hits"))
-    }
-    stats.reduce(_.unionByName(_))
-      .crossJoin(broadcast(nCorpus))
-      .select(col("nprobe"), col("n_candidates"),
-        col("n_corpus").cast("long").as("n_corpus"), col("n_hits"),
-        expr(text.fixedPoint(s"CAST(n_hits AS DOUBLE) / $k", 4))
-          .as("recall_x10k"),
-        expr(text.fixedPoint(
-          "CAST(n_candidates AS DOUBLE) / greatest(n_corpus, 1)", 4))
-          .as("cand_frac_x10k"))
-      .orderBy("nprobe")
+    requireSweepInput(assigned, idCol, Seq("__qe", "__sim", "__order", "__rank"),
+      "ivfTuning")
+    // every list in probeLists' order, as one broadcast row
+    val order = oneQueryRow(query, queryCol, "ivfTuning")
+      .select(col(queryCol).cast("array<double>").as("__qe"))
+      .crossJoin(centroidFrame(query.sparkSession, model))
+      .groupBy(col("__qe"))
+      .agg(transform(sort_array(collect_list(struct(
+          routeDist2(col("__qe"), col("centroid")).as("d"), col("list_id")))),
+        _("list_id")).as("__order"))
+    val rows = assigned.crossJoin(broadcast(order))
+      .withColumn("__sim", vectors.cosineSim(col(embCol), col("__qe")))
+      .withColumn("__rank", array_position(col("__order"), col("list_id")))
+    val checked = sigChecked(model, assigned, col("__sim"))
+    val g = gridPass(rows, idCol,
+      nProbes.map(np => (col("__rank").between(1, np), checked)), page = k)
+    tuningReport(g, Seq("nprobe"), nProbes.map(np => Seq(np.toLong)),
+      idCol, k, "ivfTuning")
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.vectors
@@ -458,9 +458,18 @@ object Quantize {
     val clash = have ++ Seq("pq_cb_sig").filter(df.columns.contains)
     require(clash.isEmpty,
       s"pqEncode would overwrite existing column(s): ${clash.mkString(", ")}")
+    df.withColumn("pq_codes",
+        encodeUdfFor(codebooks)(col(embCol).cast("array<double>")))
+      .withColumn("pq_norm", vectors.l2Norm(col(embCol).cast("array<double>")))
+      .withColumn("pq_cb_sig", lit(sig))
+  }
+
+  /** m code bytes per vector (null stays null), dim checked per row. */
+  private def encodeUdfFor(codebooks: Array[Array[Array[Double]]])
+      : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val w = codebooks(0)(0).length
     val fullDim = codebooks.length * w
-    val enc = udf { (emb: Array[Double]) =>
+    udf { (emb: Array[Double]) =>
       if (emb == null) null
       else {
         // loud dimension contract (the int8 approxDot discipline): a
@@ -475,9 +484,6 @@ object Quantize {
           .toArray
       }
     }
-    df.withColumn("pq_codes", enc(col(embCol).cast("array<double>")))
-      .withColumn("pq_norm", vectors.l2Norm(col(embCol).cast("array<double>")))
-      .withColumn("pq_cb_sig", lit(sig))
   }
 
   /** the ADC lookup table for one query: LUT[s * nCentroids + c] = exact
@@ -575,29 +581,28 @@ object Quantize {
         "approx_sim")
   }
 
-  /** Bounded top-`cap` candidate heap keyed by (approx_sim DESC,
-    * neighbor_id ASC) — the typed Aggregator behind [[pqJoinIndexed]]'s
-    * map-side candidate reduction. The buffer is kept SORTED (best
-    * first), so `reduce` is an O(cap) ordered insert that rejects a row
-    * worse than the current floor in O(1) once the buffer is full, and
-    * `merge` is a sorted merge-take. Deterministic total order (ties
-    * break on the smaller id), so the final candidate page equals the
-    * global top-cap by (approx_sim DESC, id ASC) exactly — replayable
-    * closed-form by an oracle's row_number. Input rows are
-    * (query_id, neighbor_id, approx_sim, emb); the candidate keeps the
-    * embedding so the exact re-rank never re-scans the store. */
-  private final class TopCandAgg(cap: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Long, Long, Double, Seq[Double]),
-        List[(Long, Double, Seq[Double])],
-        Seq[(Long, Double, Seq[Double])]] {
+  /** Bounded top-`cap` candidate heap keyed by (score DESC, id ASC) —
+    * the typed Aggregator behind [[pqJoinIndexed]]'s map-side candidate
+    * reduction and the dial sweeps' pages ([[AnnIndex.gridPass]]). The
+    * buffer is kept SORTED (best first), so `reduce` is an O(cap)
+    * ordered insert that rejects a row worse than the current floor in
+    * O(1) once the buffer is full, and `merge` is a sorted merge-take.
+    * Deterministic total order (ties break on the smaller id), so the
+    * final page equals the global top-cap by (score DESC, id ASC)
+    * exactly — replayable closed-form by an oracle's row_number. Input
+    * rows are (group key, id, score, payload); each entry keeps its
+    * payload (the embedding in [[pqJoinIndexed]], so the exact re-rank
+    * never re-scans the store; the exact similarity in the sweeps). */
+  private[graft] final class TopCandAgg[
+      P: scala.reflect.runtime.universe.TypeTag](cap: Int)
+      extends org.apache.spark.sql.expressions.Aggregator[(Long, Long, Double, P),
+        List[(Long, Double, P)], Seq[(Long, Double, P)]] {
     private def beats(aSim: Double, aId: Long,
                       bSim: Double, bId: Long): Boolean =
       aSim > bSim || (aSim == bSim && aId < bId)
-    def zero: List[(Long, Double, Seq[Double])] = Nil
-    def reduce(b: List[(Long, Double, Seq[Double])],
-               a: (Long, Long, Double, Seq[Double]))
-        : List[(Long, Double, Seq[Double])] = {
+    def zero: List[(Long, Double, P)] = Nil
+    def reduce(b: List[(Long, Double, P)], a: (Long, Long, Double, P))
+        : List[(Long, Double, P)] = {
       val cand = (a._2, a._3, a._4)
       if (b.length >= cap && !beats(cand._2, cand._1, b.last._2, b.last._1)) b
       else {
@@ -606,10 +611,9 @@ object Quantize {
         (better ::: cand :: worse).take(cap)
       }
     }
-    def merge(b1: List[(Long, Double, Seq[Double])],
-              b2: List[(Long, Double, Seq[Double])])
-        : List[(Long, Double, Seq[Double])] = {
-      val out = List.newBuilder[(Long, Double, Seq[Double])]
+    def merge(b1: List[(Long, Double, P)], b2: List[(Long, Double, P)])
+        : List[(Long, Double, P)] = {
+      val out = List.newBuilder[(Long, Double, P)]
       var (x, y) = (b1, b2); var n = 0
       while (n < cap && (x.nonEmpty || y.nonEmpty)) {
         if (y.isEmpty ||
@@ -620,13 +624,12 @@ object Quantize {
       }
       out.result()
     }
-    def finish(r: List[(Long, Double, Seq[Double])])
-        : Seq[(Long, Double, Seq[Double])] = r
+    def finish(r: List[(Long, Double, P)]): Seq[(Long, Double, P)] = r
     def bufferEncoder
-        : org.apache.spark.sql.Encoder[List[(Long, Double, Seq[Double])]] =
+        : org.apache.spark.sql.Encoder[List[(Long, Double, P)]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
     def outputEncoder
-        : org.apache.spark.sql.Encoder[Seq[(Long, Double, Seq[Double])]] =
+        : org.apache.spark.sql.Encoder[Seq[(Long, Double, P)]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   }
 
@@ -694,7 +697,7 @@ object Quantize {
         col(embCol).cast("array<double>"))
       .as[(Long, Long, Double, Seq[Double])]
     val cands = scored.groupByKey(_._1)
-      .agg(new TopCandAgg(cap).toColumn.name("cands"))
+      .agg(new TopCandAgg[Seq[Double]](cap).toColumn.name("cands"))
       .toDF("query_id", "cands")
     val w = Window.partitionBy("query_id")
       .orderBy(desc("similarity"), col("neighbor_id"))
@@ -784,6 +787,12 @@ object Quantize {
                    df: DataFrame, embCol: String): DataFrame = {
     require(!df.columns.contains("__res"),
       "ivfResiduals would overwrite an existing __res column")
+    AnnIndex.ivfAssign(model, df, embCol)
+      .withColumn("__res", residualOf(model, embCol))
+  }
+
+  /** emb − centroid[list_id] of a routed row. */
+  private def residualOf(model: IvfModel, embCol: String): Column = {
     val centers = model.centers
     val resUdf = udf { (emb: Array[Double], list: Int) =>
       if (emb == null) null
@@ -797,18 +806,17 @@ object Quantize {
         r
       }
     }
-    AnnIndex.ivfAssign(model, df, embCol)
-      .withColumn("__res",
-        resUdf(col(embCol).cast("array<double>"), col("list_id")))
+    resUdf(col(embCol).cast("array<double>"), col("list_id"))
   }
 
   /** The IVFPQ probe page — the `n` nearest lists by centroid distance,
     * each carrying q·centroid, the residual ADC LUT (list-independent:
     * LUTs are linear in q), the query norm, and the query itself for
     * the exact re-rank. ONE builder shared by [[ivfPqTopK]] (n = nProbe)
-    * and [[ivfPqTuning]] (n = nLists), so the sweep provably measures
-    * the serving layout; lists rank by [[AnnIndex.routeDist2]], the IVF
-    * faces' one routing score, ties to the lowest `list_id`. */
+    * and [[ivfPqTuning]] (n = nLists, one page per code budget, joined
+    * to the corpus rows by `list_id`), so the sweep scores with the
+    * serving face's geometry; lists rank by [[AnnIndex.routeDist2]], the
+    * IVF faces' one routing score, ties to the lowest `list_id`. */
   private def probePage(q: DataFrame, cents: DataFrame,
                         codebooks: Array[Array[Array[Double]]],
                         n: Int): DataFrame =
@@ -820,6 +828,14 @@ object Quantize {
         vectors.dot(col("qe"), col("centroid")).as("__qdotc"),
         lutUdfFor(codebooks)(col("qe")).as("__lut"),
         vectors.l2Norm(col("qe")).as("__qn"), col("qe"))
+
+  /** IVFPQ approximate cosine of residual `codes` against a probe page
+    * row: (q·c + ADC) / (|emb|·|q|), 0 when either norm is 0. */
+  private def residualApproxSim(codebooks: Array[Array[Array[Double]]],
+                                codes: Column): Column =
+    when(col("__en") === 0.0 || col("__qn") === 0.0, lit(0.0))
+      .otherwise((col("__qdotc") +
+        adcUdfFor(codebooks)(codes, col("__lut"))) / (col("__en") * col("__qn")))
 
   /** IVFPQ search — the two ANN layouts composed the way FAISS ships
     * them: IVF routes the query to `nProbe` lists (a partition-pruned
@@ -865,12 +881,8 @@ object Quantize {
     val probes = probePage(
       qLocal.select(col("qe").cast("array<double>").as("qe")),
       cents, codebooks, nProbe)
-    val adcUdf = adcUdfFor(codebooks)
     coded.join(broadcast(probes), "list_id")
-      .withColumn("approx_sim",
-        when(col("__en") === 0.0 || col("__qn") === 0.0, lit(0.0))
-          .otherwise((col("__qdotc") + adcUdf(col("pq_codes"), col("__lut"))) /
-            (col("__en") * col("__qn"))))
+      .withColumn("approx_sim", residualApproxSim(codebooks, col("pq_codes")))
       .orderBy((desc("approx_sim") +: tieBreak.map(col)): _*)
       .limit(k * overFetch)
       .withColumn("similarity", vectors.cosineSim(col(embCol), col("qe")))
@@ -887,10 +899,13 @@ object Quantize {
     * (nProbe = nLists), deliberately: nProbe is [[AnnIndex.ivfTuning]]'s
     * dial — holding it at probe-everything isolates what the PQ stage
     * alone costs in recall, so a low row here means code resolution, not
-    * routing. One-pass structure: the corpus pays ONE residual encode per
-    * code budget (cached, shared by every overFetch dial — the
-    * q_lsh_tuning discipline), and the exact top-k baseline is computed
-    * once.
+    * routing. One [[pqFit]] per code budget, then one
+    * [[AnnIndex.gridPass]]: each row routes once and, per budget, takes
+    * its ADC score from its probe-all [[probePage]] row; a budget's page
+    * holds k·max(overFetches) rows by (ADC DESC, id ASC), and each
+    * overFetch re-ranks its first k·overFetch by (similarity DESC, id
+    * ASC). An unroutable row joins only the exact cell. `idCol`: a unique
+    * bigint (checked).
     *
     * Theorem-backed shape (what the oracle pins): for fixed m the ADC
     * ranking is fixed, so overFetch prefixes are NESTED candidate sets
@@ -905,80 +920,49 @@ object Quantize {
                   fitSample: DataFrame, query: DataFrame,
                   k: Int, dim: Int, ms: Seq[Int], overFetches: Seq[Int],
                   nCentroids: Int = 32, maxIter: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // the serving faces' loud collect-once 1-row contract and reserved
-    // names — the sweep's cells are per-ONE-query globals across many
-    // sub-plans, the exact hazard class annTuning documents
-    val reserved = Seq("qe", "__lut", "__qn", "__qdotc", "__en", "__res",
-      "__sim", "list_id", "pq_codes", "pq_norm", "pq_cb_sig",
-      "approx_sim", "similarity").filter(corpus.columns.contains)
-    require(reserved.isEmpty,
-      s"ivfPqTuning reserves column name(s): ${reserved.mkString(", ")}")
+    AnnIndex.requireSweepInput(corpus, idCol, Seq("qe", "__sim", "list_id",
+      "__res", "__en", "__qdotc", "__lut", "__qn") ++
+      ms.indices.map(i => s"__approx$i"), "ivfPqTuning")
     val q = oneQueryRow(query, "ivfPqTuning")
       .select(col("qe").cast("array<double>").as("qe"))
-    // the ivfTuning/annTuning union-of-cells shape, built in order: the
-    // exact ids, the corpus residual encode (computed ONCE and shared by
-    // every code budget — residuals are model-only, m never enters
-    // them), then per code budget the fit, the encode and the scored
-    // page; the |ms|·|overFetches| cells are LAZY 1-row frames unioned
-    // into the returned plan, so the one sink action schedules them
-    // together. Each budget's scored frame is an eager localCheckpoint:
-    // the returned plan references it, so per the checkpoint-release
-    // policy the final leaves are the caller's to hold (corpus-sized,
-    // the probe-all sweep's documented cost).
-    //
-    // the exact baseline really is computed ONCE: localCheckpoint — a
-    // lazy plan here would re-run the full-corpus exact scan inside
-    // every cell's left_semi probe (|ms|·|overFetches| scans)
-    val exactIds = corpus.crossJoin(broadcast(q))
-      .withColumn("__sim", vectors.cosineSim(col(embCol), col("qe")))
-      .orderBy(desc("__sim"), col(idCol))
-      .limit(k)
-      .select(col(idCol))
-      .localCheckpoint()
-    val nCorpus = corpus.agg(count(lit(1)).as("n_corpus"))
-    val nLists = model.centers.length
-    val cents = AnnIndex.centroidFrame(spark, model)
-    val resid = ivfResiduals(model, corpus, embCol)
-      .withColumn("__en", vectors.l2Norm(col(embCol).cast("array<double>")))
-      .localCheckpoint(true)
     val residFit = ivfResiduals(model, fitSample, embCol)
-    val cells = ms.flatMap { m =>
-      // NAMED maxIter: the positional form bound maxIter into pqFit's
-      // seed parameter (Int -> Long weak conformance compiled silently),
-      // so the sweep fitted DIFFERENT codebooks (seed=maxIter, 10 Lloyd
-      // iterations) than the serving face it claims to measure
-      val cb = pqFit(residFit, "__res", dim, m, nCentroids, maxIter = maxIter)
-      // probe-all page from the SHARED builder (n = nLists isolates code
-      // resolution; nProbe is ivfTuning's dial)
-      val probes = probePage(q, cents, cb, nLists)
-      val adcUdf = adcUdfFor(cb)
-      val scored = pqEncode(resid, "__res", cb)
-        .join(broadcast(probes), "list_id")
-        .withColumn("approx_sim",
-          when(col("__en") === 0.0 || col("__qn") === 0.0, lit(0.0))
-            .otherwise((col("__qdotc") + adcUdf(col("pq_codes"), col("__lut"))) /
-              (col("__en") * col("__qn"))))
-        .localCheckpoint(true)
-      overFetches.map { of =>
-        scored
-          .orderBy(desc("approx_sim"), col(idCol))
-          .limit(k * of)
-          .withColumn("similarity", vectors.cosineSim(col(embCol), col("qe")))
-          .orderBy(desc("similarity"), col(idCol))
-          .limit(k)
-          .select(col(idCol))
-          .join(broadcast(exactIds), Seq(idCol), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(m.toLong).as("m"), lit(of.toLong).as("overfetch"),
-            col("n_hits").cast("long").as("n_hits"))
-      }
+    // NAMED maxIter: the positional form bound maxIter into pqFit's
+    // seed parameter (Int -> Long weak conformance compiled silently),
+    // so the sweep fitted DIFFERENT codebooks (seed=maxIter, 10 Lloyd
+    // iterations) than the serving face it claims to measure
+    val cbs = ms.map(m =>
+      pqFit(residFit, "__res", dim, m, nCentroids, maxIter = maxIter))
+    val cents = AnnIndex.centroidFrame(corpus.sparkSession, model)
+    val routed = corpus.crossJoin(broadcast(q))
+      .withColumn("__sim", vectors.cosineSim(col(embCol), col("qe")))
+      .withColumn("list_id",
+        when(AnnIndex.routable(embCol), AnnIndex.listOf(model, embCol)))
+      .withColumn("__res",
+        when(col("list_id").isNotNull, residualOf(model, embCol)))
+      .withColumn("__en", when(col("list_id").isNotNull,
+        vectors.l2Norm(col(embCol).cast("array<double>"))))
+    val scored = cbs.zipWithIndex.foldLeft(routed) { case (df, (cb, i)) =>
+      df.join(broadcast(probePage(q, cents, cb, model.centers.length)
+          .drop("qe")), Seq("list_id"), "left")
+        .withColumn(s"__approx$i",
+          residualApproxSim(cb, encodeUdfFor(cb)(col("__res"))))
+        .drop("__qdotc", "__lut", "__qn")
     }
-    cells.reduce(_.unionByName(_))
-      .crossJoin(broadcast(nCorpus))
-      .select(col("m"), col("overfetch"), col("n_hits"),
-        col("n_corpus").cast("long").as("n_corpus"))
+    val g = AnnIndex.gridPass(scored, idCol,
+      cbs.indices.map(i => (col("list_id").isNotNull, col(s"__approx$i"))),
+      page = k * overFetches.max)
+    val cells = for ((m, i) <- ms.zipWithIndex; of <- overFetches) yield {
+      val reranked = sort_array(transform(
+        slice(AnnIndex.gridCell(i)("page"), 1, k * of),
+        x => struct((-x("_3")).as("s"), x("_1").as("id"))))
+      struct(lit(m.toLong).as("m"), lit(of.toLong).as("overfetch"),
+        AnnIndex.gridHits(transform(slice(reranked, 1, k), _("id")), k,
+          idCol, "ivfPqTuning").as("n_hits"))
+    }
+    g.select(explode(array(cells: _*)).as("__r"),
+        coalesce(AnnIndex.gridCell(-1)("n"), lit(0L)).as("n_corpus"))
+      .select(col("__r.m").as("m"), col("__r.overfetch").as("overfetch"),
+        col("__r.n_hits").as("n_hits"), col("n_corpus"))
       .orderBy("m", "overfetch")
   }
 }

@@ -804,13 +804,9 @@ object AnalyticsQueries {
       // the dials of the EXACT index the serving query uses
       val model = AnnIndex.ivfFit(
         corpus.filter(col("vec_id") % 4 === 1), "emb", nLists = 16)
-      // the assigned corpus materializes ONCE (the in-session stand-in
-      // for the persisted list_id-partitioned store the sweep prices):
-      // the sweep references it from 12 subtrees (exact baseline, corpus
-      // count, and two per dial), and uncheckpointed the KMeans
-      // assignment UDF re-ran per subtree
+      // the assigned corpus stays lazy: the sweep reads it in one pass,
+      // so the assignment UDF runs once per row
       val assigned = AnnIndex.ivfAssign(model, corpus, "emb")
-        .localCheckpoint(true)
       val rep = AnnIndex.ivfTuning(model, assigned, "emb", "vec_id",
         q, "qe", k = 5, nProbes = Seq(1, 2, 4, 8, 16))
       // 5-row report -> one array, monotonicity as a HOF over adjacent
@@ -896,10 +892,10 @@ object AnalyticsQueries {
         "q_ivfpq_topk fixes by spec): m in {2,8} bytes/vector x " +
         "overFetch in {1,4,32,512}, recall@5 vs the exact cosine top-5 " +
         "per cell, probing ALL 16 lists so the sweep isolates what code " +
-        "resolution alone costs (nProbe is q_ivf_tuning's dial). One-" +
-        "pass: the corpus pays one residual encode per code budget, " +
-        "cached across the overFetch dials; exact baseline computed " +
-        "once. Codebooks are engine-specific, so the gate pins the " +
+        "resolution alone costs (nProbe is q_ivf_tuning's dial). One " +
+        "pass over the corpus after the codebook fits: each budget keeps " +
+        "one ADC page that every overFetch re-ranks a prefix of, and the " +
+        "exact baseline is one more cell of that pass. Codebooks are engine-specific, so the gate pins the " +
         "THEOREM-backed shape: for fixed m the ADC ranking is fixed, so " +
         "overFetch prefixes are nested candidate sets and n_hits is " +
         "non-decreasing (overfetch_monotone_ok); recovery_ok derives its " +

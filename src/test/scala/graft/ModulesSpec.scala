@@ -321,7 +321,8 @@ class ModulesSpec extends AnyFunSuite {
       .select(col("embedding").cast("array<double>").as("qe"))
     val model = AnnIndex.ivfFit(
       corpus.filter(col("vec_id") % 4 === 1), "emb", nLists = 16)
-    val rep = AnnIndex.ivfTuning(model, AnnIndex.ivfAssign(model, corpus, "emb"),
+    val assigned = AnnIndex.ivfAssign(model, corpus, "emb")
+    val rep = AnnIndex.ivfTuning(model, assigned,
         "emb", "vec_id", q, "qe", k = 5, nProbes = Seq(1, 2, 4, 8, 16))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val nCorpus = rep.head._3
@@ -337,6 +338,20 @@ class ModulesSpec extends AnyFunSuite {
     assert(rep.map(_._4).toSeq == rep.map(_._4).sorted.toSeq)
     val full = rep.find(_._1 == 16L).get
     assert(full._2 == nCorpus && full._4 == 5L)
+    // the sweep measures what serving returns: every dial's n_hits is
+    // the serving face's top-5 at that nProbe, intersected with the
+    // exact top-5
+    val exact = corpus.crossJoin(broadcast(q))
+      .withColumn("__s", graft.functions.vectors.cosineSim(col("emb"), col("qe")))
+      .orderBy(desc("__s"), col("vec_id")).limit(5)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    for ((np, _, _, hits) <- rep) {
+      val served = AnnIndex.ivfTopKAssigned(model, assigned, "emb", q, "qe",
+          k = 5, nProbe = np.toInt, tieBreak = Seq("vec_id"))
+        .select("vec_id").collect().map(_.getLong(0))
+      assert(served.count(exact).toLong == hits,
+        s"nProbe=$np: sweep n_hits $hits, serving hits ${served.count(exact)}")
+    }
   }
 
   test("ivfPqTuning: measured recall justifies the published m=8/overFetch=32 dials") {
@@ -362,6 +377,19 @@ class ModulesSpec extends AnyFunSuite {
     for (m <- Seq(2L, 8L))
       assert(Seq(1L, 4L, 32L, 512L).map(of => rep((m, of)))
         .sliding(2).forall(p => p(0) <= p(1)), s"m=$m not monotone: $rep")
+    // the sweep measures what serving returns: the (8, 32) cell is the
+    // serving face probing all 16 lists with the same codebooks
+    val exact = corpus.crossJoin(broadcast(q))
+      .withColumn("__s", graft.functions.vectors.cosineSim(col("emb"), col("qe")))
+      .orderBy(desc("__s"), col("vec_id")).limit(5)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    val cb = Quantize.pqFit(Quantize.ivfResiduals(model, sample, "emb"),
+      "__res", 64, 8, 32, maxIter = 2)
+    val served = Quantize.ivfPqTopK(model, corpus, "emb", cb, q, k = 5,
+        nProbe = 16, overFetch = 32, tieBreak = Seq("vec_id"))
+      .select("vec_id").collect().map(_.getLong(0))
+    assert(served.count(exact).toLong == rep((8L, 32L)),
+      s"sweep (8, 32) = ${rep((8L, 32L))}, serving hits ${served.count(exact)}")
   }
 
   test("GIF codec: animated round-trip exact, stride sampling, malformed throws") {
@@ -2440,6 +2468,62 @@ class ModulesSpec extends AnyFunSuite {
       s"Spark ML outside AnnIndex.ivfFit:\n${uses.mkString("\n")}")
   }
 
+  test("localCheckpoint call sites in operators/ and queries/ do not grow") {
+    import scala.jdk.CollectionConverters._
+    // a ratchet, lowered as sites go: ROADMAP item 2 replaces the eager
+    // checkpoints with one lazy sharing helper, so a new site needs that
+    // helper instead
+    val sites = Seq("operators", "queries").flatMap { d =>
+      val root = java.nio.file.Paths.get(s"src/main/scala/graft/$d")
+      assert(java.nio.file.Files.isDirectory(root),
+        s"no $root under ${sys.props("user.dir")}")
+      java.nio.file.Files.walk(root).iterator.asScala
+        .filter(_.toString.endsWith(".scala")).toList
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.flatMap {
+            case (l, i) => Seq.fill("\\.localCheckpoint\\(".r.findAllIn(l).size)(
+              s"$d/${root.relativize(p)}:${i + 1}")
+          }
+        }
+    }
+    assert(sites.size <= 59, s"${sites.size} `.localCheckpoint(` call " +
+      "sites under graft/{operators,queries}, above the ratchet of 59 — " +
+      "ROADMAP item 2 (one lazy sharing helper) retires them; lower the " +
+      s"ratchet when a site goes, never raise it:\n${sites.mkString("\n")}")
+  }
+
+  test("tuning sweeps: building one starts only its query collect and codebook fits") {
+    import graft.operators.{AnnIndex, Quantize}
+    // lazy inputs (a local relation would collect without a job)
+    val corpus = spark.range(1, 97).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(15)),
+        j => sin(col("id") * 0.37 + j * 1.3)).as("emb"))
+    val q = spark.range(1).select(transform(sequence(lit(0), lit(15)),
+      j => cos(j * 0.5)).as("qe"))
+    val model = AnnIndex.ivfFit(corpus, "emb", nLists = 4)
+    // one grid pass per sweep: the plan is lazy, so building it costs the
+    // query-row collect and nothing else (no checkpoint, no count)
+    val (ann, annJobs) = jobsStartedBy("ann-tuning-build") {
+      AnnIndex.annTuning(corpus, "emb", "vec_id", q, "qe", dim = 16, k = 3,
+        cells = Seq((4, 0), (4, 1), (8, 2)))
+    }
+    assert(annJobs == 1, s"building annTuning started $annJobs jobs")
+    val (ivf, ivfJobs) = jobsStartedBy("ivf-tuning-build") {
+      AnnIndex.ivfTuning(model, AnnIndex.ivfAssign(model, corpus, "emb"),
+        "emb", "vec_id", q, "qe", k = 3, nProbes = Seq(1, 2, 4))
+    }
+    assert(ivfJobs == 1, s"building ivfTuning started $ivfJobs jobs")
+    // ... plus one fit per code budget, at most 2 + maxIter jobs each
+    val (pq, pqJobs) = jobsStartedBy("ivfpq-tuning-build") {
+      Quantize.ivfPqTuning(model, corpus, "emb", "vec_id", corpus, q, k = 3,
+        dim = 16, ms = Seq(2, 4), overFetches = Seq(1, 8), nCentroids = 8,
+        maxIter = 2)
+    }
+    assert(pqJobs <= 1 + 2 * (2 + 2),
+      s"building ivfPqTuning started $pqJobs jobs")
+    assert(ann.count() == 3 && ivf.count() == 3 && pq.count() == 4)
+  }
+
   test("recallReport: one lazy row of in-plan counts; a 4-hop true pair breaks full recall") {
     import spark.implicits._
     import graft.queries.PipelineQueries.recallReport
@@ -4404,6 +4488,19 @@ class ModulesSpec extends AnyFunSuite {
       s"planes=12 probe=1 recall floor broke: ${byCell((12L, 1L))}")
     // candidate fractions never exceed the corpus
     assert(rows.forall(r => r._3 <= nCorpus))
+    // a null-embedding row joins only the exact cell, where it ranks
+    // last: n_corpus counts it, no cell throws, every other value holds
+    import spark.implicits._
+    val withNull = corpus.unionByName(
+      Seq((1000000L, null.asInstanceOf[Array[Double]])).toDF("vec_id", "emb"))
+    val nullRows = AnnIndex.annTuning(withNull, "emb", "vec_id", q, "qe",
+        dim = 64, k = 5,
+        cells = Seq((1, 0), (1, 1), (4, 0), (4, 1), (4, 2), (12, 1), (12, 2)))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4)))
+    assert(nullRows.toSeq == rows.toSeq.map(r => (r._1, r._2, r._3,
+      nCorpus + 1, r._5)), s"a null embedding moved a cell: ${nullRows.toSeq}")
     // the 1-row query contract is CHECKED, not documented-only: a
     // multi-row frame would merge every query's probes into one ranking
     // and return garbage that looks like a measurement
@@ -4425,6 +4522,33 @@ class ModulesSpec extends AnyFunSuite {
         dim = 64, k = 5, cells = Seq((4, 0)))
     }
     assert(err.getMessage.contains("`sid` is string"), err.getMessage)
+    val model = graft.operators.IvfModel(Array(
+      Array.tabulate(64)(j => (j % 2).toDouble),
+      Array.tabulate(64)(j => ((j + 1) % 2).toDouble)))
+    val ivfErr = intercept[IllegalArgumentException] {
+      AnnIndex.ivfTuning(model,
+        AnnIndex.ivfAssign(model, e.filter(col("sid") =!= "0"), "emb"),
+        "emb", "sid", e.filter(col("sid") === "0").select(col("emb").as("qe")),
+        "qe", k = 5, nProbes = Seq(1))
+    }
+    assert(ivfErr.getMessage.contains("`sid` is string"), ivfErr.getMessage)
+    // a duplicated id fails the run in-plan (n_hits intersects id sets,
+    // so a duplicate would silently miscount) — no eager job at build
+    val ids = graft.core.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+    val dup = ids.filter(col("vec_id") =!= 0)
+      .unionByName(ids.filter(col("vec_id") === 7))
+    val q = ids.filter(col("vec_id") === 0).select(col("emb").as("qe"))
+    def failsUnique(df: => org.apache.spark.sql.DataFrame): Unit = {
+      val ex = intercept[Exception](df.collect())
+      assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("unique non-null ids"))),
+        s"wrong error: $ex")
+    }
+    failsUnique(AnnIndex.annTuning(dup, "emb", "vec_id", q, "qe",
+      dim = 64, k = 5, cells = Seq((4, 0))))
+    failsUnique(AnnIndex.ivfTuning(model, AnnIndex.ivfAssign(model, dup, "emb"),
+      "emb", "vec_id", q, "qe", k = 5, nProbes = Seq(1, 2)))
   }
 
   test("multi-probe wide-store serving: pruned scan, tuning-cell recall parity, indexed batch join") {
@@ -5498,6 +5622,22 @@ class ModulesSpec extends AnyFunSuite {
         k = 3, dim = 4, ms = Seq(2), overFetches = Seq(1))
     }
     assert(e4.getMessage.contains("ONE query row"), e4.getMessage)
+    // ... a bigint id, and unique ids (asserted in-plan)
+    val e5 = intercept[IllegalArgumentException] {
+      Quantize.ivfPqTuning(model, corpus.select(col("id").cast("string")
+          .as("sid"), col("emb")), "emb", "sid", corpus, q1,
+        k = 3, dim = 4, ms = Seq(2), overFetches = Seq(1))
+    }
+    assert(e5.getMessage.contains("`sid` is string"), e5.getMessage)
+    val e6 = intercept[Exception] {
+      Quantize.ivfPqTuning(model,
+        corpus.unionByName(corpus.filter(col("id") === 3L)), "emb", "id",
+        corpus, q1, k = 3, dim = 4, ms = Seq(2), overFetches = Seq(1))
+        .collect()
+    }
+    assert(Iterator.iterate(e6: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("unique non-null ids"))),
+      s"wrong error: $e6")
     // unroutable rows (null / null-element embeddings) drop at IVF
     // assignment instead of NPE-ing the job in the model udf
     val dirty = corpus.unionByName(Seq(
@@ -5508,6 +5648,12 @@ class ModulesSpec extends AnyFunSuite {
     assert(assigned.count() == 30 &&
         assigned.filter(col("id") >= 100L).isEmpty,
       "dirty embeddings were not dropped at IVF assignment")
+    // ... and the IVFPQ sweep counts them in n_corpus without routing
+    // them: no cell throws
+    val dirtyRep = Quantize.ivfPqTuning(model, dirty, "emb", "id", corpus, q1,
+      k = 3, dim = 4, ms = Seq(2), overFetches = Seq(1, 10)).collect()
+    assert(dirtyRep.map(_.getLong(3)).toSeq == Seq(32L, 32L),
+      s"dirty sweep: ${dirtyRep.toSeq}")
   }
 
   test("multimodal decoders refuse overflow-crafted headers loudly") {

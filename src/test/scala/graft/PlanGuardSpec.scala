@@ -364,16 +364,27 @@ class PlanGuardSpec extends AnyFunSuite {
       case _ => false
     }, "q_embed_neardup_incremental: cap anti-join missing — the cap " +
       "stopped being engaged")
-    // wide ANN dial sweep + wide-store serving: every join rides a
-    // broadcast (probe page, exact-top-k intersection, 1-row census) —
-    // a shuffled join would mean the corpus started moving for a tuning
-    // measurement / a top-5 probe
-    for (name <- Seq("q_ann_wide_tuning", "q_ann_wide_topk")) {
+    // the ANN dial sweeps + wide-store serving: every join rides a
+    // broadcast (the query row, the probe pages) — a shuffled join would
+    // mean the corpus started moving for a tuning measurement / a top-5
+    // probe
+    val sweeps = Seq("q_ann_wide_tuning", "q_ivf_tuning", "q_ivfpq_tuning")
+    for (name <- sweeps :+ "q_ann_wide_topk") {
       val tun = plans(name).filter { p =>
         p.isInstanceOf[SortMergeJoinExec] || p.isInstanceOf[ShuffledHashJoinExec]
       }
       assert(tun.isEmpty,
         s"$name: shuffled join planned:\n${tun.mkString("\n")}")
+    }
+    // ... and each sweep is ONE grid pass: its plan reads the corpus once,
+    // whatever the number of dial cells
+    for (name <- sweeps) {
+      val scans = plans(name).collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.toString.contains("embeddings")) => f
+      }
+      assert(scans.size == 1,
+        s"$name: ${scans.size} scans of embeddings, expected one pass")
     }
     // q_dedup_apply_salvaged consumes hammingPairsFromIndex +
     // hammingSalvageEdges (their shuffle_hash + broadcast-anti/semi
