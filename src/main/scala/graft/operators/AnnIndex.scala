@@ -393,14 +393,18 @@ object AnnIndex {
         "top-k capped at k; deduplicate or re-key the query table")
   }
 
+  /** The wide-family store's stale text: the mismatch [[requireStoreSig]]
+    * names for an `emb_sig` token from another (dim, planes). */
+  private[operators] def wideStale(dim: Int, planes: Int): String =
+    s"wide-family store — emb_sig does not match dim=$dim/planes=$planes"
+
   /** [[requireStoreSig]] bound to the wide-family `emb_sig` token. */
   private[operators] def requireWideStoreSig(store: DataFrame,
                                              dim: Int, planes: Int,
                                              allowEmpty: Boolean,
                                              what: String): Long =
     requireStoreSig(store, "emb_sig", wideStoreSig(dim, planes), allowEmpty,
-      what, staleDesc = "wide-family store — emb_sig does not match " +
-        s"dim=$dim/planes=$planes")
+      what, staleDesc = wideStale(dim, planes))
 
   /** [[annTopKIndexed]] for a persisted WIDE-family store
     * (`Dedup.embeddingBucketIndex` output, written partitioned by
@@ -772,27 +776,24 @@ object AnnIndex {
     * (`cells(i)`: condition, score). ONE groupBy(cell) aggregate keeps
     * each cell's count, the exact cell's distinct ids, and a page of its
     * best `page` rows by (score DESC, id ASC) — entries (id, score,
-    * `__sim`), combined map-side ([[Quantize.TopCandAgg]]); a null score
+    * `__sim`), combined map-side ([[TopK.TopKAgg]]); a null score
     * ranks last, as `orderBy(desc)` ranks it. The cells fold into ONE row
     * (`__g`, read by [[gridCell]]), so a report never self-joins. */
   private[graft] def gridPass(rows: DataFrame, idCol: String,
                               cells: Seq[(Column, Column)],
                               page: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     def last(score: Column) = coalesce(score, lit(Double.NegativeInfinity))
     val joined = struct(lit(-1).as("c"), last(col("__sim")).as("s")) +:
       cells.zipWithIndex.map { case ((ok, score), i) =>
         when(ok, struct(lit(i).as("c"), last(score).as("s")))
       }
-    val pageOf = udaf(new Quantize.TopCandAgg[Double](page),
-      ExpressionEncoder[(Long, Long, Double, Double)]())
+    val pageOf = TopK.topKWithPayload[Double](page)
     rows.select(col(idCol).as("__id"), last(col("__sim")).as("__sim"),
         explode(filter(array(joined: _*), _.isNotNull)).as("__e"))
       .groupBy(col("__e.c").as("cell"))
       .agg(count(lit(1)).as("n"),
         count_distinct(when(col("__e.c") === -1, col("__id"))).as("n_ids"),
-        pageOf(col("__e.c").cast("long"), col("__id"), col("__e.s"),
-          col("__sim")).as("page"))
+        pageOf(col("__id"), col("__e.s"), col("__sim")).as("page"))
       .agg(collect_list(struct(col("cell"), col("n"), col("n_ids"),
         col("page"))).as("__g"))
   }
@@ -903,6 +904,15 @@ object AnnIndex {
   private[graft] def ivfModelSig(model: IvfModel): Long =
     Quantize.cbFingerprint(Array(model.centers))
 
+  /** The IVF store's stale text: the mismatch every `ivf_sig` gate names. */
+  private val ivfStale = "IVF store — ivf_sig does not match this model's " +
+    "centroids (the routing fit changed)"
+
+  /** The streaming IVF store's [[Dedup.StoreFormat]] under `model`. */
+  private def ivfFormat(model: IvfModel, embCol: String): Dedup.StoreFormat =
+    Dedup.StoreFormat("ivf_sig", ivfModelSig(model), ivfStale,
+      Seq("list_id"), ivfStore(model, _, embCol))
+
   /** The PERSISTABLE IVF store: [[ivfAssign]] output + `ivf_sig`, the
     * routing-fit fingerprint stamped per row — write partitioned by
     * `list_id`. The token is what turns "this store looks plausible" into
@@ -941,9 +951,7 @@ object AnnIndex {
     requireBatchStore(store, s"ivfRefresh($storeDir)")
     requireStoreSig(store, "ivf_sig",
       ivfModelSig(model), allowEmpty = false,
-      what = s"ivfRefresh($storeDir)",
-      staleDesc = "IVF store — ivf_sig does not match this model's " +
-        "centroids (the routing fit changed)")
+      what = s"ivfRefresh($storeDir)", staleDesc = ivfStale)
     ivfStore(model, newBatch, embCol)
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy("list_id").parquet(storeDir)
@@ -956,9 +964,7 @@ object AnnIndex {
     * serving-store family). */
   def seedIvfIngestStore(model: IvfModel, corpus: DataFrame, embCol: String,
                          storeDir: String): Unit =
-    ivfStore(model, corpus, embCol)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch", "list_id").parquet(storeDir)
+    Dedup.seedIngestStore(ivfFormat(model, embCol), corpus, storeDir)
 
   /** One replay-idempotent micro-batch into a streaming IVF store — the
     * APPEND-ONLY shape of
@@ -980,10 +986,8 @@ object AnnIndex {
                           storeDir: String, batchId: Long,
                           batch: DataFrame, embCol: String): Unit =
     Dedup.storeIngestBatch(spark, storeDir, batchId,
-      "ivf_sig", ivfModelSig(model), "ivfStoreIngestBatch",
-      staleDesc = "IVF store — ivf_sig does not match this model's " +
-        "centroids (the routing fit changed)",
-      ivfStore(model, batch, embCol), pairsMine = None, Seq("list_id"))
+      ivfFormat(model, embCol), "ivfStoreIngestBatch", batch,
+      pairsMine = None)
 
   /** IVF top-k: route the query to its `nProbe` nearest centroids, scan only
     * those lists, exact cosine re-rank. `nProbe = nLists` degenerates to
@@ -1049,8 +1053,7 @@ object AnnIndex {
     if (!assigned.columns.contains("ivf_sig")) sim
     else sim + coalesce(assert_true(
       col("ivf_sig") === lit(ivfModelSig(model)),
-      lit("stale IVF store: ivf_sig does not match this model's " +
-        "centroids — the routing fit changed; rebuild the store"))
+      lit(s"stale $ivfStale; rebuild the store"))
       .cast("double"), lit(0.0))
 
   /** [[ivfTopK]] over a PRE-ASSIGNED corpus (the persisted index build —
@@ -1130,9 +1133,7 @@ object AnnIndex {
                      k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     requireStoreSig(store, "ivf_sig", ivfModelSig(model), allowEmpty = true,
-      what = "ivfJoinIndexed",
-      staleDesc = "IVF store — ivf_sig does not match this model's " +
-        "centroids (the routing fit changed)")
+      what = "ivfJoinIndexed", staleDesc = ivfStale)
     val q = queries.filter(col(qEmbCol).isNotNull)
       .select(col(qIdCol).as("query_id"),
         col(qEmbCol).cast("array<double>").as("__qe"))

@@ -76,6 +76,22 @@ object Dedup {
       .filter(col("__n_docs") > maxBucket)
       .drop("__n_docs")
 
+  /** The mega-bucket cap every capped join here applies: `rows` minus
+    * those whose `keys` bucket holds more than `maxBucket` rows of
+    * `population` (a left-anti join against the broadcast
+    * [[oversizedKeys]], null-safe like every key compare here). Buckets
+    * at or under the cap are untouched; `Int.MaxValue` is no cap. */
+  private def dropOversized(rows: DataFrame, population: DataFrame,
+                            keys: Seq[String], maxBucket: Int): DataFrame =
+    if (maxBucket == Int.MaxValue) rows
+    else {
+      val over = oversizedKeys(population, keys, maxBucket)
+        .select(keys.map(c => col(c).as(s"__over_$c")): _*)
+      rows.join(broadcast(over),
+        keys.map(c => col(c) <=> col(s"__over_$c")).reduce(_ && _),
+        "left_anti")
+    }
+
   /** Generic block-key bucket census — the drop-audit behind every
     * `maxBucket` cap here: one row per distinct `joinCols` key with its
     * bucket size, largest first. Run it before committing a cap to see
@@ -127,15 +143,7 @@ object Dedup {
     // keys (null text) now bucket together instead of never matching —
     // their pairs carry null similarity and every caller's threshold
     // drops them, so no survivor can differ.
-    val bounded =
-      if (maxBucket == Int.MaxValue) sigs
-      else {
-        val over = oversizedKeys(sigs, joinCols, maxBucket)
-          .select(joinCols.map(c => col(c).as(s"__over_$c")): _*)
-        val dropCond = joinCols.map(c => col(c) <=> col(s"__over_$c"))
-          .reduce(_ && _)
-        sigs.join(broadcast(over), dropCond, "left_anti")
-      }
+    val bounded = dropOversized(sigs, sigs, joinCols, maxBucket)
     // shuffle_hash, never broadcast: both sides of this self-join are the
     // whole corpus, and the signature projections feeding it are UDF-heavy —
     // a broadcast build would evaluate one full side single-threaded on the
@@ -159,6 +167,102 @@ object Dedup {
       .select(cols.map(c => col(s"a.$c").as("a_" + c)) ++
         cols.map(c => col(s"b.$c").as("b_" + c)): _*)
   }
+
+  /** One dedup face's persisted store format, spelled once: the token
+    * column, the token, the stale text (the token gate's mismatch
+    * description), the partition columns and the batch's index-row
+    * builder. Every step that touches the face's store reads it — the
+    * batch refresh ([[refreshStore]]), the streaming seeder
+    * ([[seedIngestStore]]), the streaming micro-batch
+    * ([[storeIngestBatch]]) and the incremental mine
+    * ([[incrementalJoin]]) — so no step can drift from another. The
+    * serving stores' streaming faces ([[AnnIndex.ivfStoreIngestBatch]],
+    * [[Quantize.pqStoreIngestBatch]]) spell theirs the same way. */
+  private[operators] final case class StoreFormat(
+      sigCol: String, sig: Long, stale: String,
+      partitionCols: Seq[String], index: DataFrame => DataFrame)
+
+  /** The incremental mine behind [[minhashIncrementalPairs]],
+    * [[hammingIncrementalPairs]] and [[embeddingIncrementalPairs]]:
+    * candidate pairs INVOLVING a new batch — new×corpus and new×new,
+    * never corpus×corpus — against the face's prebuilt persisted index
+    * (`f.index` output). This is what makes continuous ingest dedup
+    * affordable: per-batch cost is |batch| × bucket-mates, independent
+    * of corpus size, where a from-scratch re-run grows with the corpus
+    * square. The contract, for every face:
+    *
+    *  - Cap population: the `maxBucket` cap counts the FULL post-batch
+    *    bucket (index ∪ batch) and drops it from BOTH sides
+    *    ([[dropOversized]]), so a bucket the batch pushes over the cap
+    *    drops exactly as a capped from-scratch run over old ∪ new would
+    *    drop it: increment = that run restricted to pairs touching the
+    *    batch (ModulesSpec pins it per face, with a bucket only the
+    *    batch pushes over the cap, plus randomized trials). Buckets at
+    *    the cap are untouched. Cap-dropped increments recover their
+    *    connectivity from the periodic offline salvage sweep over the
+    *    full store (the `*Salvage*` operators, on the audit cadence) or,
+    *    in flight, from the streaming star tier (SCALE.md § "Continuous
+    *    ingest").
+    *  - Per-row geometry assert: a missing `f.sigCol` column is refused
+    *    up front, and the token assert is folded into the last join key
+    *    (zero added, or an empty string appended) — the load-bearing
+    *    column — so it runs once per index row at key-hash time and
+    *    fires even when nothing joins. An index built under another
+    *    geometry would otherwise just never match and silently miss
+    *    every cross pair; a per-candidate assert never fires when no
+    *    keys join. The `<=>` compare makes a NULL token (a stamped ∪ raw
+    *    union) fail the same assert.
+    *  - Null-safe keys: every key compare is `<=>`, the [[pairJoin]]
+    *    rationale — `=` makes Spark infer isnotnull(key) and push it
+    *    below the signature projection, re-evaluating the UDF chain once
+    *    per key per branch.
+    *  - `shuffle_hash`: both sides are keyed by the block and carry
+    *    UDF-built columns; a broadcast build would evaluate one side
+    *    single-threaded on the driver, and hash beats merge because the
+    *    block key needs no sort.
+    *
+    * Output: (a_id, b_id, the a_/b_ `payload` columns, the a-side
+    * `keys`) with a_id ≠ b_id, a new×new pair in both orientations; each
+    * face verifies, then collapses orientations with [[normalizedPairs]]. */
+  private def incrementalJoin(name: String, f: StoreFormat,
+                              batch: DataFrame, corpusIndex: DataFrame,
+                              keys: Seq[String], payload: Seq[String],
+                              maxBucket: Int): DataFrame = {
+    require(corpusIndex.columns.contains(f.sigCol),
+      s"$name carries no ${f.sigCol} token — rebuild it with its index " +
+        "builder before mining increments against it")
+    val rows = f.index(batch)
+    val cols = ("id" +: payload) ++ keys
+    val guard = assert_true(col(f.sigCol) <=> lit(f.sig),
+      lit(s"stale $name (or unstamped rows — a NULL ${f.sigCol} from a " +
+        s"stamped ∪ raw union): ${f.stale}; rebuild the index"))
+    val key = keys.last
+    val checked =
+      if (rows.schema(key).dataType == org.apache.spark.sql.types.StringType)
+        concat(col(key), coalesce(guard.cast("string"), lit("")))
+      else col(key) + coalesce(guard.cast("long"), lit(0L))
+    val all = corpusIndex.select((cols :+ f.sigCol).map(col): _*)
+      .unionByName(rows.select((cols :+ f.sigCol).map(col): _*))
+      .select(cols.map(c => if (c == key) checked.as(c) else col(c)): _*)
+    def side(df: DataFrame, p: String, keyAs: String => String) =
+      dropOversized(df, all, keys, maxBucket)
+        .select((col("id").as(s"${p}_id") +:
+          payload.map(c => col(c).as(s"${p}_$c"))) ++
+          keys.map(c => col(c).as(keyAs(c))): _*)
+        .hint("shuffle_hash")
+    side(rows.select(cols.map(col): _*), "a", identity)
+      .join(side(all, "b", "__b_" + _),
+        keys.map(c => col(c) <=> col(s"__b_$c")).reduce(_ && _))
+      .filter(col("a_id") =!= col("b_id"))
+  }
+
+  /** `pairs` with each pair's ids ordered a_id < b_id, plus `extra`
+    * columns, deduplicated: a new×new pair [[incrementalJoin]] finds from
+    * both orientations lands once (every face's `extra` is symmetric). */
+  private def normalizedPairs(pairs: DataFrame, extra: Column*): DataFrame =
+    pairs.select((least(col("a_id"), col("b_id")).as("a_id") +:
+        greatest(col("a_id"), col("b_id")).as("b_id") +: extra): _*)
+      .distinct()
 
   /** Near-duplicate pairs by word n-gram Jaccard similarity ≥ `threshold`,
     * compared only within equal `blockCol` (blocking bounds the quadratic).
@@ -573,84 +677,33 @@ object Dedup {
       .withColumn("band_sig", lit(bandSig(k, bands, shingleN)))
 
   /** The band-geometry token stamped by [[minhashBandIndex]] and
-    * verified by [[minhashIncrementalPairs]] / [[minhashIndexRefresh]]. */
+    * verified through [[minhashFormat]]. */
   private[graft] def bandSig(k: Int, bands: Int, shingleN: Int): Long =
     k.toLong * 1000000L + bands.toLong * 1000L + shingleN
 
-  /** Incremental near-dup mining: candidate pairs INVOLVING a new batch —
-    * new×corpus and new×new, never corpus×corpus — against a prebuilt
-    * [[minhashBandIndex]]. This is what makes continuous ingest dedup
-    * affordable: per-batch cost is |batch| × bucket-mates, independent of
-    * corpus size, where a full [[minhashLshPairs]] re-run grows with the
-    * corpus square. Pair ids are normalized (a_id < b_id) so new×new pairs
-    * found from both orientations and corpus-id-smaller pairs all land
-    * once, with the same n_bands a full run would report.
-    */
+  /** The minhash band store's [[StoreFormat]]. */
+  private def minhashFormat(keyCol: String, textCol: String,
+                            k: Int, bands: Int, shingleN: Int): StoreFormat =
+    StoreFormat("band_sig", bandSig(k, bands, shingleN),
+      s"minhash band index — band_sig does not match " +
+        s"k=$k/bands=$bands/shingleN=$shingleN",
+      Seq("band_idx"),
+      minhashBandIndex(_, keyCol, textCol, k, bands, shingleN))
+
+  /** Incremental MinHash mining: candidate pairs involving `newDocs`
+    * against a prebuilt [[minhashBandIndex]], under the
+    * [[incrementalJoin]] contract, with the same n_bands a full
+    * [[minhashLshPairs]] run reports (each (pair, band) counted once). */
   def minhashIncrementalPairs(newDocs: DataFrame, corpusIndex: DataFrame,
                               keyCol: String, textCol: String,
                               k: Int, bands: Int, shingleN: Int,
-                              maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(corpusIndex.columns.contains("band_sig"),
-      "minhash band index carries no band_sig token — rebuild it with " +
-        "minhashBandIndex before mining increments against it")
-    val nb = minhashBanded(newDocs, keyCol, textCol, k, bands, shingleN,
-      carryHashes = false)
-    // the geometry assert rides the load-bearing band_key JOIN KEY,
-    // evaluated once per index row at key-hash time (the
-    // [[embeddingIncrementalPairs]]/[[requireSigned]] discipline): an
-    // index banded under different (k, bands, shingleN) would otherwise
-    // just never match and silently miss every cross pair — a
-    // candidate-page assert never fires when the keys never join.
-    // band_key is a string, so the zero-or-throw guard concatenates an
-    // empty string instead of adding zero. The <=> equality makes a NULL
-    // band_sig (a stamped ∪ raw union) fail the SAME assert — named in
-    // the message so the operator chases the right rebuild cause
-    val checked = corpusIndex.select(col("id"), col("band_idx"),
-      concat(col("band_key"),
-        coalesce(assert_true(
-          col("band_sig") <=> lit(bandSig(k, bands, shingleN)),
-          lit(s"stale minhash band index (or unstamped rows — a NULL " +
-            s"band_sig from a stamped ∪ raw union): band_sig does not " +
-            s"match k=$k/bands=$bands/shingleN=$shingleN; rebuild the " +
-            "index")).cast("string"),
-          lit(""))).as("band_key"))
-    // the cap population is the FULL post-batch bucket (index ∪ batch):
-    // a bucket pushed over the cap by this batch is dropped from both
-    // sides, matching what a from-scratch capped run over old+new would do
-    val all = checked.unionByName(
-      nb.select(col("id"), col("band_idx"), col("band_key")))
-    // null-safe key comparisons throughout, same rationale as [[pairJoin]]:
-    // `=` (or a name-based join) makes Spark push inferred isnotnull(key)
-    // below the banding projection and re-evaluate the signature UDF chain
-    // once per key per branch
-    val keys = Seq("band_idx", "band_key")
-    def bound(df: DataFrame): DataFrame =
-      if (maxBucket == Int.MaxValue) df
-      else {
-        val over = oversizedKeys(all, keys, maxBucket)
-          .select(keys.map(c => col(c).as(s"__over_$c")): _*)
-        df.join(broadcast(over),
-          keys.map(c => col(c) <=> col(s"__over_$c")).reduce(_ && _),
-          "left_anti")
-      }
-    val a = bound(nb)
-      .select(col("id").as("a_id"), col("band_idx"), col("band_key"))
-      .hint("shuffle_hash")
-    val b = bound(all)
-      .select(col("id").as("b_id"), col("band_idx").as("__b_band_idx"),
-        col("band_key").as("__b_band_key"))
-      .hint("shuffle_hash")
-    a.join(b, col("band_idx") <=> col("__b_band_idx") &&
-        col("band_key") <=> col("__b_band_key"))
-      .filter(col("a_id") =!= col("b_id"))
-      // normalize orientation; a new×new pair arrives from both sides and
-      // (band_idx is unique per doc) collapses on the distinct
-      .select(least(col("a_id"), col("b_id")).as("a_id"),
-        greatest(col("a_id"), col("b_id")).as("b_id"), col("band_idx"))
-      .distinct()
+                              maxBucket: Int = Int.MaxValue): DataFrame =
+    normalizedPairs(incrementalJoin("minhash band index",
+        minhashFormat(keyCol, textCol, k, bands, shingleN), newDocs,
+        corpusIndex, Seq("band_idx", "band_key"), Nil, maxBucket),
+        col("band_idx"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("n_bands"))
-  }
 
   /** The full two-stage near-dup pattern in one operator: MinHash LSH
     * proposes candidate pairs, exact n-gram-shingle Jaccard verifies them
@@ -943,9 +996,16 @@ object Dedup {
   }
 
   /** The chunk-geometry token stamped by [[hammingChunkIndex]] and
-    * verified by [[hammingIncrementalPairs]]. */
+    * verified through [[hammingFormat]]. */
   private[graft] def chunkSig(bits: Int, chunks: Int): Long =
     bits.toLong * 100000L + chunks
+
+  /** The hamming chunk store's [[StoreFormat]]. */
+  private def hammingFormat(idCol: String, hashCol: String,
+                            bits: Int, chunks: Int): StoreFormat =
+    StoreFormat("chunk_sig", chunkSig(bits, chunks),
+      s"hamming index — chunk_sig does not match bits=$bits/chunks=$chunks",
+      Seq("chunk_idx"), hammingChunkIndex(_, idCol, hashCol, bits, chunks))
 
   /** Low-`w`-bits mask, safe at w=64 where `(1L << 64) - 1` silently
     * wraps to 0 (a JVM long shift is mod 64) — the full-width chunk of a
@@ -954,73 +1014,23 @@ object Dedup {
     if (w >= 64) -1L else (1L << w) - 1L
 
   /** Incremental perceptual near-dup mining: hamming ≤ `maxHamming`
-    * pairs INVOLVING a new fingerprint batch — new×corpus and new×new,
-    * never corpus×corpus — against a prebuilt [[hammingChunkIndex]],
-    * mirroring [[minhashIncrementalPairs]] for the hamming family: a
-    * daily image/audio/video ingest batch costs |batch| × bucket-mates,
-    * independent of corpus size, where a full [[hammingPairs]] re-run
-    * grows with the corpus square. The `maxBucket` cap population is the
-    * FULL post-batch bucket (index ∪ batch), so a bucket the batch
-    * pushes over the cap drops from both sides — exactly what a capped
-    * from-scratch run over old+new would do (asserted in ModulesSpec).
-    * Pair ids are normalized (a_id < b_id); hamming is symmetric, so the
-    * distinct collapses both orientations of a new×new pair. */
+    * pairs involving a new fingerprint batch against a prebuilt
+    * [[hammingChunkIndex]], under the [[incrementalJoin]] contract — a
+    * daily image/audio/video ingest batch costs |batch| × bucket-mates
+    * where a full [[hammingPairs]] re-run grows with the corpus square.
+    * Hamming is symmetric, so it is computed before the orientation
+    * swap. */
   def hammingIncrementalPairs(newDf: DataFrame, corpusIndex: DataFrame,
                               idCol: String, hashCol: String,
                               bits: Int, chunks: Int, maxHamming: Int,
                               maxBucket: Int = Int.MaxValue): DataFrame = {
     require(maxHamming < chunks, "pigeonhole needs maxHamming < chunks")
-    // a legacy index without the token cannot be geometry-checked — and a
-    // geometry mismatch is SILENT (foreign chunk_vals never match, every
-    // cross pair just vanishes), so refuse loudly, the pqRefresh stance
-    require(corpusIndex.columns.contains("chunk_sig"),
-      "hamming index carries no chunk_sig token — rebuild it with " +
-        "hammingChunkIndex before mining increments against it")
-    val nb = hammingChunkIndex(newDf, idCol, hashCol, bits, chunks)
-    // the geometry assert rides the load-bearing chunk_val JOIN KEY, so
-    // it evaluates once per corpus row at key-hash time — an earlier
-    // per-candidate-pair form went silent exactly when the mismatch
-    // mattered most (foreign chunk_vals never match → zero pairs → zero
-    // assert evaluations; ADVICE r9, the requireSigned fix's sibling)
-    val all = corpusIndex.unionByName(nb)
-      .select(col("id"), col("fp"), col("chunk_idx"),
-        (col("chunk_val") +
-          coalesce(assert_true(col("chunk_sig") === lit(chunkSig(bits, chunks)),
-            lit(s"stale hamming index: chunk_sig does not match " +
-              s"bits=$bits/chunks=$chunks — the chunk geometry changed; " +
-              "rebuild the index")).cast("long"), lit(0L))).as("chunk_val"),
-        col("chunk_sig"))
-    // null-safe key comparisons throughout, same rationale as [[pairJoin]]
-    val keys = Seq("chunk_idx", "chunk_val")
-    def bound(df: DataFrame): DataFrame =
-      if (maxBucket == Int.MaxValue) df
-      else {
-        val over = oversizedKeys(all, keys, maxBucket)
-          .select(keys.map(c => col(c).as(s"__over_$c")): _*)
-        df.join(broadcast(over),
-          keys.map(c => col(c) <=> col(s"__over_$c")).reduce(_ && _),
-          "left_anti")
-      }
-    val a = bound(nb)
-      .select(col("id").as("a_id"), col("fp").as("a_fp"),
-        col("chunk_idx"), col("chunk_val"))
-      .hint("shuffle_hash")
-    val b = bound(all)
-      .select(col("id").as("b_id"), col("fp").as("b_fp"),
-        col("chunk_idx").as("__b_chunk_idx"),
-        col("chunk_val").as("__b_chunk_val"))
-      .hint("shuffle_hash")
-    a.join(b, col("chunk_idx") <=> col("__b_chunk_idx") &&
-        col("chunk_val") <=> col("__b_chunk_val"))
-      .filter(col("a_id") =!= col("b_id"))
-      // hamming before the orientation swap: it is symmetric, so the
-      // normalized pair carries the same distance from either side
+    normalizedPairs(incrementalJoin("hamming index",
+        hammingFormat(idCol, hashCol, bits, chunks), newDf, corpusIndex,
+        Seq("chunk_idx", "chunk_val"), Seq("fp"), maxBucket)
       .withColumn("hamming",
         bit_count(col("a_fp").bitwiseXOR(col("b_fp"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select(least(col("a_id"), col("b_id")).as("a_id"),
-        greatest(col("a_id"), col("b_id")).as("b_id"), col("hamming"))
-      .distinct()
+      .filter(col("hamming") <= maxHamming), col("hamming"))
   }
 
   def simhashPairs(df: DataFrame, keyCol: String, textCol: String,
@@ -1350,92 +1360,37 @@ object Dedup {
         col(embCol).cast("array<double>").as("emb"))
       .withColumn("nrm", graft.functions.vectors.l2Norm(col("emb")))
       .withColumn("bucket", AnnIndex.wideBucketExpr("emb", dim, planes))
-      .withColumn("emb_sig", lit(embSig(dim, planes)))
+      .withColumn("emb_sig", lit(AnnIndex.wideStoreSig(dim, planes)))
 
-  /** The bucket-geometry token stamped by [[embeddingBucketIndex]] and
-    * verified by [[embeddingIncrementalPairs]] and the serving path
-    * ([[AnnIndex.annTopKWideIndexed]]) — one definition
-    * ([[AnnIndex.wideStoreSig]]), so builder and every consumer can
-    * never disagree on the encoding. */
-  private def embSig(dim: Int, planes: Int): Long =
-    AnnIndex.wideStoreSig(dim, planes)
+  /** The embedding bucket store's [[StoreFormat]]: the wide-family
+    * token and stale text the serving faces verify too
+    * ([[AnnIndex.wideStoreSig]], [[AnnIndex.wideStale]]), so builder and
+    * every consumer can never disagree on the encoding. */
+  private def embeddingFormat(keyCol: String, embCol: String,
+                              dim: Int, planes: Int): StoreFormat =
+    StoreFormat("emb_sig", AnnIndex.wideStoreSig(dim, planes),
+      AnnIndex.wideStale(dim, planes), Seq("bucket"),
+      embeddingBucketIndex(_, keyCol, embCol, dim, planes))
 
   /** Incremental embedding near-dup mining: cosine ≥ `threshold` pairs
-    * INVOLVING a new vector batch — new×corpus and new×new, never
-    * corpus×corpus — against a prebuilt [[embeddingBucketIndex]],
-    * completing the incremental matrix ([[minhashIncrementalPairs]] for
-    * text bands, [[hammingIncrementalPairs]] for fingerprint chunks,
-    * now the vector face): a daily embedding ingest costs
-    * |batch| × bucket-mates, independent of corpus size, where a full
-    * [[embeddingPairs]] re-run grows with the corpus square. The
-    * `maxBucket` cap population is the FULL post-batch bucket
-    * (index ∪ batch), so a bucket the batch pushes over the cap drops
-    * from both sides — exactly what a capped from-scratch run over
-    * old+new would do (asserted in ModulesSpec). The geometry assert
-    * rides the load-bearing `bucket` join key, evaluated once per
-    * corpus row at key-hash time — a mismatched store (different
-    * planes, or a legacy-family bucketing) would otherwise just never
-    * match and silently miss every cross pair. Null embeddings carry
-    * null buckets, pair only with each other under the null-safe key,
-    * and their null cosine never clears a positive threshold — the
-    * [[embeddingPairs]] discipline. Pair ids are normalized
-    * (a_id < b_id); cosine is symmetric, so the distinct collapses
-    * both orientations of a new×new pair.
-    *
-    * Cap-dropped increments are NOT lost forever: like its minhash and
-    * hamming siblings, the incremental mine applies the cap only (the
-    * flat per-batch cost bound is the whole point); a batch row landing
-    * in a mega-bucket recovers its connectivity from the PERIODIC
-    * offline salvage sweep over the full store
-    * ([[embeddingSalvageEdges]] — run on the audit cadence, not per
-    * batch) or, in flight, from the streaming star tier. Capped
-    * increments per batch + salvage on a slow cadence is the documented
-    * continuous-ingest architecture (SCALE.md item 3b). */
+    * involving a new vector batch against a prebuilt
+    * [[embeddingBucketIndex]], under the [[incrementalJoin]] contract — a
+    * daily embedding ingest costs |batch| × bucket-mates where a full
+    * [[embeddingPairs]] re-run grows with the corpus square. Null
+    * embeddings carry null buckets, pair only with each other under the
+    * null-safe key, and their null cosine never clears a positive
+    * threshold — the [[embeddingPairs]] discipline. Cosine is symmetric,
+    * so it is computed before the orientation swap. */
   def embeddingIncrementalPairs(newDf: DataFrame, corpusIndex: DataFrame,
                                 keyCol: String, embCol: String,
                                 dim: Int, planes: Int, threshold: Double,
-                                maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(corpusIndex.columns.contains("emb_sig"),
-      "embedding bucket index carries no emb_sig token — rebuild it with " +
-        "embeddingBucketIndex before mining increments against it")
-    val nb = embeddingBucketIndex(newDf, keyCol, embCol, dim, planes)
-    val all = corpusIndex.unionByName(nb)
-      .select(col("id"), col("emb"), col("nrm"),
-        (col("bucket") +
-          coalesce(assert_true(col("emb_sig") === lit(embSig(dim, planes)),
-            lit(s"stale embedding bucket index: emb_sig does not match the " +
-              s"wide plane family at dim=$dim/planes=$planes — the bucket " +
-              "geometry changed; rebuild the index")).cast("long"),
-            lit(0L))).as("bucket"))
-    // null-safe key comparisons throughout, same rationale as [[pairJoin]]
-    def bound(df: DataFrame): DataFrame =
-      if (maxBucket == Int.MaxValue) df
-      else {
-        val over = oversizedKeys(all, Seq("bucket"), maxBucket)
-          .select(col("bucket").as("__over_bucket"))
-        df.join(broadcast(over), col("bucket") <=> col("__over_bucket"),
-          "left_anti")
-      }
-    val a = bound(nb.select(col("id"), col("emb"), col("nrm"), col("bucket")))
-      .select(col("id").as("a_id"), col("emb").as("a_emb"),
-        col("nrm").as("a_nrm"), col("bucket"))
-      .hint("shuffle_hash")
-    val b = bound(all)
-      .select(col("id").as("b_id"), col("emb").as("b_emb"),
-        col("nrm").as("b_nrm"), col("bucket").as("__b_bucket"))
-      .hint("shuffle_hash")
-    a.join(b, col("bucket") <=> col("__b_bucket"))
-      .filter(col("a_id") =!= col("b_id"))
-      // cosine before the orientation swap: symmetric, so the normalized
-      // pair carries the same value from either side
+                                maxBucket: Int = Int.MaxValue): DataFrame =
+    normalizedPairs(incrementalJoin("embedding bucket index",
+        embeddingFormat(keyCol, embCol, dim, planes), newDf, corpusIndex,
+        Seq("bucket"), Seq("emb", "nrm"), maxBucket)
       .withColumn("cosine", stagedCosine(col("a_emb"), col("b_emb"),
         col("a_nrm"), col("b_nrm")))
-      .filter(col("cosine") >= threshold)
-      .select(least(col("a_id"), col("b_id")).as("a_id"),
-        greatest(col("a_id"), col("b_id")).as("b_id"),
-        round(col("cosine"), 4).as("cosine"))
-      .distinct()
-  }
+      .filter(col("cosine") >= threshold), round(col("cosine"), 4).as("cosine"))
 
   /** Incremental EMBEDDING index maintenance — [[AnnIndex.ivfRefresh]]'s
     * stance on the wide-bucket store: bucket ONLY the new batch at the
@@ -1455,34 +1410,31 @@ object Dedup {
   def embeddingIndexRefresh(spark: org.apache.spark.sql.SparkSession,
                             storeDir: String, newBatch: DataFrame,
                             keyCol: String, embCol: String,
-                            dim: Int, planes: Int): Unit = {
-    refreshStore(spark, storeDir, "emb_sig", embSig(dim, planes),
-      "embeddingIndexRefresh",
-      staleDesc = "wide-family store — emb_sig does not match " +
-        s"dim=$dim/planes=$planes",
-      embeddingBucketIndex(newBatch, keyCol, embCol, dim, planes), "bucket")
-  }
+                            dim: Int, planes: Int): Unit =
+    refreshStore(spark, storeDir, newBatch,
+      embeddingFormat(keyCol, embCol, dim, planes), "embeddingIndexRefresh")
 
   /** The shared maintenance-time token gate + append behind every store
     * refresh ([[embeddingIndexRefresh]], [[hammingIndexRefresh]],
-    * [[minhashIndexRefresh]]) — the gate itself is
-    * [[AnnIndex.requireStoreSig]], the SAME body the serving faces run,
-    * so a new check lands in one place for all five consumers; this
-    * wrapper only adds the refuse-empty stance (rebuild, don't grow an
-    * unwitnessed geometry) and the append. Refusal happens BEFORE a row
-    * is written. */
+    * [[minhashIndexRefresh]]), over the face's [[StoreFormat]] — the
+    * gate itself is [[AnnIndex.requireStoreSig]], the SAME body the
+    * serving faces run, so a new check lands in one place for all five
+    * consumers; this wrapper only adds the refuse-empty stance (rebuild,
+    * don't grow an unwitnessed geometry) and the append. The batch's
+    * index rows are built first (so a builder's own geometry refusal
+    * comes first); refusal happens BEFORE a row is written. */
   private def refreshStore(spark: org.apache.spark.sql.SparkSession,
-                           storeDir: String, sigCol: String, sig: Long,
-                           what: String, staleDesc: String,
-                           newRows: DataFrame, partitionCol: String): Unit = {
+                           storeDir: String, newBatch: DataFrame,
+                           f: StoreFormat, what: String): Unit = {
+    val newRows = f.index(newBatch)
     val store = spark.read.parquet(storeDir)
     // a LEDGERED (streaming) store is refused before the token check —
     // a batch append without the ledger level corrupts its layout
     AnnIndex.requireBatchStore(store, s"$what($storeDir)")
-    AnnIndex.requireStoreSig(store, sigCol, sig,
-      allowEmpty = false, what = s"$what($storeDir)", staleDesc = staleDesc)
+    AnnIndex.requireStoreSig(store, f.sigCol, f.sig,
+      allowEmpty = false, what = s"$what($storeDir)", staleDesc = f.stale)
     newRows.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy(partitionCol).parquet(storeDir)
+      .partitionBy(f.partitionCols: _*).parquet(storeDir)
   }
 
   /** Incremental HAMMING index maintenance — [[embeddingIndexRefresh]]'s
@@ -1499,11 +1451,8 @@ object Dedup {
                           storeDir: String, newBatch: DataFrame,
                           idCol: String, hashCol: String,
                           bits: Int, chunks: Int): Unit =
-    refreshStore(spark, storeDir, "chunk_sig", chunkSig(bits, chunks),
-      "hammingIndexRefresh",
-      staleDesc = s"hamming chunk index — chunk_sig does not match " +
-        s"bits=$bits/chunks=$chunks",
-      hammingChunkIndex(newBatch, idCol, hashCol, bits, chunks), "chunk_idx")
+    refreshStore(spark, storeDir, newBatch,
+      hammingFormat(idCol, hashCol, bits, chunks), "hammingIndexRefresh")
 
   /** Incremental MINHASH BAND index maintenance — the text face's
     * token-gated append onto a persisted [[minhashBandIndex]] (written
@@ -1513,12 +1462,9 @@ object Dedup {
                           storeDir: String, newDocs: DataFrame,
                           keyCol: String, textCol: String,
                           k: Int, bands: Int, shingleN: Int): Unit =
-    refreshStore(spark, storeDir, "band_sig", bandSig(k, bands, shingleN),
-      "minhashIndexRefresh",
-      staleDesc = s"minhash band index — band_sig does not match " +
-        s"k=$k/bands=$bands/shingleN=$shingleN",
-      minhashBandIndex(newDocs, keyCol, textCol, k, bands, shingleN),
-      "band_idx")
+    refreshStore(spark, storeDir, newDocs,
+      minhashFormat(keyCol, textCol, k, bands, shingleN),
+      "minhashIndexRefresh")
 
   /** Seed a STREAMING embedding store: the [[embeddingBucketIndex]]
     * layout plus one extra leading partition level — `ingest_batch`, the
@@ -1532,9 +1478,17 @@ object Dedup {
   def seedEmbedIngestStore(corpus: DataFrame, storeDir: String,
                            keyCol: String, embCol: String,
                            dim: Int, planes: Int): Unit =
-    embeddingBucketIndex(corpus, keyCol, embCol, dim, planes)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch", "bucket").parquet(storeDir)
+    seedIngestStore(embeddingFormat(keyCol, embCol, dim, planes), corpus,
+      storeDir)
+
+  /** The streaming seeders' one body, over the face's [[StoreFormat]]:
+    * the face's index layout under an `ingest_batch=-1` ledger
+    * partition. */
+  private[operators] def seedIngestStore(f: StoreFormat, corpus: DataFrame,
+                                         storeDir: String): Unit =
+    f.index(corpus).withColumn("ingest_batch", lit(-1L))
+      .write.partitionBy(("ingest_batch" +: f.partitionCols): _*)
+      .parquet(storeDir)
 
   /** [[seedEmbedIngestStore]] for the hamming face: the
     * [[hammingChunkIndex]] layout under an `ingest_batch=-1` ledger
@@ -1542,9 +1496,8 @@ object Dedup {
   def seedHammingIngestStore(corpus: DataFrame, storeDir: String,
                              idCol: String, hashCol: String,
                              bits: Int, chunks: Int): Unit =
-    hammingChunkIndex(corpus, idCol, hashCol, bits, chunks)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch", "chunk_idx").parquet(storeDir)
+    seedIngestStore(hammingFormat(idCol, hashCol, bits, chunks), corpus,
+      storeDir)
 
   /** One REPLAY-IDEMPOTENT micro-batch against a streaming embedding
     * store: token gate → incremental mine → two deterministic partition
@@ -1588,21 +1541,11 @@ object Dedup {
                             batchId: Long, batch: DataFrame,
                             keyCol: String, embCol: String,
                             dim: Int, planes: Int, threshold: Double,
-                            maxBucket: Int = Int.MaxValue): Unit = {
-    // stage the micro-batch ONCE: the mine and the store write are two
-    // separate jobs, and each would otherwise re-pull the batch from the
-    // streaming source (expensive on wide/remote micro-batches, and a
-    // replay hazard if the source re-read were ever non-deterministic)
-    val staged = batch.localCheckpoint()
+                            maxBucket: Int = Int.MaxValue): Unit =
     storeIngestBatch(spark, storeDir, batchId,
-      "emb_sig", embSig(dim, planes), "embedStoreIngestBatch",
-      staleDesc = "wide-family store — emb_sig does not match " +
-        s"dim=$dim/planes=$planes",
-      embeddingBucketIndex(staged, keyCol, embCol, dim, planes),
-      Some((pairsDir, corpus => embeddingIncrementalPairs(staged, corpus,
-        keyCol, embCol, dim, planes, threshold, maxBucket))),
-      Seq("bucket"))
-  }
+      embeddingFormat(keyCol, embCol, dim, planes), "embedStoreIngestBatch",
+      batch, Some((pairsDir, embeddingIncrementalPairs(_, _,
+        keyCol, embCol, dim, planes, threshold, maxBucket))))
 
   /** [[embedStoreIngestBatch]] on the HAMMING face: one replay-idempotent
     * micro-batch of fingerprints against a [[seedHammingIngestStore]]
@@ -1613,17 +1556,11 @@ object Dedup {
                               batchId: Long, batch: DataFrame,
                               idCol: String, hashCol: String,
                               bits: Int, chunks: Int, maxHamming: Int,
-                              maxBucket: Int = Int.MaxValue): Unit = {
-    val staged = batch.localCheckpoint() // one source read per micro-batch
+                              maxBucket: Int = Int.MaxValue): Unit =
     storeIngestBatch(spark, storeDir, batchId,
-      "chunk_sig", chunkSig(bits, chunks), "hammingStoreIngestBatch",
-      staleDesc = "hamming chunk index — chunk_sig does not match " +
-        s"bits=$bits/chunks=$chunks",
-      hammingChunkIndex(staged, idCol, hashCol, bits, chunks),
-      Some((pairsDir, corpus => hammingIncrementalPairs(staged, corpus,
-        idCol, hashCol, bits, chunks, maxHamming, maxBucket))),
-      Seq("chunk_idx"))
-  }
+      hammingFormat(idCol, hashCol, bits, chunks), "hammingStoreIngestBatch",
+      batch, Some((pairsDir, hammingIncrementalPairs(_, _,
+        idCol, hashCol, bits, chunks, maxHamming, maxBucket))))
 
   /** [[seedEmbedIngestStore]] for the minhash face: the
     * [[minhashBandIndex]] layout under an `ingest_batch=-1` ledger
@@ -1631,9 +1568,8 @@ object Dedup {
   def seedMinhashIngestStore(corpus: DataFrame, storeDir: String,
                              keyCol: String, textCol: String,
                              k: Int, bands: Int, shingleN: Int): Unit =
-    minhashBandIndex(corpus, keyCol, textCol, k, bands, shingleN)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch", "band_idx").parquet(storeDir)
+    seedIngestStore(minhashFormat(keyCol, textCol, k, bands, shingleN),
+      corpus, storeDir)
 
   /** [[embedStoreIngestBatch]] on the MINHASH face: one replay-idempotent
     * micro-batch of documents against a [[seedMinhashIngestStore]] store —
@@ -1645,50 +1581,13 @@ object Dedup {
                               batchId: Long, batch: DataFrame,
                               keyCol: String, textCol: String,
                               k: Int, bands: Int, shingleN: Int,
-                              maxBucket: Int = Int.MaxValue): Unit = {
-    val staged = batch.localCheckpoint() // one source read per micro-batch
+                              maxBucket: Int = Int.MaxValue): Unit =
     storeIngestBatch(spark, storeDir, batchId,
-      "band_sig", bandSig(k, bands, shingleN), "minhashStoreIngestBatch",
-      staleDesc = "minhash band index — band_sig does not match " +
-        s"k=$k/bands=$bands/shingleN=$shingleN",
-      minhashBandIndex(staged, keyCol, textCol, k, bands, shingleN),
-      Some((pairsDir, corpus => minhashIncrementalPairs(staged, corpus,
-        keyCol, textCol, k, bands, shingleN, maxBucket))),
-      Seq("band_idx"))
-  }
+      minhashFormat(keyCol, textCol, k, bands, shingleN),
+      "minhashStoreIngestBatch", batch, Some((pairsDir,
+        minhashIncrementalPairs(_, _, keyCol, textCol, k, bands, shingleN,
+          maxBucket))))
 
-  /** The shared replay-idempotent micro-batch body behind the streaming
-    * store writers ([[embedStoreIngestBatch]],
-    * [[hammingStoreIngestBatch]], [[minhashStoreIngestBatch]]) — one
-    * body, like [[refreshStore]] for
-    * the batch cadence, so the ledger discipline can never drift face by
-    * face — and shared with the APPEND-ONLY serving-store faces
-    * ([[AnnIndex.ivfStoreIngestBatch]], [[Quantize.pqStoreIngestBatch]]),
-    * which pass `pairsMine = None` (nothing to mine — the store IS the
-    * product). `indexRows` are the batch's pre-stamped index rows (no
-    * ledger column — it is stamped here, once); `pairsMine`'s function
-    * receives the pre-batch corpus at the canonical store schema and
-    * returns the pairs frame. The store write goes through
-    * `partitionOverwriteMode=dynamic`: mode Overwrite then replaces ONLY
-    * the partitions this batch writes — its own ledger slice — never the
-    * seed or sibling batches (pinned in ModulesSpec: a second batch
-    * leaves the first and the seed intact). The pairs slice is a plain
-    * whole-slice overwrite at its explicit `ingest_batch=<id>` path
-    * (same idempotency — rows are a pure function of the batch), with an
-    * EMPTY mine still landing one schema-bearing zero-row file so
-    * `pairsDir` is readable from the first micro-batch on (an all-zero
-    * dynamic overwrite commits no files, and a consumer's
-    * `read.parquet(pairsDir)` would fail schema inference on the
-    * common cold-start case of early batches with no near-dups).
-    *
-    * Cost stance: the gate runs TWO maintenance-time aggregates per
-    * micro-batch — the max-ledger pass (partition-column only: directory
-    * values, no data columns) and the shared [[AnnIndex.requireStoreSig]]
-    * stats pass (one long column). Folding them into one hand-rolled
-    * aggregate would fork the ONE shared gate body the token discipline
-    * rests on; the stress pair (SCALE.md stream_ingest_batch vs
-    * refresh_ingest_batch, which pays only the sig pass) measures the
-    * difference as inside host noise. */
   /** Order-free content fingerprint of a ledger slice — count plus
     * bit_xor(xxhash64(all columns)) — used by the replay/collision
     * check of [[storeIngestBatch]] AND the serve sink
@@ -1738,12 +1637,52 @@ object Dedup {
     }: _*)
   }
 
+  /** The shared replay-idempotent micro-batch body behind the streaming
+    * store writers ([[embedStoreIngestBatch]],
+    * [[hammingStoreIngestBatch]], [[minhashStoreIngestBatch]]) — one
+    * body over the face's [[StoreFormat]], like [[refreshStore]] for the
+    * batch cadence, so the ledger discipline can never drift face by
+    * face — and shared with the APPEND-ONLY serving-store faces
+    * ([[AnnIndex.ivfStoreIngestBatch]], [[Quantize.pqStoreIngestBatch]]),
+    * which pass `pairsMine = None` (nothing to mine — the store IS the
+    * product). `f.index` builds the batch's stamped index rows (no
+    * ledger column — it is stamped here, once); `pairsMine`'s function
+    * receives the batch and the pre-batch corpus at the canonical store
+    * schema and returns the pairs frame. With a mine the batch has two
+    * readers (the mine and the store write, separate jobs), so it is
+    * staged ONCE (one localCheckpoint): each would otherwise re-pull it
+    * from the streaming source — expensive on wide or remote
+    * micro-batches, and a replay hazard if a source re-read were ever
+    * non-deterministic. The serving stores' batch has one reader and
+    * stays unstaged. The store write goes through
+    * `partitionOverwriteMode=dynamic`: mode Overwrite then replaces ONLY
+    * the partitions this batch writes — its own ledger slice — never the
+    * seed or sibling batches (pinned in ModulesSpec: a second batch
+    * leaves the first and the seed intact). The pairs slice is a plain
+    * whole-slice overwrite at its explicit `ingest_batch=<id>` path
+    * (same idempotency — rows are a pure function of the batch), with an
+    * EMPTY mine still landing one schema-bearing zero-row file so
+    * `pairsDir` is readable from the first micro-batch on (an all-zero
+    * dynamic overwrite commits no files, and a consumer's
+    * `read.parquet(pairsDir)` would fail schema inference on the
+    * common cold-start case of early batches with no near-dups).
+    *
+    * Cost stance: the gate runs TWO maintenance-time aggregates per
+    * micro-batch — the max-ledger pass (partition-column only: directory
+    * values, no data columns) and the shared [[AnnIndex.requireStoreSig]]
+    * stats pass (one long column). Folding them into one hand-rolled
+    * aggregate would fork the ONE shared gate body the token discipline
+    * rests on; the stress pair (SCALE.md stream_ingest_batch vs
+    * refresh_ingest_batch, which pays only the sig pass) measures the
+    * difference as inside host noise. */
   private[operators] def storeIngestBatch(
       spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, batchId: Long, sigCol: String, sig: Long,
-      what: String, staleDesc: String, indexRows: DataFrame,
-      pairsMine: Option[(String, DataFrame => DataFrame)],
-      partitionCols: Seq[String]): Unit = {
+      storeDir: String, batchId: Long, f: StoreFormat, what: String,
+      batch: DataFrame,
+      pairsMine: Option[(String, (DataFrame, DataFrame) => DataFrame)])
+      : Unit = {
+    val staged = if (pairsMine.isEmpty) batch else batch.localCheckpoint()
+    val indexRows = f.index(staged)
     val store = spark.read.parquet(storeDir)
     require(store.columns.contains("ingest_batch"),
       s"$what($storeDir): store carries no ingest_batch ledger column — " +
@@ -1775,8 +1714,8 @@ object Dedup {
     val corpus = store
       .filter(col("ingest_batch") =!= lit(batchId))
       .select(indexRows.columns.toIndexedSeq.map(col): _*)
-    AnnIndex.requireStoreSig(corpus, sigCol, sig, allowEmpty = false,
-      what = s"$what($storeDir)", staleDesc = staleDesc)
+    AnnIndex.requireStoreSig(corpus, f.sigCol, f.sig, allowEmpty = false,
+      what = s"$what($storeDir)", staleDesc = f.stale)
     // batchId == max passes the monotonic guard above because a
     // legitimate engine replay re-runs the LAST batch — but a FRESH
     // checkpoint whose renumbered batch 0 lands exactly on a
@@ -1811,23 +1750,21 @@ object Dedup {
           "would silently overwrite the committed slice. Graduate the " +
           "store and re-seed (or restore the original checkpoint)")
     }
-    def ledgered(rows: DataFrame, dir: String, pcols: Seq[String]): Unit =
-      rows.withColumn("ingest_batch", lit(batchId))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(("ingest_batch" +: pcols): _*).parquet(dir)
     pairsMine.foreach { case (pairsDir, mine) =>
       // materialized BEFORE the store append (the write below would
       // otherwise re-evaluate the lazy mine against a corpus that
       // already contains the batch); isEmpty is then free, and an empty
       // mine is forced through one task so the slice carries a
       // schema-bearing file
-      val pairs = mine(corpus).localCheckpoint()
+      val pairs = mine(staged, corpus).localCheckpoint()
       (if (pairs.isEmpty) pairs.repartition(1) else pairs)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$pairsDir/ingest_batch=$batchId")
     }
-    ledgered(indexRows, storeDir, partitionCols)
+    indexRows.withColumn("ingest_batch", lit(batchId))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(("ingest_batch" +: f.partitionCols): _*).parquet(storeDir)
     fs.create(marker, true).close()
   }
 

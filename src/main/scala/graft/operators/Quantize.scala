@@ -451,8 +451,8 @@ object Quantize {
       if (!df.columns.contains("pq_cb_sig")) return df
       return df.withColumn("pq_norm", col("pq_norm") +
         coalesce(assert_true(col("pq_cb_sig") === lit(sig),
-          lit("stale PQ store: pq_cb_sig does not match these codebooks — " +
-            "pq_codes were built from a different fit; re-encode"))
+          lit(s"stale $pqStale; pq_codes were built from a different " +
+            "fit, re-encode"))
           .cast("double"), lit(0.0)))
     }
     val clash = have ++ Seq("pq_cb_sig").filter(df.columns.contains)
@@ -581,58 +581,6 @@ object Quantize {
         "approx_sim")
   }
 
-  /** Bounded top-`cap` candidate heap keyed by (score DESC, id ASC) —
-    * the typed Aggregator behind [[pqJoinIndexed]]'s map-side candidate
-    * reduction and the dial sweeps' pages ([[AnnIndex.gridPass]]). The
-    * buffer is kept SORTED (best first), so `reduce` is an O(cap)
-    * ordered insert that rejects a row worse than the current floor in
-    * O(1) once the buffer is full, and `merge` is a sorted merge-take.
-    * Deterministic total order (ties break on the smaller id), so the
-    * final page equals the global top-cap by (score DESC, id ASC)
-    * exactly — replayable closed-form by an oracle's row_number. Input
-    * rows are (group key, id, score, payload); each entry keeps its
-    * payload (the embedding in [[pqJoinIndexed]], so the exact re-rank
-    * never re-scans the store; the exact similarity in the sweeps). */
-  private[graft] final class TopCandAgg[
-      P: scala.reflect.runtime.universe.TypeTag](cap: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[(Long, Long, Double, P),
-        List[(Long, Double, P)], Seq[(Long, Double, P)]] {
-    private def beats(aSim: Double, aId: Long,
-                      bSim: Double, bId: Long): Boolean =
-      aSim > bSim || (aSim == bSim && aId < bId)
-    def zero: List[(Long, Double, P)] = Nil
-    def reduce(b: List[(Long, Double, P)], a: (Long, Long, Double, P))
-        : List[(Long, Double, P)] = {
-      val cand = (a._2, a._3, a._4)
-      if (b.length >= cap && !beats(cand._2, cand._1, b.last._2, b.last._1)) b
-      else {
-        val (better, worse) =
-          b.span(e => beats(e._2, e._1, cand._2, cand._1))
-        (better ::: cand :: worse).take(cap)
-      }
-    }
-    def merge(b1: List[(Long, Double, P)], b2: List[(Long, Double, P)])
-        : List[(Long, Double, P)] = {
-      val out = List.newBuilder[(Long, Double, P)]
-      var (x, y) = (b1, b2); var n = 0
-      while (n < cap && (x.nonEmpty || y.nonEmpty)) {
-        if (y.isEmpty ||
-            (x.nonEmpty && beats(x.head._2, x.head._1,
-              y.head._2, y.head._1))) { out += x.head; x = x.tail }
-        else { out += y.head; y = y.tail }
-        n += 1
-      }
-      out.result()
-    }
-    def finish(r: List[(Long, Double, P)]): Seq[(Long, Double, P)] = r
-    def bufferEncoder
-        : org.apache.spark.sql.Encoder[List[(Long, Double, P)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    def outputEncoder
-        : org.apache.spark.sql.Encoder[Seq[(Long, Double, P)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
-
   /** [[pqTopK]]'s batch face over the persisted code table — the
     * [[AnnIndex.ivfJoinIndexed]] serving shape for the PQ family: a
     * query TABLE answered in ONE plan, where per-query [[pqTopK]] loops
@@ -643,7 +591,7 @@ object Quantize {
     * tables (each m×nC doubles — the only per-query state), the store
     * scans ONCE for the whole batch with the ADC kernel evaluated
     * against every (row, query) cell, and the over-fetch page is
-    * reduced MAP-SIDE by a bounded candidate heap ([[TopCandAgg]],
+    * reduced MAP-SIDE by a bounded candidate heap ([[TopK.TopKAgg]],
     * partial-aggregated before the exchange) — the store's rows never
     * cross a shuffle, only ≤ queries × partitions × (k·overFetch)
     * aggregated candidate buffers do (the batch generalization of
@@ -670,12 +618,8 @@ object Quantize {
                     store: DataFrame, idCol: String, embCol: String,
                     k: Int, overFetch: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = queries.sparkSession
-    import spark.implicits._
     AnnIndex.requireStoreSig(store, "pq_cb_sig", cbFingerprint(codebooks),
-      allowEmpty = true, what = "pqJoinIndexed",
-      staleDesc = "PQ store — pq_cb_sig does not match these codebooks " +
-        "(the fit changed)")
+      allowEmpty = true, what = "pqJoinIndexed", staleDesc = pqStale)
     val q0 = queries.filter(col(qEmbCol).isNotNull)
       .select(col(qIdCol).cast("long").as("query_id"),
         col(qEmbCol).cast("array<double>").as("__qe"))
@@ -692,13 +636,10 @@ object Quantize {
         when(col("pq_norm") === 0.0 || col("__qn") === 0.0, lit(0.0))
           .otherwise(adcUdf(col("pq_codes"), col("__lut")) /
             (col("pq_norm") * col("__qn"))))
-      .select(col("query_id"), col(idCol).cast("long"),
-        col("approx_sim").cast("double"),
-        col(embCol).cast("array<double>"))
-      .as[(Long, Long, Double, Seq[Double])]
-    val cands = scored.groupByKey(_._1)
-      .agg(new TopCandAgg[Seq[Double]](cap).toColumn.name("cands"))
-      .toDF("query_id", "cands")
+    val pageOf = TopK.topKWithPayload[Seq[Double]](cap)
+    val cands = scored.groupBy(col("query_id"))
+      .agg(pageOf(col(idCol).cast("long"), col("approx_sim").cast("double"),
+        col(embCol).cast("array<double>")).as("cands"))
     val w = Window.partitionBy("query_id")
       .orderBy(desc("similarity"), col("neighbor_id"))
     cands.select(col("query_id"), explode(col("cands")).as("c"))
@@ -735,9 +676,7 @@ object Quantize {
     AnnIndex.requireBatchStore(store, s"pqRefresh($storeDir)")
     AnnIndex.requireStoreSig(store, "pq_cb_sig",
       cbFingerprint(codebooks), allowEmpty = false,
-      what = s"pqRefresh($storeDir)",
-      staleDesc = "PQ store — pq_cb_sig does not match these codebooks " +
-        "(the fit changed)")
+      what = s"pqRefresh($storeDir)", staleDesc = pqStale)
     pqEncode(newBatch, embCol, codebooks)
       .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(storeDir)
   }
@@ -750,9 +689,7 @@ object Quantize {
   def seedPqIngestStore(corpus: DataFrame, embCol: String,
                         codebooks: Array[Array[Array[Double]]],
                         storeDir: String): Unit =
-    pqEncode(corpus, embCol, codebooks)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch").parquet(storeDir)
+    Dedup.seedIngestStore(pqFormat(codebooks, embCol), corpus, storeDir)
 
   /** One replay-idempotent micro-batch into a streaming PQ store —
     * [[graft.operators.AnnIndex.ivfStoreIngestBatch]]'s flat-layout twin
@@ -771,10 +708,20 @@ object Quantize {
                          storeDir: String, batchId: Long,
                          batch: DataFrame, embCol: String): Unit =
     Dedup.storeIngestBatch(spark, storeDir, batchId,
-      "pq_cb_sig", cbFingerprint(codebooks), "pqStoreIngestBatch",
-      staleDesc = "PQ store — pq_cb_sig does not match these codebooks " +
-        "(the fit changed)",
-      pqEncode(batch, embCol, codebooks), pairsMine = None, Nil)
+      pqFormat(codebooks, embCol), "pqStoreIngestBatch", batch,
+      pairsMine = None)
+
+  /** The PQ store's stale text: the mismatch every `pq_cb_sig` gate
+    * names. */
+  private val pqStale =
+    "PQ store — pq_cb_sig does not match these codebooks (the fit changed)"
+
+  /** The streaming PQ store's [[Dedup.StoreFormat]]: flat, so the ledger
+    * is its only partition level. */
+  private def pqFormat(codebooks: Array[Array[Array[Double]]],
+                       embCol: String): Dedup.StoreFormat =
+    Dedup.StoreFormat("pq_cb_sig", cbFingerprint(codebooks), pqStale, Nil,
+      pqEncode(_, embCol, codebooks))
 
   /** IVF-residual view: [[AnnIndex.ivfAssign]]'s list assignment plus
     * `__res` = emb − centroid[list]. Residuals are what IVFPQ (Jégou et

@@ -232,6 +232,67 @@ class ModulesSpec extends AnyFunSuite {
     val index = Dedup.minhashBandIndex(docs, "doc_id", "text", 16, 4, 3)
     assert(Dedup.minhashIncrementalPairs(alien, index,
       "doc_id", "text", 16, 4, 3).isEmpty)
+    // the equivalence battery the hamming and embedding faces carry:
+    // increment == capped from-scratch minhashLshPairs over old ∪ new,
+    // restricted to pairs touching the batch, n_bands included
+    def run(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def scratch(all: org.apache.spark.sql.DataFrame, cap: Int) =
+      run(Dedup.minhashLshPairs(all, "doc_id", "text", 16, 4, 3,
+          maxBucket = cap))
+        .filter { case (a, b, _) => a > 100L || b > 100L }
+    def incremental(batch: org.apache.spark.sql.DataFrame,
+                    old: org.apache.spark.sql.DataFrame, cap: Int) =
+      run(Dedup.minhashIncrementalPairs(batch,
+        Dedup.minhashBandIndex(old, "doc_id", "text", 16, 4, 3),
+        "doc_id", "text", 16, 4, 3, maxBucket = cap))
+    val boiler =
+      "this exact same boilerplate license header appears on every page"
+    val twin = "completely separate pair of twin documents for the cap test"
+    val old = ((1L to 5L).map(i => (i, boiler)) ++ Seq(
+      (10L, "the quick brown fox jumps over the lazy dog again and again"),
+      (11L, "an unrelated note about harbor tides and the morning ferry")))
+      .toDF("doc_id", "text")
+    val batch = Seq((101L, boiler), (102L, boiler),
+      (103L, "the quick brown fox jumps over the lazy cat again and again"),
+      (104L, twin), (105L, twin)).toDF("doc_id", "text")
+    // the boilerplate buckets hold 5 old rows — AT cap 5, untouched — and
+    // 7 after the batch: over the cap only because of the batch, so the
+    // post-batch cap population must drop them from both sides
+    assert(run(Dedup.minhashLshPairs(old, "doc_id", "text", 16, 4, 3,
+      maxBucket = 5)).contains((1L, 2L, 4L)), "an at-cap bucket was dropped")
+    for (cap <- Seq(Int.MaxValue, 5))
+      assert(incremental(batch, old, cap) ==
+        scratch(old.unionByName(batch), cap),
+        s"cap=$cap: increment != from-scratch-restricted")
+    // non-vacuity: uncapped, the two new boilerplate copies pair with the
+    // five old ones and each other; capped, only the twins survive
+    val uncapped = incremental(batch, old, Int.MaxValue)
+    assert(uncapped.count { case (a, b, n) =>
+      n == 4L && b >= 101L && b <= 102L && a <= 102L } == 2 * 5 + 1)
+    val capped = incremental(batch, old, 5)
+    assert(capped.contains((104L, 105L, 4L)))
+    assert(capped.forall { case (a, b, _) => a != 101L && b != 101L &&
+      a != 102L && b != 102L }, s"capped kept a boilerplate pair: $capped")
+    // RANDOMIZED equivalence: near-copies of a few anchor sentences (so
+    // shared bands and partial n_bands occur), caps that bite and not
+    val rnd = new scala.util.Random(91)
+    val vocab = Array.tabulate(24)(i => s"w$i")
+    val anchors = Array.fill(4)(Array.fill(9)(vocab(rnd.nextInt(24))))
+    def doc(id: Long) = {
+      val words = anchors(rnd.nextInt(4)).clone()
+      (1 to rnd.nextInt(3)).foreach(_ =>
+        words(rnd.nextInt(words.length)) = vocab(rnd.nextInt(24)))
+      (id, words.mkString(" "))
+    }
+    for (cap <- Seq(3, 8, Int.MaxValue)) {
+      val oldR = (1L to 30L).map(doc).toDF("doc_id", "text")
+      val newR = (101L to 112L).map(doc).toDF("doc_id", "text")
+      val incr = incremental(newR, oldR, cap)
+      assert(incr.nonEmpty, s"cap=$cap: trial went vacuous")
+      assert(incr == scratch(oldR.unionByName(newR), cap),
+        s"cap=$cap: increment != from-scratch")
+    }
   }
 
   test("LSH mega-bucket cap: boilerplate buckets dropped, small buckets' pairs unchanged") {
@@ -2486,8 +2547,8 @@ class ModulesSpec extends AnyFunSuite {
           }
         }
     }
-    assert(sites.size <= 59, s"${sites.size} `.localCheckpoint(` call " +
-      "sites under graft/{operators,queries}, above the ratchet of 59 — " +
+    assert(sites.size <= 57, s"${sites.size} `.localCheckpoint(` call " +
+      "sites under graft/{operators,queries}, above the ratchet of 57 — " +
       "ROADMAP item 2 (one lazy sharing helper) retires them; lower the " +
       s"ratchet when a site goes, never raise it:\n${sites.mkString("\n")}")
   }
@@ -4919,6 +4980,40 @@ class ModulesSpec extends AnyFunSuite {
     assert(pairs(Dedup.hammingPairsFromIndex(spark.read.parquet(hamOut),
       maxHamming = 3)) == fromStore,
       "compacted chunk store mines different pairs")
+  }
+
+  test("streaming ingest: one embedding and one IVF micro-batch start a pinned job count") {
+    import spark.implicits._
+    import graft.operators.{AnnIndex, Dedup}
+    // the write path stream_ingest times: a change that adds a staging
+    // checkpoint, a gate pass or a write shows here as a count, before
+    // anyone argues about wall-time noise
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_stream_jobs").toString
+    val mk = (id: Long, seed: Long, s: Double) =>
+      (id, Array.tabulate(4)(j => (((seed >> (j * 7)) & 127) - 63.0) * s))
+    val corpus = (1L to 40L).map(i => mk(i, i * 7919L, 1.0)).toDF("id", "emb")
+    // two scaled copies of corpus row 3 (near-dups, so the mine is
+    // nonempty) and one novel row
+    val batch = Seq(mk(100L, 3L * 7919L, 2.0), mk(101L, 3L * 7919L, 3.0),
+      mk(102L, 999999L, 1.0)).toDF("id", "emb")
+    val embDir = s"$base/emb"
+    Dedup.seedEmbedIngestStore(corpus, embDir, "id", "emb", 4, 3)
+    val model = AnnIndex.ivfFit(corpus, "emb", nLists = 4)
+    val ivfDir = s"$base/ivf"
+    AnnIndex.seedIvfIngestStore(model, corpus, "emb", ivfDir)
+    val (_, embJobs) = jobsStartedBy("embed-ingest-batch") {
+      Dedup.embedStoreIngestBatch(spark, embDir, s"$base/pairs", 0L, batch,
+        "id", "emb", 4, 3, 0.9)
+    }
+    val (_, ivfJobs) = jobsStartedBy("ivf-ingest-batch") {
+      AnnIndex.ivfStoreIngestBatch(spark, model, ivfDir, 0L, batch, "emb")
+    }
+    assert(spark.read.parquet(s"$base/pairs").count() > 0,
+      "the mine went vacuous")
+    assert((embJobs, ivfJobs) == (13, 6),
+      s"one embedding micro-batch started $embJobs jobs and one IVF " +
+        s"micro-batch $ivfJobs")
   }
 
   test("streaming store ingest: a replayed micro-batch overwrites, never appends") {

@@ -155,15 +155,11 @@ class PropertiesSpec extends AnyFunSuite {
 
   test("TopK aggregator: any merge order of any partitioning equals full sort") {
     import graft.operators.TopK
-    import TopK.Scored
-    forAllSamples(100) {
-      val k = 1 + rnd.nextInt(6)
-      val agg = new TopK.TopKAgg(k)
-      // duplicate scores force the (score DESC, id ASC) tiebreak; duplicate
-      // ids don't occur in real input but must not break the invariant
-      val data = Vector.fill(rnd.nextInt(60))(
-        Scored(rnd.nextInt(20).toLong, rnd.nextInt(9).toDouble))
-      val want = data.sortBy(s => (-s.score, s.id)).take(k)
+    import TopK.{Scored, TopKAgg}
+    // the want is a STABLE sort cut at k: full ties keep input order
+    def check[E](agg: TopKAgg[E], k: Int, data: Vector[E])(
+        rank: E => (Double, Long)): Unit = {
+      val want = data.sortBy(rank).take(k)
       // single-buffer reduce path
       assert(agg.finish(data.foldLeft(agg.zero)(agg.reduce)) == want)
       // arbitrary partitioning + pairwise merge path (what AQE / map-side
@@ -173,6 +169,20 @@ class PropertiesSpec extends AnyFunSuite {
       val merged = parts.map(_.foldLeft(agg.zero)(agg.reduce))
         .foldLeft(agg.zero)(agg.merge)
       assert(agg.finish(merged) == want)
+    }
+    forAllSamples(100) {
+      val k = 1 + rnd.nextInt(6)
+      // duplicate scores force the (score DESC, id ASC) tiebreak; duplicate
+      // ids don't occur in real input but must not break the invariant
+      val data = Vector.fill(rnd.nextInt(60))(
+        Scored(rnd.nextInt(20).toLong, rnd.nextInt(9).toDouble))
+      check(TopKAgg(k), k, data)(s => (-s.score, s.id))
+      // the payload-carrying form (the ANN pages): the payload rides along
+      // and never ranks, so duplicate (id, score) entries with different
+      // payloads must come out in input order
+      check(TopKAgg.withPayload[String](k), k,
+        data.zipWithIndex.map { case (s, i) => (s.id, s.score, s"p$i") })(
+        e => (-e._2, e._1))
     }
   }
 
