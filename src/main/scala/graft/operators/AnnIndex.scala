@@ -192,9 +192,9 @@ object AnnIndex {
       s"THEN CAST(pow(2, j) AS BIGINT) ELSE CAST(0 AS BIGINT) END)), " +
       s"(acc, b) -> acc + b)"
 
-  /** The point faces' loud 1-row query contract, shared
-    * ([[annTopKWideIndexed]]'s collect-once discipline, also behind
-    * `Quantize`'s quantized faces): refuse a multi-row frame (the global
+  /** The point faces' loud 1-row query contract, shared by
+    * [[annTopKIndexed]], [[annTopKWideIndexed]] and `Quantize`'s
+    * quantized faces: refuse a multi-row frame (the global
     * orderBy+limit would blend every query's candidates into one top-k
     * with no error) and a NULL embedding (it hashes to no bucket — every
     * search would silently return empty), and return a LOCAL 1-row
@@ -308,24 +308,6 @@ object AnnIndex {
     2002L * 100000000L + dim.toLong * 1000L + planes
   }
 
-  /** The ONE persisted-store token gate behind EVERY consumer — the
-    * serving faces ([[annTopKWideIndexed]], [[annJoinIndexed]] via
-    * [[requireWideStoreSig]], [[ivfJoinIndexed]]) and every token-gated
-    * refresh (`Dedup.refreshStore` behind embedding/hamming/minhash
-    * appends; [[ivfRefresh]] and [[Quantize.pqRefresh]] since r12) —
-    * a single body so the faces can never drift guard by guard:
-    * presence of the token column, then one stats-pruned aggregate over
-    * (row count, min, max, null-token count). The row count is what
-    * closes the ALL-null hole: min/max over a store whose every token
-    * is null come back null exactly like an empty store's, and a skip
-    * keyed on min-is-null alone would silently serve a non-empty
-    * all-raw store — the class the token exists to refuse.
-    * `allowEmpty = true` is the serving stance (an empty store's top-k
-    * is legitimately empty); maintenance appends refuse empty stores
-    * outright. `staleDesc` names the geometry in the mismatch message
-    * so the operator chases the right rebuild. Returns the row count it
-    * measured, so a caller checking a PRUNED slice can tell "verified
-    * nonempty" from "empty — ambiguous, escalate to the full store". */
   /** Refusal shared by every BATCH-cadence refresh ([[ivfRefresh]],
     * `Quantize.pqRefresh`, `Dedup.refreshStore`): a store carrying the
     * `ingest_batch` replay ledger is a STREAMING store — the inverse of
@@ -344,6 +326,24 @@ object AnnIndex {
         "(compactPartitionedTo with dropCols = Seq(\"ingest_batch\")); " +
         "a ledger-less batch append would corrupt the partition layout")
 
+  /** The ONE persisted-store token gate behind EVERY consumer — the
+    * serving faces ([[annTopKWideIndexed]], [[annJoinIndexed]] via
+    * [[requireWideStoreSig]], [[ivfJoinIndexed]]) and every token-gated
+    * refresh (`Dedup.refreshStore` behind embedding/hamming/minhash
+    * appends; [[ivfRefresh]] and [[Quantize.pqRefresh]] since r12) —
+    * a single body so the faces can never drift guard by guard:
+    * presence of the token column, then one stats-pruned aggregate over
+    * (row count, min, max, null-token count). The row count is what
+    * closes the ALL-null hole: min/max over a store whose every token
+    * is null come back null exactly like an empty store's, and a skip
+    * keyed on min-is-null alone would silently serve a non-empty
+    * all-raw store — the class the token exists to refuse.
+    * `allowEmpty = true` is the serving stance (an empty store's top-k
+    * is legitimately empty); maintenance appends refuse empty stores
+    * outright. `staleDesc` names the geometry in the mismatch message
+    * so the operator chases the right rebuild. Returns the row count it
+    * measured, so a caller checking a PRUNED slice can tell "verified
+    * nonempty" from "empty — ambiguous, escalate to the full store". */
   private[operators] def requireStoreSig(store: DataFrame, sigCol: String,
                                          sig: Long, allowEmpty: Boolean,
                                          what: String,
@@ -453,25 +453,9 @@ object AnnIndex {
                          query: DataFrame, queryCol: String, k: Int,
                          tieBreak: Seq[String] = Nil,
                          probeBits: Int = 0): DataFrame = {
-    // ONE query row, checked loudly like annTuning's: a multi-row frame
-    // would blend every query's candidates into one global top-k —
-    // plausible-looking garbage with no error.
-    val qSlice = query.select(col(queryCol))
-    val qRows = qSlice.limit(2).collect()
-    require(qRows.length == 1,
-      "annTopKWideIndexed expects exactly ONE query row — a multi-row " +
-        "frame would blend every query's candidates into one global top-k")
-    require(!qRows(0).isNullAt(0),
-      "annTopKWideIndexed query embedding is NULL — it would hash to a " +
-        "null bucket and every search would silently return empty")
-    // everything downstream derives from this ONE collected row: the
-    // probe buckets and the similarity scoring must see the SAME
-    // embedding, and a non-deterministic 1-row query plan (limit or
-    // sample over a larger frame) re-evaluated per use could yield a
-    // DIFFERENT row each time — probes computed for one embedding,
-    // similarity scored against another, a silently-empty or wrong top-k
-    val qLocal = query.sparkSession.createDataFrame(
-      java.util.Arrays.asList(qRows(0)), qSlice.schema)
+    // everything downstream derives from ONE collected row: the probe
+    // buckets and the similarity scoring must see the SAME embedding
+    val qLocal = oneQueryRow(query, queryCol, "annTopKWideIndexed")
     val probes: Seq[Long] = qLocal
       .select(wideBucketExprOf(col(queryCol), dim, planes).as("__qb0"))
       .selectExpr(s"${probeSetExpr(planes, probeBits)} AS __probes")
@@ -517,16 +501,6 @@ object AnnIndex {
       .drop("emb_sig", "bucket")
   }
 
-  /** ANN KNN JOIN: for EVERY query row, the k most-cosine-similar corpus
-    * rows sharing its LSH bucket — the batch-search operator ([[annTopK]]
-    * serves one query; this serves a whole query table in one plan). The
-    * geo analog is [[GeoSearch.nearestK]]: same shape, bucket equality
-    * standing in for the bounding box, a per-query window standing in for
-    * the per-left-row rank. Shuffles are keyed by bucket (corpus never
-    * pairs beyond its bucket) then by query id (the window) — both
-    * partition-parallel at any corpus size. Approximate exactly like
-    * [[annTopK]]: a true neighbor hashed to another bucket is missed;
-    * raise recall with fewer planes or multi-probe. */
   /** The multi-probe bucket set over a `__qb0` query-bucket column: the
     * origin bucket, plus every single-sign-flip neighbor at probeBits ≥ 1,
     * plus every DOUBLE-flip neighbor at probeBits = 2 — 1, planes+1, or
@@ -582,7 +556,18 @@ object AnnIndex {
     }
   }
 
-  /** `probeBits` is the multi-probe radius: 0 probes only the query's own
+  /** ANN KNN JOIN: for EVERY query row, the k most-cosine-similar corpus
+    * rows sharing its LSH bucket — the batch-search operator ([[annTopK]]
+    * serves one query; this serves a whole query table in one plan). The
+    * geo analog is [[GeoSearch.nearestK]]: same shape, bucket equality
+    * standing in for the bounding box, a per-query window standing in for
+    * the per-left-row rank. Shuffles are keyed by bucket (corpus never
+    * pairs beyond its bucket) then by query id (the window) — both
+    * partition-parallel at any corpus size. Approximate exactly like
+    * [[annTopK]]: a true neighbor hashed to another bucket is missed;
+    * raise recall with fewer planes or multi-probe.
+    *
+    * `probeBits` is the multi-probe radius: 0 probes only the query's own
     * bucket (cheapest, weakest recall — measured ~0.17 top-3 recall on the
     * near-random test embeddings at 4 planes), 1 additionally probes every
     * bucket one sign-flip away (planes+1 buckets; recall floor asserted in

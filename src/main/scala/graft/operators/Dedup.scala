@@ -185,8 +185,9 @@ object Dedup {
   /** The incremental mine behind [[minhashIncrementalPairs]],
     * [[hammingIncrementalPairs]] and [[embeddingIncrementalPairs]]:
     * candidate pairs INVOLVING a new batch — new×corpus and new×new,
-    * never corpus×corpus — against the face's prebuilt persisted index
-    * (`f.index` output). This is what makes continuous ingest dedup
+    * never corpus×corpus — of the batch's index `rows` (`f.index`
+    * output, built once by the caller) against the face's prebuilt
+    * persisted index. This is what makes continuous ingest dedup
     * affordable: per-batch cost is |batch| × bucket-mates, independent
     * of corpus size, where a from-scratch re-run grows with the corpus
     * square. The contract, for every face:
@@ -225,13 +226,12 @@ object Dedup {
     * `keys`) with a_id ≠ b_id, a new×new pair in both orientations; each
     * face verifies, then collapses orientations with [[normalizedPairs]]. */
   private def incrementalJoin(name: String, f: StoreFormat,
-                              batch: DataFrame, corpusIndex: DataFrame,
+                              rows: DataFrame, corpusIndex: DataFrame,
                               keys: Seq[String], payload: Seq[String],
                               maxBucket: Int): DataFrame = {
     require(corpusIndex.columns.contains(f.sigCol),
       s"$name carries no ${f.sigCol} token — rebuild it with its index " +
         "builder before mining increments against it")
-    val rows = f.index(batch)
     val cols = ("id" +: payload) ++ keys
     val guard = assert_true(col(f.sigCol) <=> lit(f.sig),
       lit(s"stale $name (or unstamped rows — a NULL ${f.sigCol} from a " +
@@ -697,9 +697,15 @@ object Dedup {
   def minhashIncrementalPairs(newDocs: DataFrame, corpusIndex: DataFrame,
                               keyCol: String, textCol: String,
                               k: Int, bands: Int, shingleN: Int,
-                              maxBucket: Int = Int.MaxValue): DataFrame =
-    normalizedPairs(incrementalJoin("minhash band index",
-        minhashFormat(keyCol, textCol, k, bands, shingleN), newDocs,
+                              maxBucket: Int = Int.MaxValue): DataFrame = {
+    val f = minhashFormat(keyCol, textCol, k, bands, shingleN)
+    minhashMine(f, maxBucket)(f.index(newDocs), corpusIndex)
+  }
+
+  /** [[minhashIncrementalPairs]] over the batch's built index rows. */
+  private def minhashMine(f: StoreFormat, maxBucket: Int)(
+      rows: DataFrame, corpusIndex: DataFrame): DataFrame =
+    normalizedPairs(incrementalJoin("minhash band index", f, rows,
         corpusIndex, Seq("band_idx", "band_key"), Nil, maxBucket),
         col("band_idx"))
       .groupBy(col("a_id"), col("b_id"))
@@ -1024,9 +1030,16 @@ object Dedup {
                               idCol: String, hashCol: String,
                               bits: Int, chunks: Int, maxHamming: Int,
                               maxBucket: Int = Int.MaxValue): DataFrame = {
+    val f = hammingFormat(idCol, hashCol, bits, chunks)
+    hammingMine(f, chunks, maxHamming, maxBucket)(f.index(newDf), corpusIndex)
+  }
+
+  /** [[hammingIncrementalPairs]] over the batch's built index rows. */
+  private def hammingMine(f: StoreFormat, chunks: Int, maxHamming: Int,
+                          maxBucket: Int)(
+      rows: DataFrame, corpusIndex: DataFrame): DataFrame = {
     require(maxHamming < chunks, "pigeonhole needs maxHamming < chunks")
-    normalizedPairs(incrementalJoin("hamming index",
-        hammingFormat(idCol, hashCol, bits, chunks), newDf, corpusIndex,
+    normalizedPairs(incrementalJoin("hamming index", f, rows, corpusIndex,
         Seq("chunk_idx", "chunk_val"), Seq("fp"), maxBucket)
       .withColumn("hamming",
         bit_count(col("a_fp").bitwiseXOR(col("b_fp"))).cast("long"))
@@ -1384,10 +1397,17 @@ object Dedup {
   def embeddingIncrementalPairs(newDf: DataFrame, corpusIndex: DataFrame,
                                 keyCol: String, embCol: String,
                                 dim: Int, planes: Int, threshold: Double,
-                                maxBucket: Int = Int.MaxValue): DataFrame =
-    normalizedPairs(incrementalJoin("embedding bucket index",
-        embeddingFormat(keyCol, embCol, dim, planes), newDf, corpusIndex,
-        Seq("bucket"), Seq("emb", "nrm"), maxBucket)
+                                maxBucket: Int = Int.MaxValue): DataFrame = {
+    val f = embeddingFormat(keyCol, embCol, dim, planes)
+    embeddingMine(f, threshold, maxBucket)(f.index(newDf), corpusIndex)
+  }
+
+  /** [[embeddingIncrementalPairs]] over the batch's built index rows. */
+  private def embeddingMine(f: StoreFormat, threshold: Double,
+                            maxBucket: Int)(
+      rows: DataFrame, corpusIndex: DataFrame): DataFrame =
+    normalizedPairs(incrementalJoin("embedding bucket index", f, rows,
+        corpusIndex, Seq("bucket"), Seq("emb", "nrm"), maxBucket)
       .withColumn("cosine", stagedCosine(col("a_emb"), col("b_emb"),
         col("a_nrm"), col("b_nrm")))
       .filter(col("cosine") >= threshold), round(col("cosine"), 4).as("cosine"))
@@ -1519,12 +1539,11 @@ object Dedup {
     * planning), so a replay whose first attempt died between the two
     * writes mines against exactly the pre-batch corpus the first attempt
     * saw — the half-written partition is invisible. Order matters twice:
-    * the mine is MATERIALIZED (localCheckpoint) and its slice written
-    * before the store append (a lazy mine evaluated after the append
-    * would see the batch already inside the corpus and silently mine the
-    * batch against itself — the [[ingestLifecycleSmoke]] localCheckpoint
-    * trap); and the token gate runs over the pre-batch corpus BEFORE
-    * either write (the [[refreshStore]] stance: refuse a
+    * the pairs slice is written — the mine run to completion — before
+    * the store append (a lazy mine evaluated after the append would see
+    * the batch already inside the corpus and silently mine the batch
+    * against itself); and the token gate runs over the pre-batch corpus
+    * BEFORE either write (the [[refreshStore]] stance: refuse a
     * stale/raw/empty store before a row lands).
     *
     * Serving and graduation: the ledger column rides every read of the
@@ -1541,11 +1560,11 @@ object Dedup {
                             batchId: Long, batch: DataFrame,
                             keyCol: String, embCol: String,
                             dim: Int, planes: Int, threshold: Double,
-                            maxBucket: Int = Int.MaxValue): Unit =
-    storeIngestBatch(spark, storeDir, batchId,
-      embeddingFormat(keyCol, embCol, dim, planes), "embedStoreIngestBatch",
-      batch, Some((pairsDir, embeddingIncrementalPairs(_, _,
-        keyCol, embCol, dim, planes, threshold, maxBucket))))
+                            maxBucket: Int = Int.MaxValue): Unit = {
+    val f = embeddingFormat(keyCol, embCol, dim, planes)
+    storeIngestBatch(spark, storeDir, batchId, f, "embedStoreIngestBatch",
+      batch, Some((pairsDir, embeddingMine(f, threshold, maxBucket))))
+  }
 
   /** [[embedStoreIngestBatch]] on the HAMMING face: one replay-idempotent
     * micro-batch of fingerprints against a [[seedHammingIngestStore]]
@@ -1556,11 +1575,11 @@ object Dedup {
                               batchId: Long, batch: DataFrame,
                               idCol: String, hashCol: String,
                               bits: Int, chunks: Int, maxHamming: Int,
-                              maxBucket: Int = Int.MaxValue): Unit =
-    storeIngestBatch(spark, storeDir, batchId,
-      hammingFormat(idCol, hashCol, bits, chunks), "hammingStoreIngestBatch",
-      batch, Some((pairsDir, hammingIncrementalPairs(_, _,
-        idCol, hashCol, bits, chunks, maxHamming, maxBucket))))
+                              maxBucket: Int = Int.MaxValue): Unit = {
+    val f = hammingFormat(idCol, hashCol, bits, chunks)
+    storeIngestBatch(spark, storeDir, batchId, f, "hammingStoreIngestBatch",
+      batch, Some((pairsDir, hammingMine(f, chunks, maxHamming, maxBucket))))
+  }
 
   /** [[seedEmbedIngestStore]] for the minhash face: the
     * [[minhashBandIndex]] layout under an `ingest_batch=-1` ledger
@@ -1581,191 +1600,78 @@ object Dedup {
                               batchId: Long, batch: DataFrame,
                               keyCol: String, textCol: String,
                               k: Int, bands: Int, shingleN: Int,
-                              maxBucket: Int = Int.MaxValue): Unit =
-    storeIngestBatch(spark, storeDir, batchId,
-      minhashFormat(keyCol, textCol, k, bands, shingleN),
-      "minhashStoreIngestBatch", batch, Some((pairsDir,
-        minhashIncrementalPairs(_, _, keyCol, textCol, k, bands, shingleN,
-          maxBucket))))
-
-  /** Order-free content fingerprint of a ledger slice — count plus
-    * bit_xor(xxhash64(all columns)) — used by the replay/collision
-    * check of [[storeIngestBatch]] AND the serve sink
-    * ([[graft.streaming.EventsStream.serveSinkBatch]]). ONE body, the
-    * [[AnnIndex.requireStoreSig]] stance: a change to the fingerprint
-    * rule (null handling, column quoting) must land in both ledgers at
-    * once, or the store and sink disciplines silently drift apart. */
-  private[graft] def ledgerContentFp(df: DataFrame): (Long, Long, String) = {
-    val fields = df.schema.fields
-    val hashes = s"xxhash64(${fields.map(f => s"`${f.name}`").mkString(", ")})"
-    // count + bit_xor + SUM of the row hashes: xor alone cancels rows
-    // with even multiplicity (a batch carrying one doc twice xors its
-    // row hash to 0, so two DIFFERENT duplicated batches could collide
-    // and let a renumbered restart overwrite a committed slice). The sum
-    // is multiplicity-linear; decimal(38,0), not long, because ANSI
-    // long-sum overflows loudly on full-range hashes, and compared as a
-    // plain string since decimal scale survives the round trip as 0.
-    val r = df.agg(count(lit(1)),
-      coalesce(expr(s"bit_xor($hashes)"), lit(0L)),
-      sum(expr(hashes).cast("decimal(38,0)"))).head()
-    // a null sum is EMPTY (count 0) or OVERFLOW (~1e19 rows of
-    // full-range hashes — theoretical, but an overflowed sum coalesced
-    // to 0 would compare equal to a genuine zero sum and to every OTHER
-    // overflowed slice, silently collapsing the sum component of the
-    // fingerprint); the overflow marker keeps it unequal to any finite
-    // sum, and count + bit_xor still discriminate among overflowed pairs
-    val sumStr =
-      if (r.isNullAt(2)) { if (r.getLong(0) == 0L) "0" else "overflow" }
-      else r.getDecimal(2).stripTrailingZeros.toPlainString
-    (r.getLong(0), r.getLong(1), sumStr)
-  }
-
-  /** Align a stored slice's columns to the incoming frame's schema for
-    * the fingerprint compare: cast only genuinely different catalog
-    * types (the partition column reads back as int where the builder
-    * stamps long) — a nullability-only difference (array<double>
-    * round-tripped through parquet) is the same catalog type, and Spark
-    * refuses the nullable->non-null cast. Shared with the serve sink,
-    * like [[ledgerContentFp]]. */
-  private[graft] def ledgerAlignTo(df: DataFrame,
-      fields: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
-    val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    df.select(fields.map { f =>
-      if (types(f.name).catalogString == f.dataType.catalogString)
-        col(f.name)
-      else col(f.name).cast(f.dataType)
-    }: _*)
+                              maxBucket: Int = Int.MaxValue): Unit = {
+    val f = minhashFormat(keyCol, textCol, k, bands, shingleN)
+    storeIngestBatch(spark, storeDir, batchId, f, "minhashStoreIngestBatch",
+      batch, Some((pairsDir, minhashMine(f, maxBucket))))
   }
 
   /** The shared replay-idempotent micro-batch body behind the streaming
     * store writers ([[embedStoreIngestBatch]],
     * [[hammingStoreIngestBatch]], [[minhashStoreIngestBatch]]) — one
     * body over the face's [[StoreFormat]], like [[refreshStore]] for the
-    * batch cadence, so the ledger discipline can never drift face by
-    * face — and shared with the APPEND-ONLY serving-store faces
+    * batch cadence — and the APPEND-ONLY serving-store faces
     * ([[AnnIndex.ivfStoreIngestBatch]], [[Quantize.pqStoreIngestBatch]]),
-    * which pass `pairsMine = None` (nothing to mine — the store IS the
-    * product). `f.index` builds the batch's stamped index rows (no
-    * ledger column — it is stamped here, once); `pairsMine`'s function
-    * receives the batch and the pre-batch corpus at the canonical store
-    * schema and returns the pairs frame. With a mine the batch has two
-    * readers (the mine and the store write, separate jobs), so it is
-    * staged ONCE (one localCheckpoint): each would otherwise re-pull it
-    * from the streaming source — expensive on wide or remote
-    * micro-batches, and a replay hazard if a source re-read were ever
-    * non-deterministic. The serving stores' batch has one reader and
-    * stays unstaged. The store write goes through
-    * `partitionOverwriteMode=dynamic`: mode Overwrite then replaces ONLY
-    * the partitions this batch writes — its own ledger slice — never the
-    * seed or sibling batches (pinned in ModulesSpec: a second batch
-    * leaves the first and the seed intact). The pairs slice is a plain
-    * whole-slice overwrite at its explicit `ingest_batch=<id>` path
-    * (same idempotency — rows are a pure function of the batch), with an
-    * EMPTY mine still landing one schema-bearing zero-row file so
-    * `pairsDir` is readable from the first micro-batch on (an all-zero
-    * dynamic overwrite commits no files, and a consumer's
-    * `read.parquet(pairsDir)` would fail schema inference on the
-    * common cold-start case of early batches with no near-dups).
+    * which pass `pairsMine = None` (the store IS the product). The
+    * replay ledger is [[graft.streaming.Ledger]]'s: monotonic against
+    * the directory-listed high-water mark of slices and commit markers,
+    * and — whenever this batch's marker exists — the incoming index rows
+    * must fingerprint equal to the stored slice (a missing slice then
+    * reads as empty and is refused unless the batch is empty too).
     *
-    * Cost stance: the gate runs TWO maintenance-time aggregates per
-    * micro-batch — the max-ledger pass (partition-column only: directory
-    * values, no data columns) and the shared [[AnnIndex.requireStoreSig]]
-    * stats pass (one long column). Folding them into one hand-rolled
-    * aggregate would fork the ONE shared gate body the token discipline
-    * rests on; the stress pair (SCALE.md stream_ingest_batch vs
-    * refresh_ingest_batch, which pays only the sig pass) measures the
-    * difference as inside host noise. */
+    * `f.index` builds the batch's stamped index rows once (the ledger
+    * column is stamped here); `pairsMine` receives those rows and the
+    * pre-batch corpus at the canonical store schema. With a mine the rows
+    * have two readers (the pairs write and the store write, separate
+    * jobs), so they are staged ONCE (one localCheckpoint) rather than
+    * re-pulled from the streaming source and re-built; the serving
+    * stores' rows have one reader and stay unstaged. Each slice is
+    * written once, straight from its plan: the pairs slice as a
+    * whole-slice overwrite at its explicit ledger path (an empty mine
+    * still lands one schema-bearing zero-row file, so `pairsDir` is
+    * readable from the first micro-batch on), the store slice through
+    * `partitionOverwriteMode=dynamic`, which replaces ONLY this batch's
+    * own ledger partitions, never the seed or sibling batches (pinned in
+    * ModulesSpec). The marker lands last. Gate cost per micro-batch: one
+    * directory listing plus the shared [[AnnIndex.requireStoreSig]]
+    * stats pass (one long column). */
   private[operators] def storeIngestBatch(
       spark: org.apache.spark.sql.SparkSession,
       storeDir: String, batchId: Long, f: StoreFormat, what: String,
       batch: DataFrame,
       pairsMine: Option[(String, (DataFrame, DataFrame) => DataFrame)])
       : Unit = {
-    val staged = if (pairsMine.isEmpty) batch else batch.localCheckpoint()
-    val indexRows = f.index(staged)
+    import graft.streaming.Ledger
+    val built = f.index(batch)
+    val ledger = Ledger(spark, storeDir, what, "Graduate the store and " +
+      "re-seed (or restore the original checkpoint)")
+    ledger.requireMonotonic(batchId)
     val store = spark.read.parquet(storeDir)
-    require(store.columns.contains("ingest_batch"),
+    require(store.columns.contains(Ledger.column),
       s"$what($storeDir): store carries no ingest_batch ledger column — " +
         "this is a canonical batch store, and a blind append would " +
         "silently double its rows on micro-batch replay; seed a " +
         "streaming store (seed*IngestStore) or use the batch-cadence " +
         "refresh instead")
-    // the ledger must be MONOTONIC: Structured Streaming's batch ids only
-    // ever replay the LAST uncommitted batch (batchId == max) or advance
-    // past it (batchId > max) — a batchId BELOW the store's high-water
-    // mark means the query was restarted with a FRESH checkpoint, whose
-    // renumbered batch 0 would dynamic-overwrite the old batch-0 ledger
-    // slice with DIFFERENT rows: silent data loss, refused loudly instead
-    // (recover by graduating the store and re-seeding, or by restoring
-    // the original checkpoint). The aggregate touches only the partition
-    // column — directory values, no data-file column reads.
-    // coalesce: an EMPTY store aggregates max to NULL — let it pass here
-    // so requireStoreSig below refuses it with the rebuild message
-    val maxLedger = store
-      .agg(coalesce(max(col("ingest_batch").cast("long")),
-        lit(Long.MinValue)))
-      .head().getLong(0)
-    require(batchId >= maxLedger,
-      s"$what($storeDir): ledger regression — micro-batch $batchId is " +
-        s"below the store's high-water mark $maxLedger; the stream was " +
-        "restarted with a fresh checkpoint and its renumbered batches " +
-        "would silently overwrite committed ledger slices. Graduate the " +
-        "store and re-seed (or restore the original checkpoint)")
     val corpus = store
-      .filter(col("ingest_batch") =!= lit(batchId))
-      .select(indexRows.columns.toIndexedSeq.map(col): _*)
+      .filter(col(Ledger.column) =!= lit(batchId))
+      .select(built.columns.toIndexedSeq.map(col): _*)
     AnnIndex.requireStoreSig(corpus, f.sigCol, f.sig, allowEmpty = false,
       what = s"$what($storeDir)", staleDesc = f.stale)
-    // batchId == max passes the monotonic guard above because a
-    // legitimate engine replay re-runs the LAST batch — but a FRESH
-    // checkpoint whose renumbered batch 0 lands exactly on a
-    // one-batch-old store's high-water mark would slip through as a fake
-    // "replay" and overwrite the committed slice with foreign rows. The
-    // commit MARKER (written after a slice lands, below) distinguishes
-    // them: if this id is already marker-committed, a true replay
-    // carries byte-identical rows (the index rows are a pure function of
-    // the checkpoint-defined batch), so an order-free content
-    // fingerprint of incoming-vs-stored must match — a mismatch is the
-    // renumbered-restart data-loss case, refused before a row moves. A
-    // MISSING marker means the first attempt died between the writes and
-    // its marker — the stored slice may be partial, the replay overwrites
-    // it whole, and no check is possible or needed. The fingerprint
-    // costs one scan of the batch + one partition-pruned scan of the one
-    // slice, paid ONLY on the rare replay/collision path, never on
-    // normal progress (batchId == max + 1).
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$storeDir/_ledger_commit_$batchId")
-    val fs = marker.getFileSystem(hadoopConf)
-    if (batchId == maxLedger && fs.exists(marker)) {
-      val fields = indexRows.schema.fields.toIndexedSeq
-      val slice = ledgerAlignTo(
-        store.filter(col("ingest_batch") === lit(batchId)), fields)
-      val incoming = ledgerContentFp(
-        indexRows.select(fields.map(f => col(f.name)): _*))
-      require(incoming == ledgerContentFp(slice),
-        s"$what($storeDir): ledger collision — micro-batch $batchId is " +
-          "already committed with DIFFERENT contents; the stream was " +
-          "restarted with a fresh checkpoint and its renumbered batch " +
-          "would silently overwrite the committed slice. Graduate the " +
-          "store and re-seed (or restore the original checkpoint)")
-    }
+    val indexRows = if (pairsMine.isEmpty) built else built.localCheckpoint()
+    if (ledger.committed(batchId))
+      ledger.requireReplay(batchId, indexRows,
+        store.filter(col(Ledger.column) === lit(batchId)))
     pairsMine.foreach { case (pairsDir, mine) =>
-      // materialized BEFORE the store append (the write below would
-      // otherwise re-evaluate the lazy mine against a corpus that
-      // already contains the batch); isEmpty is then free, and an empty
-      // mine is forced through one task so the slice carries a
-      // schema-bearing file
-      val pairs = mine(staged, corpus).localCheckpoint()
-      (if (pairs.isEmpty) pairs.repartition(1) else pairs)
+      mine(indexRows, corpus)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$pairsDir/ingest_batch=$batchId")
+        .parquet(Ledger.slice(pairsDir, batchId))
     }
-    indexRows.withColumn("ingest_batch", lit(batchId))
+    indexRows.withColumn(Ledger.column, lit(batchId))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(("ingest_batch" +: f.partitionCols): _*).parquet(storeDir)
-    fs.create(marker, true).close()
+      .partitionBy((Ledger.column +: f.partitionCols): _*).parquet(storeDir)
+    ledger.commit(batchId)
   }
 
   /** Incremental connected components: fold a NEW batch of pairs (e.g.

@@ -266,19 +266,13 @@ object Maintenance {
   def ledgerAudit(spark: SparkSession, dir: String,
                   expectMarkers: Boolean = true): DataFrame = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(root).map(_.getPath.getName)
-    val slices = entries.filter(_.startsWith("ingest_batch="))
-      .map(_.stripPrefix("ingest_batch=").toLong).toSet
-    val markers = entries.filter(_.startsWith("_ledger_commit_"))
-      .map(_.stripPrefix("_ledger_commit_").toLong).toSet
+    val ledger = graft.streaming.Ledger(spark, dir, "ledgerAudit", "")
+    val (slices, markers) = ledger.listing()
     require(slices.nonEmpty,
-      s"ledgerAudit($dir): no ingest_batch=<id> slices — this is not a " +
+      s"ledgerAudit($dir): no ledger slices — this is not a " +
         "ledgered streaming layout (a graduated store has no ledger to " +
         "audit)")
     val live = slices.filter(_ >= 0L)
-    val committed = if (expectMarkers) live ++ markers else live
     // gaps via sorted-interval walk, never materializing the 0..max
     // range: a grafted foreign directory with a huge id (e.g.
     // ingest_batch=9999999999) — exactly the anomaly this audit exists
@@ -288,29 +282,26 @@ object Maintenance {
     // missing ids below the mark means a foreign id was grafted in (or
     // nearly every slice was deleted), and the directory listing itself
     // is the useful evidence at that point, not a million-row frame.
-    val gaps: Seq[Long] =
-      if (committed.isEmpty) Seq.empty[Long]
-      else {
-        val hwm = committed.max
-        val sortedLive = live.toSeq.sorted
-        val nGaps = (hwm + 1L) - sortedLive.size
-        require(nGaps <= 1000000L,
-          s"ledgerAudit($dir): $nGaps missing batch ids below the " +
-            s"high-water mark $hwm (${sortedLive.size} live slices) — " +
-            "an out-of-band foreign id was grafted into the layout, or " +
-            "nearly all committed slices were deleted; refusing to " +
-            "enumerate the gaps as rows. Inspect the directory listing " +
-            "directly and remove the foreign entry (or the dead layout)")
-        ((-1L +: sortedLive) :+ (hwm + 1L)).sliding(2).flatMap {
-          case Seq(a, b) => (a + 1L) until b
-          case _ => Seq.empty[Long]
-        }.toSeq
-      }
+    val hwm = (if (expectMarkers) live ++ markers else live)
+      .foldLeft(-1L)(math.max)
+    val sortedLive = live.toSeq.sorted
+    val nGaps = (hwm + 1L) - sortedLive.size
+    require(nGaps <= 1000000L,
+      s"ledgerAudit($dir): $nGaps missing batch ids below the " +
+        s"high-water mark $hwm (${sortedLive.size} live slices) — " +
+        "an out-of-band foreign id was grafted into the layout, or " +
+        "nearly all committed slices were deleted; refusing to " +
+        "enumerate the gaps as rows. Inspect the directory listing " +
+        "directly and remove the foreign entry (or the dead layout)")
+    val gaps = ((-1L +: sortedLive) :+ (hwm + 1L)).sliding(2).flatMap {
+      case Seq(a, b) => (a + 1L) until b
+      case _ => Seq.empty[Long]
+    }.toSeq
     // file count on the layout's own FS (parquetFileCount walks java.nio
     // paths, i.e. local disk only)
     def sliceFiles(b: Long): Long = {
-      val it = fs.listFiles(
-        new org.apache.hadoop.fs.Path(s"$dir/ingest_batch=$b"), true)
+      val it = ledger.fs.listFiles(
+        new org.apache.hadoop.fs.Path(ledger.slice(b)), true)
       var n = 0L
       while (it.hasNext)
         if (it.next().getPath.getName.endsWith(".parquet")) n += 1

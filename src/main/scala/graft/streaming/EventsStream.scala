@@ -1097,99 +1097,42 @@ object EventsStream {
           codebooks, storeDir, batchId, batch.toDF(), embCol)
     }
 
-  /** Exactly-once ENRICHMENT sink — the store writers' replay-ledger
-    * discipline ([[graft.operators.Dedup.storeIngestBatch]]) applied to
-    * the OUTPUT side of a streaming SERVE face. A foreachBatch that
-    * appends per-batch serve results (each arriving document's nearest
-    * corpus neighbors, its near-dup verdict, …) is at-least-once: the
-    * engine replays the last uncommitted micro-batch after a crash, and
-    * a replayed append silently doubles that batch's result rows. Here
-    * each batch's results land as a whole-slice overwrite at the
-    * explicit `outDir/ingest_batch=<id>` path — results are a pure
-    * function of (batch, static store), so a replay rewrites the slice
-    * byte-identically — with the same three guards as the stores:
-    * MONOTONIC ledger (a batch id below the sink's high-water mark means
-    * a fresh-checkpoint restart whose renumbered batches would overwrite
-    * committed result slices with different rows — refused loudly; the
-    * high-water mark reads only directory names, no data), a per-batch
-    * COMMIT MARKER whose content-fingerprint check (order-free
-    * count + bit_xor(xxhash64), paid only on the rare replay path)
-    * distinguishes a true replay from a renumbered foreign batch landing
-    * exactly ON the high-water mark, and an EMPTY result still landing
-    * one schema-bearing zero-row file so `outDir` is readable from the
-    * first micro-batch (a markerless slice — crash between write and
-    * marker — heals by whole-slice overwrite, no check possible or
-    * needed). `spark.read.parquet(outDir)` sees the slices as one
-    * `ingest_batch`-partitioned frame; marker files are
-    * underscore-prefixed and invisible to the reader. */
+  /** Exactly-once ENRICHMENT sink — the store writers' replay ledger
+    * ([[Ledger]]) applied to the OUTPUT side of a streaming SERVE face.
+    * A foreachBatch that appends per-batch serve results (each arriving
+    * document's nearest corpus neighbors, its near-dup verdict, …) is
+    * at-least-once: the engine replays the last uncommitted micro-batch
+    * after a crash, and a replayed append silently doubles that batch's
+    * result rows. Here each batch's results land as a whole-slice
+    * overwrite at the explicit `outDir/ingest_batch=<id>` path, written
+    * once, straight from the serve plan — results are a pure function
+    * of (batch, static store), so a replay rewrites the slice
+    * byte-identically — under the ledger's guards: a MONOTONIC
+    * high-water mark of slices and commit markers (directory listing
+    * only), and, when this batch's marker AND slice both exist, the
+    * content-fingerprint compare that tells a true replay from a
+    * renumbered foreign batch landing exactly ON the mark (paid only on
+    * that rare path, where the results are evaluated a second time).
+    * Marker present with the slice MISSING is the Overwrite crash
+    * window (Overwrite deletes the old slice before the rewrite lands):
+    * nothing to compare against, so the overwrite heals it — which is
+    * why the mark refuses every id BELOW a surviving marker. An empty
+    * result still lands one schema-bearing zero-row file, so `outDir`
+    * is readable from the first micro-batch.
+    * `spark.read.parquet(outDir)` sees the slices as one
+    * `ingest_batch`-partitioned frame. */
   private[graft] def serveSinkBatch(spark: org.apache.spark.sql.SparkSession,
                                     outDir: String, batchId: Long,
                                     results: DataFrame, what: String): Unit = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val out = new org.apache.hadoop.fs.Path(outDir)
-    val fs = out.getFileSystem(hadoopConf)
-    // the high-water mark folds in surviving commit MARKERS, not just
-    // slice directory names (ledgerAudit maxes both for the same
-    // reason): if a committed slice directory is deleted while its
-    // marker survives, the marker alone must still hold the mark — a
-    // fresh-checkpoint restart renumbered from 0 would otherwise pass
-    // `batchId >= maxLedger` and silently overwrite committed ids
-    val maxLedger =
-      if (!fs.exists(out)) Long.MinValue
-      else fs.listStatus(out).map(_.getPath.getName)
-        .collect {
-          case n if n.startsWith("ingest_batch=") =>
-            n.stripPrefix("ingest_batch=").toLong
-          case n if n.startsWith("_ledger_commit_") =>
-            n.stripPrefix("_ledger_commit_").toLong
-        }
-        .foldLeft(Long.MinValue)(math.max)
-    require(batchId >= maxLedger,
-      s"$what($outDir): ledger regression — micro-batch $batchId is " +
-        s"below the sink's high-water mark $maxLedger; the stream was " +
-        "restarted with a fresh checkpoint and its renumbered batches " +
-        "would silently overwrite committed result slices. Point the " +
-        "restarted stream at a fresh outDir (or restore the original " +
-        "checkpoint)")
-    // one materialization: the slice write and the (rare) fingerprint
-    // pass would otherwise each re-run the serve plan against the source
-    val staged = results.localCheckpoint()
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$outDir/_ledger_commit_$batchId")
-    val sliceDir = new org.apache.hadoop.fs.Path(
-      s"$outDir/ingest_batch=$batchId")
-    // the fingerprint compare fires whenever THIS batch's marker exists
-    // (with markers folded into maxLedger, a marker for batchId implies
-    // batchId == maxLedger — but keying on the marker, not the equality,
-    // keeps the check robust to how the mark is computed). Marker present
-    // with the slice MISSING is the overwrite crash window (Overwrite
-    // deletes the old slice before the rewrite lands): nothing to compare
-    // against, so the whole-slice overwrite below heals it — a foreign
-    // batch exploiting that window is indistinguishable from the legit
-    // replay, which is why the monotonic mark above refuses every id
-    // BELOW a surviving marker.
-    if (fs.exists(marker) && fs.exists(sliceDir)) {
-      // fingerprint + type-alignment are the store ledger's own bodies
-      // (Dedup.ledgerContentFp / ledgerAlignTo) — one discipline, so a
-      // fingerprint-rule fix can never land on one ledger and not the
-      // other
-      val fields = staged.schema.fields.toIndexedSeq
-      val slice = graft.operators.Dedup.ledgerAlignTo(
-        spark.read.parquet(s"$outDir/ingest_batch=$batchId"), fields)
-      val incoming = graft.operators.Dedup.ledgerContentFp(
-        staged.select(fields.map(f => col(f.name)): _*))
-      require(incoming == graft.operators.Dedup.ledgerContentFp(slice),
-        s"$what($outDir): ledger collision — micro-batch $batchId is " +
-          "already committed with DIFFERENT results; the stream was " +
-          "restarted with a fresh checkpoint and its renumbered batch " +
-          "would silently overwrite the committed slice. Point the " +
-          "restarted stream at a fresh outDir (or restore the original " +
-          "checkpoint)")
-    }
-    (if (staged.isEmpty) staged.repartition(1) else staged)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outDir/ingest_batch=$batchId")
-    fs.create(marker, true).close()
+    val ledger = Ledger(spark, outDir, what, "Point the restarted stream " +
+      "at a fresh outDir (or restore the original checkpoint)")
+    ledger.requireMonotonic(batchId)
+    if (ledger.committed(batchId) && ledger.hasSlice(batchId))
+      ledger.requireReplay(batchId, results,
+        spark.read.parquet(ledger.slice(batchId)))
+    results.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(ledger.slice(batchId))
+    ledger.commit(batchId)
   }
 
   /** Streaming SERVE face over the persisted wide-family ANN store: each
@@ -1204,14 +1147,10 @@ object EventsStream {
     * "enrich every arriving document with its corpus neighbors" pattern
     * a 100 TB ingest pipeline runs continuously. The `store` frame is
     * static by contract (graduate/compact it against a stopped stream —
-    * the store writers' own cadence rule). The RESULTS are staged once
-    * inside [[serveSinkBatch]] (the slice write and the rare
-    * fingerprint pass share one evaluation); the batch itself is NOT
-    * checkpointed — its only extra consumer is the O(1)
-    * unique-query-id guard aggregate over the small query side, and a
-    * per-micro-batch localCheckpoint on a continuously running stream
-    * would pin one more cached RDD per batch until a driver GC lets
-    * the ContextCleaner reclaim it. Needs
+    * the store writers' own cadence rule). Nothing is checkpointed per
+    * micro-batch: [[serveSinkBatch]] writes the results straight from
+    * the serve plan, and the batch's only extra consumer is the O(1)
+    * unique-query-id guard aggregate over the small query side. Needs
     * `.option("checkpointLocation", …)` and a trigger, like the store
     * writers. */
   def annServeStream(rows: DataFrame, qIdCol: String, qEmbCol: String,

@@ -706,9 +706,9 @@ object Stress {
     // constant-size query batch (unscaled, like the routing fit) is
     // answered by annJoinIndexed from a persisted wide store over the
     // M-scaled corpus, then landed (a) through the exactly-once
-    // serveSinkBatch — high-water-mark listing, localCheckpoint,
-    // whole-slice write, commit marker — vs (b) a blind parquet append
-    // of the same results. serve_sink_replay re-lands the SAME batch at
+    // serveSinkBatch — high-water-mark listing, whole-slice write,
+    // commit marker — vs (b) a blind parquet append of the same
+    // results. serve_sink_replay re-lands the SAME batch at
     // its committed id: the rare crash-replay path, which additionally
     // pays the order-free content-fingerprint compare against the
     // stored slice. All three rows are serve-dominated and should stay

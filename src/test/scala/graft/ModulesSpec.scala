@@ -1356,10 +1356,9 @@ class ModulesSpec extends AnyFunSuite {
     // component must split them
     val a = Seq((1L, "x"), (1L, "x")).toDF("id", "v")
     val b = Seq((2L, "y"), (2L, "y")).toDF("id", "v")
-    assert(Dedup.ledgerContentFp(a) != Dedup.ledgerContentFp(b),
-      "even-multiplicity slices collided")
-    assert(Dedup.ledgerContentFp(a) == Dedup.ledgerContentFp(a.orderBy(desc("id"))),
-      "fingerprint is not order-free")
+    val fp = graft.streaming.Ledger.contentFp _
+    assert(fp(a) != fp(b), "even-multiplicity slices collided")
+    assert(fp(a) == fp(a.orderBy(desc("id"))), "fingerprint is not order-free")
     // a mixed-geometry index (manual union of two stores — every refresh
     // path refuses to create one) must not pair fingerprints through
     // coincidentally-equal chunk values of DIFFERENT widths: fp=1 at
@@ -2529,12 +2528,12 @@ class ModulesSpec extends AnyFunSuite {
       s"Spark ML outside AnnIndex.ivfFit:\n${uses.mkString("\n")}")
   }
 
-  test("localCheckpoint call sites in operators/ and queries/ do not grow") {
+  test("localCheckpoint call sites in operators/, queries/ and streaming/ do not grow") {
     import scala.jdk.CollectionConverters._
     // a ratchet, lowered as sites go: ROADMAP item 2 replaces the eager
     // checkpoints with one lazy sharing helper, so a new site needs that
     // helper instead
-    val sites = Seq("operators", "queries").flatMap { d =>
+    val sites = Seq("operators", "queries", "streaming").flatMap { d =>
       val root = java.nio.file.Paths.get(s"src/main/scala/graft/$d")
       assert(java.nio.file.Files.isDirectory(root),
         s"no $root under ${sys.props("user.dir")}")
@@ -2547,8 +2546,9 @@ class ModulesSpec extends AnyFunSuite {
           }
         }
     }
-    assert(sites.size <= 57, s"${sites.size} `.localCheckpoint(` call " +
-      "sites under graft/{operators,queries}, above the ratchet of 57 — " +
+    assert(sites.size <= 56, s"${sites.size} `.localCheckpoint(` call " +
+      "sites under graft/{operators,queries,streaming}, above the ratchet " +
+      "of 56 — " +
       "ROADMAP item 2 (one lazy sharing helper) retires them; lower the " +
       s"ratchet when a site goes, never raise it:\n${sites.mkString("\n")}")
   }
@@ -5009,11 +5009,22 @@ class ModulesSpec extends AnyFunSuite {
     val (_, ivfJobs) = jobsStartedBy("ivf-ingest-batch") {
       AnnIndex.ivfStoreIngestBatch(spark, model, ivfDir, 0L, batch, "emb")
     }
+    // the read side: one annServeStream micro-batch's serve + sink over
+    // the grown store (static by contract, so read outside the count)
+    val served = spark.read.parquet(embDir).drop("ingest_batch")
+    val (_, serveJobs) = jobsStartedBy("serve-sink-batch") {
+      EventsStream.serveSinkBatch(spark, s"$base/served", 0L,
+        AnnIndex.annJoinIndexed(batch, "id", "emb", served, 4, 3, k = 3),
+        "annServeStream")
+    }
     assert(spark.read.parquet(s"$base/pairs").count() > 0,
       "the mine went vacuous")
-    assert((embJobs, ivfJobs) == (13, 6),
-      s"one embedding micro-batch started $embJobs jobs and one IVF " +
-        s"micro-batch $ivfJobs")
+    assert(spark.read.parquet(s"$base/served").count() > 0,
+      "the serve went vacuous")
+    assert((embJobs, ivfJobs, serveJobs) == (9, 4, 8),
+      s"one embedding micro-batch started $embJobs jobs, one IVF " +
+        s"micro-batch $ivfJobs and one serve micro-batch $serveJobs")
+    graft.sources.Maintenance.deleteLocalTree(spark, base)
   }
 
   test("streaming store ingest: a replayed micro-batch overwrites, never appends") {
@@ -5241,6 +5252,42 @@ class ModulesSpec extends AnyFunSuite {
       .select(col("a_id"), col("b_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted == mp,
       "replayed minhash batch doubled pairs")
+  }
+
+  test("streaming store ingest: a surviving commit marker holds the high-water mark") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    // delete a committed slice directory but keep its marker: the mark
+    // must stay at the marker's id, so a lower id (even a byte-identical
+    // replay of an older batch) is a ledger regression, not a silent
+    // rewrite of a committed slice
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_stream_marker").toString
+    val mk = (id: Long, seed: Long) =>
+      (id, Array.tabulate(4)(j => (((seed >> (j * 7)) & 127) - 63.0)))
+    val corpus = (1L to 8L).map(i => mk(i, i * 7919L)).toDF("id", "emb")
+    val store = s"$base/store"
+    Dedup.seedEmbedIngestStore(corpus, store, "id", "emb", 4, 3)
+    val batches = (0L to 2L).map(b => Seq(mk(100L + b, 31337L * (b + 1)))
+      .toDF("id", "emb"))
+    def ingest(b: Long, batch: org.apache.spark.sql.DataFrame): Unit =
+      Dedup.embedStoreIngestBatch(spark, store, s"$base/pairs", b, batch,
+        "id", "emb", 4, 3, 0.9)
+    ingest(0L, batches(0))
+    ingest(1L, batches(1))
+    graft.sources.Maintenance.deleteLocalTree(spark, s"$store/ingest_batch=1")
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$store/_ledger_commit_1")))
+    def ids() = spark.read.parquet(store)
+      .select(col("ingest_batch").cast("long"), col("id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val before = ids()
+    val e = intercept[IllegalArgumentException](ingest(0L, batches(0)))
+    assert(e.getMessage.contains("ledger regression"), e.getMessage)
+    assert(ids() == before, "the refused batch still mutated the store")
+    ingest(2L, batches(2)) // advancing past the mark stays legal
+    assert(ids() == (before :+ ((2L, 102L))).sorted)
+    graft.sources.Maintenance.deleteLocalTree(spark, base)
   }
 
   test("streaming store ingest: checkpoint restart continues the ledger; a fresh checkpoint is refused") {
