@@ -1615,9 +1615,10 @@ object Dedup {
     * which pass `pairsMine = None` (the store IS the product). The
     * replay ledger is [[graft.streaming.Ledger]]'s: monotonic against
     * the directory-listed high-water mark of slices and commit markers,
-    * and — whenever this batch's marker exists — the incoming index rows
-    * must fingerprint equal to the stored slice (a missing slice then
-    * reads as empty and is refused unless the batch is empty too).
+    * and — when this batch's marker and slice both exist — the incoming
+    * index rows must fingerprint equal to the stored slice (a missing
+    * slice, from an empty batch or a crash inside the Overwrite commit,
+    * heals by the rewrite).
     *
     * `f.index` builds the batch's stamped index rows once (the ledger
     * column is stamped here); `pairsMine` receives those rows and the
@@ -1659,9 +1660,8 @@ object Dedup {
     AnnIndex.requireStoreSig(corpus, f.sigCol, f.sig, allowEmpty = false,
       what = s"$what($storeDir)", staleDesc = f.stale)
     val indexRows = if (pairsMine.isEmpty) built else built.localCheckpoint()
-    if (ledger.committed(batchId))
-      ledger.requireReplay(batchId, indexRows,
-        store.filter(col(Ledger.column) === lit(batchId)))
+    ledger.requireReplay(batchId, indexRows,
+      store.filter(col(Ledger.column) === lit(batchId)))
     pairsMine.foreach { case (pairsDir, mine) =>
       mine(indexRows, corpus)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)

@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType,
   *  - [[BoundingBoxRule]] — rewrites `haversine_km(...) <= r` filters into
   *    themselves AND a sargable lat/lon bounding box, which is what lets a
   *    Parquet scan prune row groups at 100 TB (SURVEY.md §4's GIST-index
-  *    substitute).
+  *    substitute);
+  *  - [[SharedStrategy]] — plans the [[Shared]] node behind
+  *    [[Shared.share]] as one reusable exchange.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -98,5 +100,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }))
     }
     ext.injectOptimizerRule(_ => BoundingBoxRule)
+    ext.injectPlannerStrategy(_ => SharedStrategy)
   }
 }

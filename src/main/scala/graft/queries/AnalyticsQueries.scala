@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables._
 import graft.functions.{advice, geo, hours, text, vectors, DuckDialect => D, SparkDialect => S}
 import graft.operators.{AnnIndex, GeoSearch, VectorSearch}
+import graft.plans.Shared.share
 
 /** The remaining reference-operator families as oracle-backed queries:
   * nearest-k geo join (J3/W2), full hybrid search (G1-G5), regex extraction
@@ -499,12 +500,8 @@ object AnalyticsQueries {
       import graft.operators.Dedup
       val all = embeddings(s, dir).select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
-      // localCheckpoint = the in-session stand-in for the PERSISTED store
-      // this entry point serves: it materializes the bucket column, so the
-      // isnotnull(bucket) Catalyst infers from the join lands on the
-      // checkpointed rows instead of being pushed below a live bucket-UDF
-      // projection and re-running the kernel per corpus row (the pairJoin
-      // trap annJoinIndexed's scaladoc warns inline builds about)
+      // store stand-in (graft.plans.Shared); as a leaf it also keeps the
+      // inferred isnotnull(bucket) off a live bucket-UDF projection
       val store = Dedup.embeddingBucketIndex(all.filter(col("vec_id") >= 20),
         "vec_id", "emb", dim = 64, planes = 12).localCheckpoint()
       AnnIndex.annJoinIndexed(
@@ -581,9 +578,7 @@ object AnalyticsQueries {
       // scale, and what keeps the bench cost at the serving path
       val model = AnnIndex.ivfFit(
         corpus.filter(col("vec_id") % 4 === 1), "sv", nLists = 16)
-      // localCheckpoint = the in-session stand-in for the persisted
-      // list_id-partitioned store this entry point serves (the
-      // q_knn_join_indexed discipline)
+      // store stand-in (graft.plans.Shared): the list_id-partitioned store
       val store = AnnIndex.ivfStore(model,
         corpus.select(col("vec_id"), col("sv")), "sv").localCheckpoint()
       val routed = AnnIndex.ivfJoinIndexed(queries, "vec_id", "sv",
@@ -653,8 +648,7 @@ object AnalyticsQueries {
       // page 96, measured, and page 192 covers it at every SF
       val cb = Quantize.pqFit(corpus.filter(col("vec_id") % 4 === 1),
         "emb", dim = 64, m = 8, nCentroids = 32, maxIter = 2)
-      // localCheckpoint = the in-session stand-in for the persisted code
-      // table this entry point serves (the q_knn_join_indexed discipline)
+      // store stand-in (graft.plans.Shared): the persisted code table
       val store = Quantize.pqEncode(corpus, "emb", cb).localCheckpoint()
       val routed = Quantize.pqJoinIndexed(queries, "vec_id", "emb", cb,
           store, "vec_id", "emb", k = 3, overFetch = 64)
@@ -1105,6 +1099,8 @@ object AnalyticsQueries {
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val q = embeddings(s, dir).filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>").as("qe"))
+      // iterative loop (graft.plans.Shared): every greedy pick re-reads
+      // cand and pairs
       val cand = emb.crossJoin(broadcast(q))
         .withColumn("simq", vectors.cosineSim(col("emb"), col("qe")))
         .orderBy(desc("simq"), col("vec_id"))
@@ -1571,7 +1567,7 @@ object AnalyticsQueries {
         "zeros over the observed day span — the resample/reindex step every " +
         "monitoring dashboard needs before plotting or anomaly-scoring a " +
         "sparse series. One scan builds the tiny daily aggregate " +
-        "(localCheckpoint — bounded by days x types, never by raw rows); " +
+        "(shared — bounded by days x types, never by raw rows); " +
         "the day spine and type list derive from it without re-reading " +
         "events, and the fill join is broadcast",
       Some(s"""WITH f AS (
@@ -1586,11 +1582,10 @@ object AnalyticsQueries {
               |FROM span s CROSS JOIN types t
               |LEFT JOIN daily d ON d.day = s.day AND d.event_type = t.etype
               |ORDER BY day, event_type""".stripMargin)) { (s, dir) =>
-      val daily = events(s, dir)
+      val daily = share(events(s, dir)
         .filter(col("value") > 200.0)
         .groupBy(to_date(expr(S.dayTrunc("ts"))).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint() // one events scan; spine + types + join reuse it
+        .agg(count(lit(1)).as("n")))
       val span = daily.agg(min("day").as("d0"), max("day").as("d1"))
         .select(explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
       val types = daily.select("event_type").distinct()

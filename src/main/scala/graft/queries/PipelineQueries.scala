@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables._
 import graft.functions.{text, vectors, DuckDialect => D, SparkDialect => S}
+import graft.plans.Shared.share
 
 /** The training-data-curation stage of a 100 TB pipeline, as oracle-backed
   * operators: deterministic sampling, train/val/test splitting, per-source
@@ -142,7 +143,8 @@ object PipelineQueries {
     * chars), the best pair is a global top-1 (TakeOrderedAndProject),
     * re-segmentation is the compiled one-pass merge kernel under a
     * broadcast 1-row cross join. Lineage is truncated per round with
-    * localCheckpoint (the Dedup.clusters recipe): iteration K's plan
+    * localCheckpoint (the iterative-loop case of [[graft.plans.Shared]]):
+    * iteration K's plan
     * would otherwise nest K-1's twice — once via the best-pair aggregate,
     * once via the re-segment join — doubling per round. */
   private[graft] def bpeTrain(s: org.apache.spark.sql.SparkSession, dir: String,
@@ -748,15 +750,10 @@ object PipelineQueries {
            |FROM seg s LEFT JOIN boiler b ON s.seg = b.seg
            |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin
       }) { (s, dir) =>
-      // the exploded segment table materializes ONCE (the q_lang_id_ngram
-      // localCheckpoint recipe): both the boilerplate-df aggregate and the
-      // join probe side read it, and uncheckpointed the segment tokenize
-      // kernel re-ran per subtree (2 corpus scans in the plan)
-      val seg = documents(s, dir)
+      val seg = share(documents(s, dir)
         .select(col("doc_id"),
           posexplode(expr(text.segments(S, "text", 8))).as(Seq("pos", "seg")))
-        .select(col("doc_id"), (col("pos") + 1).as("seg_idx"), col("seg"))
-        .localCheckpoint(true)
+        .select(col("doc_id"), (col("pos") + 1).as("seg_idx"), col("seg")))
       val boiler = seg.groupBy("seg")
         .agg(countDistinct(col("doc_id")).as("df"))
         .filter(col("df") >= 2)
@@ -1763,16 +1760,7 @@ object PipelineQueries {
       // the engine never sees the closed forms: monos and edits are real
       // bytes through the real PPM writer, hashed by the real decode
       // kernel — only the ORACLE replays fp=0 and fp=1<<(r*8+7)
-      // ONE eager localCheckpoint'd fixture section feeds every leg (r13,
-      // the q_dedup_apply_salvaged recipe generalized): the ground-truth,
-      // capped, and salvage legs all reference the chunk index from
-      // several subtrees, and under cache() every leg's action still
-      // re-PLANS (optimizes + codegens) the full decode+explode lineage
-      // per subtree reference — the KB-sized checkpoint truncates the
-      // lineage once, so every later leg optimizes over a leaf table.
-      // Measured (sf0.1, REPS=3 medians, interleaved same-session A/B vs
-      // the cached r12 shape): 3.8-5.9 s vs 25-39 s — the per-leg
-      // planning tax, not execution, WAS the trilogy's fixture floor.
+      // recall leg (graft.plans.Shared): one chunk index feeds every leg
       val index = Dedup.hammingChunkIndex(
         docs.filter(col("doc_id") < 100)
           .select((col("doc_id") + 100000).as("id"),
@@ -1786,11 +1774,8 @@ object PipelineQueries {
       // ground truth: the UNCAPPED pigeonhole join (exhaustive for
       // hamming <= 3 at 4 chunks) — affordable here because the fixture
       // is small; at 100 TB this is exactly the join you cannot run,
-      // which is why the recall number matters. Each pair frame is
-      // checkpointed EAGERLY (one short-plan job each over the index
-      // leaf; a fused single-job variant raced the unmaterialized
-      // intermediates and re-ran the salvage chain — measured ~1.6x
-      // slower in the r8 cached shape)
+      // which is why the recall number matters. Each pair frame is a
+      // recall leg too (a fused single-job variant measured ~1.6x slower)
       val truePairs = Dedup.hammingPairsFromIndex(index, maxHamming = 3)
         .select(col("a_id"), col("b_id")).localCheckpoint(true)
       val capped = Dedup.hammingPairsFromIndex(index, maxHamming = 3,
@@ -1914,11 +1899,7 @@ object PipelineQueries {
           .select((col("doc_id") + 200000).as("id"),
             concat(lit(boiler + " zz"), col("doc_id").cast("string"))
               .as("text")))
-      // ONE eager localCheckpoint'd signature pass feeds the capped face,
-      // the salvage face, the banding AND the truth leg — the persisted-
-      // signature-store shape, checkpointed instead of cached (r13): the
-      // KB-sized leaf truncates the shingle+minhash lineage once, so no
-      // leg re-plans it (the q_dedup_cap_recall fixture-section recipe)
+      // recall leg (graft.plans.Shared): one signature pass feeds every leg
       val sigs = Dedup.minhashSignatures(corpus, "id", "text",
         k = 16, shingleN = 3).localCheckpoint(true)
       // ground truth: exact Jaccard over ALL pairs (one constant block —
@@ -2033,17 +2014,9 @@ object PipelineQueries {
           .select((col("doc_id") + 200000).as("id"),
             Multimodal.dHash64Udf(
               Multimodal.monoEditImageForDocUdf(col("doc_id"))).as("fp")))
-        // fingerprints decode ONCE: the index build below AND the clusters
-        // vertex/singleton side both read fps, and uncheckpointed the real
-        // mono/edit image decodes re-ran per subtree
+        // driver-side reader (graft.plans.Shared): Dedup.clusters' label
+        // loop reads fps and the index below
         .localCheckpoint(true)
-      // capped + salvage over ONE index, MATERIALIZED once (the
-      // q_lang_id_ngram localCheckpoint recipe): both tiers reference the
-      // index from several subtrees and the propagation re-resolves the
-      // plan every round — uncached, the 190-row decode+explode re-ran
-      // per subtree and the query measured ~12.3 s; checkpointed it is
-      // the persisted-store read the recall queries document (~8.6 s,
-      // the remaining cost being label propagation's per-round job floor)
       val index = Dedup.hammingChunkIndex(fps, "id", "fp",
         bits = 64, chunks = 4).localCheckpoint(true)
       val pairs = Dedup.hammingPairsFromIndex(index, maxHamming = 3,
@@ -2183,10 +2156,7 @@ object PipelineQueries {
           "transform(sequence(0, 15), j -> " +
             "coalesce(CAST(size(filter(th, t -> t % 16 = j)) AS DOUBLE)," +
             " CAST(0 AS DOUBLE)))"))
-      // image vectors decode ONCE (the q_lang_id_ngram localCheckpoint
-      // recipe): the fit, the store assignment AND the exact baseline all
-      // read imgs, and uncheckpointed the real decode+histogram UDF chain
-      // re-ran per subtree
+      // driver-side reader (graft.plans.Shared): ivfFit reads imgs too
       val imgs = documents(s, dir).filter(col("doc_id") < 60)
         .select(col("doc_id").as("img_id"),
           Multimodal.imageGrayBucketsUdf(
@@ -2332,8 +2302,7 @@ object PipelineQueries {
         .withColumn("ivn",
           expr("transform(ivd, x -> x / greatest(inorm, 1e-12d))"))
         .select(col("img_id"), col("ivd"), col("inorm"), col("ivn"))
-        // image vectors decode ONCE (the q_crossmodal_ann recipe): fit,
-        // assignment and the exact baseline all read imgs
+        // driver-side reader (graft.plans.Shared): ivfFit reads imgs too
         .localCheckpoint(true)
       val model = AnnIndex.ivfFit(imgs, "ivn", nLists = 8)
       val assigned = AnnIndex.ivfAssign(model, imgs, "ivn")
@@ -3099,12 +3068,7 @@ object PipelineQueries {
         .select(col("doc_id"), expr(text.tokens(S, "text")).as("toks"))
         .filter(expr(s"${S.size("toks")} >= 2"))
         .select(col("doc_id"), explode(expr(pairsS)).as("pair"))
-      // the bigram table materializes ONCE (vocab-bigram-sized — the
-      // trained-model checkpoint recipe): its two consumers (cfreq and the
-      // scoring join) otherwise each re-ran the full corpus tokenize +
-      // pair explode + count feeding it
-      val bfreq = bg.groupBy("pair").agg(count(lit(1)).as("c2"))
-        .localCheckpoint(true)
+      val bfreq = share(bg.groupBy("pair").agg(count(lit(1)).as("c2")))
       val cfreq = bfreq.groupBy(expr("split_part(pair, ' ', 1)").as("w1"))
         .agg(sum(col("c2")).as("c1"))
       bg.filter(col("doc_id") < 100)
@@ -3161,18 +3125,11 @@ object PipelineQueries {
       val tok = documents(s, dir)
         .select(col("doc_id"), col("source"),
           explode(expr(text.tokens(S, "text"))).as("tok"))
-      // both trained LM tables materialize ONCE (vocab-sized — the
-      // q_lang_id_ngram checkpoint recipe): rawf feeds three consumers
-      // (vocab, rtot, the scoring broadcast) and tgtf two (ttot, the
-      // scoring broadcast), and uncheckpointed each consumer re-ran the
-      // full corpus tokenize + explode + count feeding it
-      val rawf = tok.groupBy("tok").agg(count(lit(1)).as("cr"))
-        .localCheckpoint(true)
+      val rawf = share(tok.groupBy("tok").agg(count(lit(1)).as("cr")))
       val vocab = rawf.agg(count(lit(1)).as("v"))
       val rtot = rawf.agg(sum(col("cr")).as("tr"))
-      val tgtf = tok.filter(col("source").isin("src1", "src2", "src3"))
-        .groupBy("tok").agg(count(lit(1)).as("ct"))
-        .localCheckpoint(true)
+      val tgtf = share(tok.filter(col("source").isin("src1", "src2", "src3"))
+        .groupBy("tok").agg(count(lit(1)).as("ct")))
       val ttot = tgtf.agg(sum(col("ct")).as("tt"))
       tok.filter(col("doc_id") < 100)
         .join(broadcast(rawf), Seq("tok"))
@@ -3286,9 +3243,7 @@ object PipelineQueries {
           s"(CASE WHEN ($x) % 3 = 0 THEN 'com' " +
           s"WHEN ($x) % 3 = 1 THEN 'org' ELSE 'net' END))"
       val link = s"(${text.mix("doc_id")} % 1000)"
-      // the static graph frames are materialized ONCE (the Dedup.clusters
-      // recipe): lazily they would be recomputed — scan + distinct shuffle —
-      // by every one of the 3 unrolled iterations
+      // iterative loop (graft.plans.Shared): 3 unrolled rounds re-read them
       val e = documents(s, dir)
         .select(expr(dom("doc_id")).as("src"), expr(dom(link)).as("dst"))
         .distinct().localCheckpoint()
@@ -3532,21 +3487,14 @@ object PipelineQueries {
       val tok = documents(s, dir)
         .select(col("doc_id"), col("lang"),
           explode(expr(text.tokens(S, "text"))).as("tok"))
-      // the unigram LM table and the per-doc score table each materialize
-      // ONCE (the q_lang_id_ngram checkpoint recipe): freq feeds two
-      // consumers (the total + the scoring broadcast) and docScore two
-      // (the histogram and the final bucket join) — uncheckpointed, each
-      // consumer re-ran the corpus tokenize + count feeding it
-      val freq = tok.groupBy("tok").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
+      val freq = share(tok.groupBy("tok").agg(count(lit(1)).as("c")))
       val tot = freq.agg(sum(col("c")).as("t"))
-      val docScore = tok.join(broadcast(freq), Seq("tok"))
+      val docScore = share(tok.join(broadcast(freq), Seq("tok"))
         .crossJoin(broadcast(tot))
         .select(col("doc_id"), col("lang"), expr(logp).as("lp"))
         .groupBy("doc_id", "lang")
         .agg(expr(S.intDiv("CAST(sum(lp) AS BIGINT)", "CAST(count(*) AS BIGINT)"))
-          .as("ppl"))
-        .localCheckpoint(true)
+          .as("ppl")))
       val hist = docScore.groupBy("lang", "ppl").agg(count(lit(1)).as("cnt"))
       val wCum = Window.partitionBy("lang").orderBy("ppl")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3625,8 +3573,7 @@ object PipelineQueries {
         "BOUNDED bin table; cumulative TP/FP at each threshold ride a " +
         "triangle join over that table (bins x bins, broadcast) — no " +
         "global sort, no single-task window, corpus read once " +
-        "(localCheckpoint pins the bin table so the total row cannot " +
-        "re-scan)",
+        "(the bin table is shared, so the total row cannot re-scan)",
       Some {
         s"""WITH b AS $evalBinsSql,
            |tot AS (SELECT CAST(sum(p) AS BIGINT) AS tp_all FROM b),
@@ -3646,7 +3593,7 @@ object PipelineQueries {
                6)} AS f1_x1e6
            |FROM pr, tot ORDER BY threshold_bin""".stripMargin
       }) { (s, dir) =>
-      val b = evalBinsDf(s, dir).localCheckpoint(true)
+      val b = share(evalBinsDf(s, dir))
       val tot = b.agg(sum("p").cast("long").as("tp_all"))
       val b2 = b.select(col("bin").as("bin2"), col("p").as("p2"),
         col("n").as("n2"))
@@ -3697,7 +3644,7 @@ object PipelineQueries {
            |FROM below, tot GROUP BY n_pos, n_neg
            |ORDER BY n_pos""".stripMargin
       }) { (s, dir) =>
-      val b = evalBinsDf(s, dir).localCheckpoint(true)
+      val b = share(evalBinsDf(s, dir))
       val tot = b.agg(sum("p").cast("long").as("n_pos"),
         sum("n").cast("long").as("n_neg"))
       val b2 = b.select(col("bin").as("bin2"), col("n").as("n2"))
@@ -3974,17 +3921,12 @@ object PipelineQueries {
       // a correctness gate); the engine never joins — the window pairs are
       // generated INSIDE the row by one HOF projection, so the only
       // shuffles are the two vocab-sized aggregates
-      // the tokenized corpus materializes ONCE: the pair kernel and the
-      // unigram side both read dw, and uncheckpointed the tokenize ran
-      // per subtree; nw likewise feeds two broadcast consumers
-      val dw = documents(s, dir)
-        .select(col("doc_id"), expr(text.tokens(S, "text")).as("toks"))
-        .localCheckpoint(true)
+      val dw = share(documents(s, dir)
+        .select(col("doc_id"), expr(text.tokens(S, "text")).as("toks")))
       val pairs = dw.select(explode(expr(windowPairsExpr("toks", 4))).as("p"))
         .select(col("p.wa").as("wa"), col("p.wb").as("wb"))
       val tok = dw.select(explode(col("toks")).as("w"))
-      val nw = tok.groupBy("w").agg(count(lit(1)).as("nw"))
-        .localCheckpoint(true)
+      val nw = share(tok.groupBy("w").agg(count(lit(1)).as("nw")))
       val nt = tok.agg(count(lit(1)).as("n"))
       val ab = pairs.groupBy("wa", "wb").agg(count(lit(1)).as("nab"))
         .filter(col("nab") >= 50)
@@ -4043,9 +3985,7 @@ object PipelineQueries {
               |FROM reach r JOIN best b ON b.w = r.w AND b.pos = r.pos
               |GROUP BY tok ORDER BY n_occurrences DESC, tok
               |LIMIT 25""".stripMargin)) { (s, dir) =>
-      // wf checkpointed: the vocab pipeline and the segmentation side both
-      // read it (the unigram-family shape)
-      val wf = wordFreq(s, dir).localCheckpoint(true)
+      val wf = share(wordFreq(s, dir))
       val top = wf
         .select(col("w"), col("c"), explode(expr("sequence(2, 4)")).as("L"))
         .filter(length(col("w")) >= col("L"))
@@ -4137,10 +4077,7 @@ object PipelineQueries {
               |FROM reach r JOIN chosen s ON s.w = r.w AND s.pos = r.pos
               |GROUP BY tok ORDER BY n_occurrences DESC, tok
               |LIMIT 25""".stripMargin)) { (s, dir) =>
-      // one corpus word count, checkpointed: the vocab pipeline and the
-      // segmentation side both read it — without the leaf the corpus agg
-      // subtree replicates once per consumer
-      val wf = wordFreq(s, dir).localCheckpoint(true)
+      val wf = share(wordFreq(s, dir))
       val vocab = unigramVocab(wf)
       val vl = vocab
         .crossJoin(broadcast(vocab.agg(sum("score").cast("long").as("total"))))
@@ -4217,7 +4154,7 @@ object PipelineQueries {
               |FROM reachb r JOIN chosenb s ON s.w = r.w AND s.pos = r.pos
               |GROUP BY tok ORDER BY n_occurrences DESC, tok
               |LIMIT 25""".stripMargin)) { (s, dir) =>
-      val wf = wordFreq(s, dir).localCheckpoint(true)
+      val wf = share(wordFreq(s, dir))
       val vocab = unigramVocab(wf)
       val vl = vocab
         .crossJoin(broadcast(vocab.agg(sum("score").cast("long").as("total"))))
@@ -4283,18 +4220,12 @@ object PipelineQueries {
            |GROUP BY a.cluster, cent_sum, cent_abs
            |ORDER BY cluster""".stripMargin
       }) { (s, dir) =>
-      // quantized vectors materialize ONCE (the q_cluster_topics recipe):
-      // c0 + both kmAssign probes + the centroid broadcast chains read qv
-      // from separate subtrees — uncheckpointed, the plan held 12 scans
-      val qv = embeddings(s, dir).select(col("vec_id"),
+      val qv = share(embeddings(s, dir).select(col("vec_id"),
         expr(S.transform(S.castDoubleArray("embedding"), "x",
-          "CAST(floor(x * 10000.0 + 0.5) AS BIGINT)")).as("qv"))
-        .localCheckpoint(true)
+          "CAST(floor(x * 10000.0 + 0.5) AS BIGINT)")).as("qv")))
       val c0 = qv.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("qv").as("cq"))
-      // a2 feeds two consumers (sizes + the c2 update): checkpoint so the
-      // 2-iteration Lloyd chain resolves once
-      val a2 = kmAssign(qv, kmUpdate(kmAssign(qv, c0))).localCheckpoint(true)
+      val a2 = share(kmAssign(qv, kmUpdate(kmAssign(qv, c0))))
       val c2 = kmUpdate(a2)
       a2.groupBy("cluster").agg(count(lit(1)).as("n_members"))
         .join(c2.select(col("cid").as("cluster"),
@@ -4386,26 +4317,17 @@ object PipelineQueries {
            |WHERE rk <= 3
            |ORDER BY s.cluster, rank""".stripMargin
       }) { (s, dir) =>
-      // the quantized embedding table materializes ONCE (the
-      // q_lang_id_ngram localCheckpoint recipe): the embedStub tokenize+
-      // hash kernel is the scan's dominant cost and FOUR subtrees read qv
-      // (c0, both kmAssign probes, plus each assignment's centroid
-      // broadcast chain) — uncheckpointed, the plan held 18 parquet scans
-      val qv = documents(s, dir)
+      val qv = share(documents(s, dir)
         .select(col("doc_id").as("vec_id"),
           vectors.embedStub("text", 16).as("e"))
         .select(col("vec_id"), expr(S.transform("e", "x",
-          "CAST(floor(x * 10000.0 + 0.5) AS BIGINT)")).as("qv"))
-        .localCheckpoint(true)
+          "CAST(floor(x * 10000.0 + 0.5) AS BIGINT)")).as("qv")))
       val c0 = qv.filter(col("vec_id") < 4)
         .select(col("vec_id").as("cid"), col("qv").as("cq"))
       val a2 = kmAssign(qv, kmUpdate(kmAssign(qv, c0)))
         .select(col("vec_id").as("doc_id"), col("cluster"))
-      // the exploded token table materializes ONCE: dfq and tf both read
-      // it, and uncheckpointed the corpus tokenize kernel ran per subtree
-      val toks = documents(s, dir)
-        .select(col("doc_id"), explode(expr(text.tokens(S, "text"))).as("tok"))
-        .localCheckpoint(true)
+      val toks = share(documents(s, dir)
+        .select(col("doc_id"), explode(expr(text.tokens(S, "text"))).as("tok")))
       val dfq = toks.distinct().groupBy("tok").agg(count(lit(1)).as("df"))
       val nd = documents(s, dir).agg(count(lit(1)).as("n"))
       val tf = toks.join(a2, "doc_id")

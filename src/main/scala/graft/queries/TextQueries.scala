@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables._
 import graft.functions.{text, DuckDialect => D, SparkDialect => S}
 import graft.operators.Dedup
+import graft.plans.Shared.share
 
 /** Training-data-pipeline queries over the `documents` corpus: the dedup
   * ladder (exact / n-gram Jaccard / MinHash LSH / SimHash / embedding
@@ -140,13 +141,8 @@ object TextQueries {
               |  ${text.fixedPoint("CAST(inter AS DOUBLE) / uni", 4)} AS jaccard_x10k
               |FROM v WHERE inter * 5 >= uni * 4
               |ORDER BY a_id, b_id""".stripMargin)) { (s, dir) =>
-      // the token-set table materializes ONCE — the operator's own
-      // documented production shape (tokenSets scaladoc): the pair plan
-      // references it from three subtrees (prefix explode + both
-      // verification joins), and uncheckpointed the tokenize UDF re-ran
-      // per reference
-      val tk = Dedup.tokenSets(nearDupCorpus(documents(s, dir)),
-        "doc_id", "text").localCheckpoint(true)
+      val tk = share(Dedup.tokenSets(nearDupCorpus(documents(s, dir)),
+        "doc_id", "text"))
       Dedup.prefixFilterJaccardPairsFromSets(tk,
           num = 4, den = 5, maxBucket = 64)
         .select(col("a_id"), col("b_id"),
@@ -411,10 +407,8 @@ object TextQueries {
               .as("emb")))
         .withColumn("bucket",
           graft.operators.AnnIndex.bucketExpr("emb", 64, 8))
-        // the r13 fixture-section recipe (q_embed_cap_recall): eager
-        // KB-sized checkpoints instead of caches, so the five scalar
-        // cells plan against leaf tables instead of re-optimizing the
-        // flood-build + bucket-kernel lineage per action
+        // driver-side reader (graft.plans.Shared): the scalar cells below
+        // are driver-side actions
         .localCheckpoint(true)
       val census = corpus.groupBy(col("bucket"))
         .agg(count(lit(1)).as("n")).localCheckpoint(true)
@@ -570,11 +564,8 @@ object TextQueries {
       val floodBucket = s.range(1)
         .select(AnnIndex.bucketExprOf(expr(arrSpark(capRecallBase)), 64, 8)
           .as("b")).head().getLong(0)
-      // the q_dedup_cap_recall r13 shape: ONE eager localCheckpoint'd
-      // fixture section (the bucketed corpus) feeds the truth, capped
-      // and salvage legs — the KB-sized leaf truncates the flood-build +
-      // bucket-kernel lineage once instead of re-planning it per leg —
-      // then each pair frame checkpoints eagerly in dependency order
+      // recall leg (graft.plans.Shared): one bucketed corpus feeds every
+      // leg, and each pair frame is a leg
       val filtered = e120
         .unionByName(e120.filter(col("vec_id") < 10)
           .select((col("vec_id") + 100000).as("vec_id"),
@@ -689,13 +680,8 @@ object TextQueries {
         .withColumn("lt", lower(col("text")))
         .select(col("doc_id"), col("lang"),
           explode(expr(text.charGramsRaw(S, "lt", 3))).as("g"))
-      // the trained model materializes ONCE (localCheckpoint): four
-      // consumers (tot, v, delta, w0) would otherwise each re-run the
-      // train-split explode + aggregate — and at 100 TB a trained profile
-      // is a persisted artifact applied many times, never re-derived
-      val prof = tg.filter(col("doc_id") % 5 === 1)
-        .groupBy("lang", "g").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
+      val prof = share(tg.filter(col("doc_id") % 5 === 1)
+        .groupBy("lang", "g").agg(count(lit(1)).as("c")))
       val totDf = prof.groupBy("lang").agg(sum(col("c")).as("tot"))
       val vDf = prof.agg(countDistinct(col("g")).as("v"))
       val w0 = totDf.crossJoin(broadcast(vDf))
@@ -1071,14 +1057,8 @@ object TextQueries {
       // The shingle kernel rides pairJoin's `enrich` hook, so it runs only
       // for docs surviving the cap — on a boilerplate-prefix corpus the
       // dropped bulk never pays for its shingles.
-      // the blocked corpus materializes ONCE (the q_dedup_prefix_filter
-      // recipe): pairJoin's cap machinery references it from the
-      // oversized-key census, the anti-join probe AND both self-join
-      // sides, and uncheckpointed the prefix-hash tokenize re-ran per
-      // subtree (24 scans in the plan)
-      val keyed = corpus.select(col("doc_id").as("id"), col("text"),
-        TextSig.prefixHashUdf(col("text"), lit(3)).as("blk"))
-        .localCheckpoint(true)
+      val keyed = share(corpus.select(col("doc_id").as("id"), col("text"),
+        TextSig.prefixHashUdf(col("text"), lit(3)).as("blk")))
       // Dedup.pairJoin: same shuffle_hash'd blocked self-join as the LSH
       // band path, INCLUDING the mega-bucket cap — the r6 verdict's last
       // uncapped skewed-key join. greatest(...,1) guards the 0/0 of an
@@ -1228,8 +1208,8 @@ object TextQueries {
         "3-gram Jaccard >= 0.6. More bands -> lower collision threshold " +
         "-> more candidates at worse precision; the sweep quantifies " +
         "that trade on YOUR corpus instead of trusting the (1/b)^(1/r) " +
-        "formula. Scale shape: the signature table is computed ONCE and " +
-        "localCheckpointed — the sweep's three band self-joins re-read " +
+        "formula. Scale shape: the signature table is computed ONCE per " +
+        "run and shared — the sweep's three band self-joins re-read " +
         "signatures instead of re-tokenizing the corpus per dial (at " +
         "100 TB the signatures persist and the sweep costs 3 band joins, " +
         "not 3 corpus passes); the exact verify only ever runs on " +
@@ -1267,10 +1247,8 @@ object TextQueries {
            |ORDER BY bands""".stripMargin
       }) { (s, dir) =>
       val corpus = nearDupCorpus(documents(s, dir))
-      // one signature pass for the whole sweep: the checkpointed (id, hs,
-      // sig) table is what a real pipeline would persist before tuning
-      val sigs = Dedup.minhashSignatures(corpus, "doc_id", "text",
-        k = 16, shingleN = 3).localCheckpoint()
+      val sigs = share(Dedup.minhashSignatures(corpus, "doc_id", "text",
+        k = 16, shingleN = 3))
       val stats = Seq((2, 8), (4, 4), (8, 2)).map { case (b, r) =>
         Dedup.minhashLshVerifiedPairsFromSignatures(sigs,
             k = 16, bands = b, threshold = 0.0)

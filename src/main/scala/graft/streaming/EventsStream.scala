@@ -1127,9 +1127,8 @@ object EventsStream {
     val ledger = Ledger(spark, outDir, what, "Point the restarted stream " +
       "at a fresh outDir (or restore the original checkpoint)")
     ledger.requireMonotonic(batchId)
-    if (ledger.committed(batchId) && ledger.hasSlice(batchId))
-      ledger.requireReplay(batchId, results,
-        spark.read.parquet(ledger.slice(batchId)))
+    ledger.requireReplay(batchId, results,
+      spark.read.parquet(ledger.slice(batchId)))
     results.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(ledger.slice(batchId))
     ledger.commit(batchId)

@@ -22,10 +22,12 @@ import org.apache.spark.sql.functions._
   * landing exactly ON a committed id passes that guard;
   * [[requireReplay]] refuses it unless its contents equal the stored
   * slice's (a true replay is byte-identical: every writer's slice is a
-  * pure function of the checkpoint-defined batch). Each writer decides
-  * when a compare is possible; a markerless slice (a crash between the
-  * write and the marker) heals by overwrite. `recover` ends both
-  * refusals with the layout's way out. */
+  * pure function of the checkpoint-defined batch). A compare needs both
+  * the marker and the slice: a markerless slice (a crash between the
+  * write and the marker) and a marker without its slice (a crash inside
+  * the Overwrite commit, which deletes the old slice before the rewrite
+  * lands) both heal by overwrite. `recover` ends both refusals with the
+  * layout's way out. */
 private[graft] final case class Ledger(spark: SparkSession, dir: String,
                                        what: String, recover: String) {
   val fs: FileSystem =
@@ -58,30 +60,29 @@ private[graft] final case class Ledger(spark: SparkSession, dir: String,
         s"overwrite committed slices. $recover")
   }
 
-  def committed(batchId: Long): Boolean = fs.exists(marker(batchId))
-
-  def hasSlice(batchId: Long): Boolean = fs.exists(new Path(slice(batchId)))
-
-  /** Refuse `incoming` unless its order-free content fingerprint equals
-    * the `stored` slice's, compared over `incoming`'s columns (the
-    * stored partition column reads back as int where writers stamp
-    * long, so only genuinely different catalog types are cast; a
-    * nullability-only difference is the same type, and Spark refuses
-    * the nullable->non-null cast). */
+  /** When batch `batchId` is committed and its slice exists, refuse
+    * `incoming` unless its order-free content fingerprint equals the
+    * `stored` slice's (read only then), compared over `incoming`'s
+    * columns (the stored partition column reads back as int where
+    * writers stamp long, so only genuinely different catalog types are
+    * cast; a nullability-only difference is the same type, and Spark
+    * refuses the nullable->non-null cast). */
   def requireReplay(batchId: Long, incoming: DataFrame,
-                    stored: DataFrame): Unit = {
-    val types = stored.schema.fields.map(f => f.name -> f.dataType).toMap
-    val aligned = stored.select(incoming.schema.fields.map { f =>
-      if (types(f.name).catalogString == f.dataType.catalogString)
-        col(f.name)
-      else col(f.name).cast(f.dataType)
-    }.toIndexedSeq: _*)
-    require(Ledger.contentFp(incoming) == Ledger.contentFp(aligned),
-      s"$what($dir): ledger collision — micro-batch $batchId is already " +
-        "committed with DIFFERENT contents; the stream was restarted " +
-        "with a fresh checkpoint and its renumbered batch would silently " +
-        s"overwrite the committed slice. $recover")
-  }
+                    stored: => DataFrame): Unit =
+    if (fs.exists(marker(batchId)) && fs.exists(new Path(slice(batchId)))) {
+      val have = stored
+      val types = have.schema.fields.map(f => f.name -> f.dataType).toMap
+      val aligned = have.select(incoming.schema.fields.map { f =>
+        if (types(f.name).catalogString == f.dataType.catalogString)
+          col(f.name)
+        else col(f.name).cast(f.dataType)
+      }.toIndexedSeq: _*)
+      require(Ledger.contentFp(incoming) == Ledger.contentFp(aligned),
+        s"$what($dir): ledger collision — micro-batch $batchId is already " +
+          "committed with DIFFERENT contents; the stream was restarted " +
+          "with a fresh checkpoint and its renumbered batch would " +
+          s"silently overwrite the committed slice. $recover")
+    }
 
   def commit(batchId: Long): Unit = fs.create(marker(batchId), true).close()
 }

@@ -18,6 +18,48 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** The catalog queries that share an intermediate through
+    * [[graft.plans.Shared.share]]. */
+  val sharingQueries: Seq[String] = Seq("q_dedup_prefix_filter",
+    "q_lang_id_ngram", "q_containment_dedup", "q_lsh_tuning", "q_gap_fill",
+    "q_segment_dedup", "q_bigram_logprob", "q_dsir_weights", "q_ppl_bucket",
+    "q_pr_curve", "q_auc", "q_collocations", "q_wordpiece",
+    "q_unigram_tokenizer", "q_unigram_train", "q_kmeans_iter",
+    "q_cluster_topics")
+
+  /** `body`'s result and the Spark jobs it started on this thread, each
+    * named by its shortest stage name (e.g. `parquet at Tables.scala:14`),
+    * counted under a private job group; a sentinel job marks the end of
+    * the window on the event bus. */
+  def jobsStartedBy[T](group: String)(body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "sentinel")
+            sentinel.countDown()
+          else started.add(e.stageInfos.map(_.name).minBy(_.length))
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val r = body
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      (r, started.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 class CatalogSpec extends AnyFunSuite {
@@ -68,6 +110,31 @@ class CatalogSpec extends AnyFunSuite {
         case _ =>
       }
       assert(sorted.last._3 == "9999-12-31")
+    }
+  }
+
+  test("building a sharing query starts no job but Parquet schema inference") {
+    val offenders = sharingQueries.flatMap { name =>
+      val (_, jobs) = jobsStartedBy(s"build-$name") {
+        graft.queries.Catalog.byName(name).fn(spark, sf)
+      }
+      jobs.filterNot(_.startsWith("parquet at Tables.scala:"))
+        .map(j => s"$name: $j")
+    }
+    assert(offenders.isEmpty,
+      s"jobs started while building:\n${offenders.mkString("\n")}")
+  }
+
+  test("a sharing query recomputes after every persisted block is dropped") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    sharingQueries.foreach { name =>
+      val fn = graft.queries.Catalog.byName(name).fn
+      val built = fn(spark, sf)
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      assert(rows(built) == rows(fn(spark, sf)),
+        s"$name: result changed after its blocks were dropped")
     }
   }
 

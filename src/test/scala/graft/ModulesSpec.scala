@@ -40,35 +40,11 @@ class ModulesSpec extends AnyFunSuite {
   private def parquetFiles(d: String): Long =
     graft.sources.Maintenance.parquetFileCount(d)
 
-  /** `body`'s result and the Spark jobs it started on this thread, counted
-    * under a private job group; a sentinel job marks the end of the
-    * window on the event bus. */
+  /** `body`'s result and the number of Spark jobs it started on this
+    * thread ([[TestSpark.jobsStartedBy]]). */
   private def jobsStartedBy[T](group: String)(body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "sentinel")
-            sentinel.countDown()
-          else started.incrementAndGet()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      val r = body
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (r, started.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (r, jobs) = TestSpark.jobsStartedBy(group)(body)
+    (r, jobs.size)
   }
 
   val refCsv =
@@ -2530,9 +2506,9 @@ class ModulesSpec extends AnyFunSuite {
 
   test("localCheckpoint call sites in operators/, queries/ and streaming/ do not grow") {
     import scala.jdk.CollectionConverters._
-    // a ratchet, lowered as sites go: ROADMAP item 2 replaces the eager
-    // checkpoints with one lazy sharing helper, so a new site needs that
-    // helper instead
+    // a ratchet, lowered as sites go: sharing inside one plan goes through
+    // graft.plans.Shared.share, whose scaladoc names the cases that keep
+    // a checkpoint
     val sites = Seq("operators", "queries", "streaming").flatMap { d =>
       val root = java.nio.file.Paths.get(s"src/main/scala/graft/$d")
       assert(java.nio.file.Files.isDirectory(root),
@@ -2546,10 +2522,10 @@ class ModulesSpec extends AnyFunSuite {
           }
         }
     }
-    assert(sites.size <= 56, s"${sites.size} `.localCheckpoint(` call " +
+    assert(sites.size <= 34, s"${sites.size} `.localCheckpoint(` call " +
       "sites under graft/{operators,queries,streaming}, above the ratchet " +
-      "of 56 — " +
-      "ROADMAP item 2 (one lazy sharing helper) retires them; lower the " +
+      "of 34 — share an intermediate inside one plan with " +
+      "graft.plans.Shared.share; lower the " +
       s"ratchet when a site goes, never raise it:\n${sites.mkString("\n")}")
   }
 
@@ -5287,6 +5263,36 @@ class ModulesSpec extends AnyFunSuite {
     assert(ids() == before, "the refused batch still mutated the store")
     ingest(2L, batches(2)) // advancing past the mark stays legal
     assert(ids() == (before :+ ((2L, 102L))).sorted)
+    graft.sources.Maintenance.deleteLocalTree(spark, base)
+  }
+
+  test("streaming store ingest: a replay after a crash inside the Overwrite commit heals the slice") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    // the Overwrite commit deletes the old slice before the rewrite
+    // lands: a crash there leaves the marker without its slice, and the
+    // replay of that batch must rewrite it, not read the missing slice
+    // as empty and refuse the batch as a collision
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_stream_heal").toString
+    val mk = (id: Long, seed: Long) =>
+      (id, Array.tabulate(4)(j => (((seed >> (j * 7)) & 127) - 63.0)))
+    val corpus = (1L to 8L).map(i => mk(i, i * 7919L)).toDF("id", "emb")
+    val store = s"$base/store"
+    Dedup.seedEmbedIngestStore(corpus, store, "id", "emb", 4, 3)
+    val batch = Seq(mk(101L, 31337L), mk(102L, 4242L)).toDF("id", "emb")
+    def ingest(): Unit = Dedup.embedStoreIngestBatch(spark, store,
+      s"$base/pairs", 1L, batch, "id", "emb", 4, 3, 0.9)
+    def ids() = spark.read.parquet(store)
+      .select(col("ingest_batch").cast("long"), col("id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    ingest()
+    val landed = ids()
+    graft.sources.Maintenance.deleteLocalTree(spark, s"$store/ingest_batch=1")
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$store/_ledger_commit_1")))
+    ingest()
+    assert(ids() == landed, "the replay did not rewrite the lost slice")
     graft.sources.Maintenance.deleteLocalTree(spark, base)
   }
 

@@ -41,6 +41,57 @@ class PlanGuardSpec extends AnyFunSuite {
 
   private val allNames = graft.queries.Catalog.everything.map(_.name)
 
+  private def reusedExchanges(nodes: Seq[SparkPlan]): Int = nodes.count(
+    _.isInstanceOf[org.apache.spark.sql.execution.exchange.ReusedExchangeExec])
+
+  test("share: two differently pruned and filtered consumers scan once") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_share").toString
+    spark.range(0, 1000)
+      .select(col("id"), (col("id") % 7).as("k"), (col("id") * 3).as("v"))
+      .write.mode("overwrite").parquet(dir)
+    val t = graft.plans.Shared.share(spark.read.parquet(dir))
+    val q = t.filter(col("k") === 1).select(col("id").as("x"))
+      .union(t.filter(col("v") > 2900).select(col("k").as("x")))
+      .agg(count(lit(1)))
+    assert(q.collect().head.getLong(0) == 143 + 33)
+    val nodes = graft.tools.PlanAudit.walk(q.queryExecution.executedPlan)
+    val scans = nodes.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scans.size == 1 && reusedExchanges(nodes) == 1,
+      s"expected one scan and one reused shared exchange:\n" +
+        q.queryExecution.executedPlan)
+  }
+
+  test("each sharing query runs every shared intermediate once, through reuse") {
+    import org.apache.spark.sql.execution.exchange._
+    val offenders = TestSpark.sharingQueries.flatMap { name =>
+      val df = graft.queries.Catalog.byName(name).fn(spark, sf)
+      val shares = df.queryExecution.optimizedPlan.collect {
+        case s: graft.plans.Shared => s.canonicalized
+      }.distinct.size
+      df.collect()
+      val nodes = graft.tools.PlanAudit.walk(df.queryExecution.executedPlan)
+      val rddScans = nodes.count(
+        _.isInstanceOf[org.apache.spark.sql.execution.RDDScanExec])
+      val reused = reusedExchanges(nodes)
+      // AQE may drop a consumer (an empty broadcast side) or reuse an
+      // exchange above the shared one; either way no shared exchange
+      // may run twice
+      val ran = nodes.collect {
+        case e: ShuffleExchangeExec
+            if e.shuffleOrigin == REBALANCE_PARTITIONS_BY_NONE => e.canonicalized
+      }
+      if (shares >= 1 && rddScans == 0 && reused >= shares &&
+          ran.distinct.size == ran.size) Nil
+      else Seq(s"$name: $shares shares, $reused reused exchanges, " +
+        s"${ran.size - ran.distinct.size} shared exchanges run twice, " +
+        s"$rddScans RDD scans")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("no catalog query plans an unpartitioned window") {
     val offenders = allNames.flatMap { name =>
       plans(name).collect {
