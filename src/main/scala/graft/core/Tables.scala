@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (see /root/repo/TESTDATA.md).
   *
@@ -8,10 +9,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pipeline runs unchanged at sf0.001 (smoke), sf0.01 (oracle) and sf0.1
   * (bench) — and, by extension, on a real cluster at any scale: nothing
   * here assumes local mode or data size.
+  *
+  * Each table's schema is resolved once per session and pinned on every
+  * later read (`spark.read.schema(s)`): an unpinned `spark.read.parquet`
+  * starts a schema-inference job on every call, so building a query would
+  * run a job per table it reads. The pin is keyed by the table's file
+  * listing (names, lengths, modification times), so a rewritten table is
+  * re-resolved, never read under a stale schema.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Per session: table path -> (file listing, schema resolved from it). */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], StructType)]]
+
+  private def schema(spark: SparkSession, path: String): StructType = {
+    val pinned = schemas.synchronized(schemas.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap))
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    val listing = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+    pinned.compute(path, {
+      case (_, (l, s)) if l == listing => (l, s)
+      case _ => (listing, spark.read.parquet(path).schema)
+    })._2
+  }
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")
@@ -36,7 +64,8 @@ object Tables {
     * any later nanos-parquet read. The project's session builders
     * (Bench/Verify/tests) set it at build time so behavior never depends
     * on whether events() ran first; the set here is a safety net for
-    * external sessions.
+    * external sessions. The encoding branch reads the pinned schema, so
+    * it starts no job.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}

@@ -1,7 +1,11 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.{text, TextSig, SparkDialect => S}
 
@@ -51,7 +55,7 @@ object Dedup {
     * blocks (r13): `Dataset.unpersist` goes through the CacheManager and
     * no-ops on checkpoints, so without this the blocks live until the
     * driver GCs the frame and the ContextCleaner gets around to it — an
-    * operator that checkpoints per call (clusters, pqFit) would pin one
+    * operator that checkpoints per call (pqFit) would pin one
     * copy of its largest intermediate per invocation in executor storage
     * between GCs. Callers may only release frames the RETURNED plan no
     * longer references (a released checkpoint cannot recompute — its
@@ -1070,109 +1074,86 @@ object Dedup {
     * member count. The fixpoint (true connected components) is unique, so
     * results are engine- and iteration-order-independent — the DuckDB
     * oracle computes the same components via WITH RECURSIVE closure.
+    * `idCol`, `a_id` and `b_id` must be bigint (checked).
     *
-    * Scale: each round is one shuffle join keyed by id (pair tables are
-    * orders of magnitude smaller than the corpus); rounds needed = graph
-    * diameter, and near-dup components are shallow (chains of boilerplate
+    * Propagation runs only over the pair graph's vertex set: an id in no
+    * pair is its own singleton component and never changes, so the loop
+    * never shuffles the corpus, and singletons rejoin lazily at the end.
+    *
+    * Cost: the adjacency is built once, one `groupByKey` into a
+    * `HashPartitioner` of `spark.sql.shuffle.partitions` (the width
+    * [[graft.plans.Shared.share]] uses, not AQE's initial partition
+    * number: AQE does not coalesce an RDD shuffle, so every round would
+    * run that many tasks, 256 in [[graft.core.Graft.session]]). Each
+    * round is then ONE Spark job: a
+    * `reduceByKey(min)` of neighbour labels into the same partitioner and
+    * a narrow co-partitioned join with the round state, whose
+    * `localCheckpoint` is materialised by the same `count` of labels that
+    * changed. Zero changes is the fixpoint, reached after diameter + 1
+    * rounds; near-dup components are shallow (chains of boilerplate
     * variants), so this converges in a handful of rounds where a full
-    * transitive closure would explode quadratically. Convergence is
-    * detected by the strictly-decreasing label sum — one scalar agg per
-    * round, no data to the driver. (GraphFrames' large-star/small-star is
-    * the published generalization; plain min-propagation keeps it
-    * dependency-free.)
+    * transitive closure would explode quadratically. Each superseded
+    * round's blocks are released as soon as the next one is materialised.
+    *
+    * Fault story: the returned frame is a lazy plan over the final
+    * round's checkpoint, kept in executor storage (a lost executor means
+    * re-running the loop, GraphX's trade-off). (GraphFrames'
+    * large-star/small-star is the published generalization; plain
+    * min-propagation keeps it dependency-free.)
     */
   def clusters(ids: DataFrame, idCol: String, pairs: DataFrame,
                maxIter: Int = 25): DataFrame = {
-    // eagerly localCheckpoint the pair table (r13; was cache): both union
-    // branches read it, and a CACHED frame keeps its full logical plan —
-    // every round's neighbor join then re-optimizes the (possibly
-    // expensive, e.g. MinHash LSH) pairs subtree on the driver, the same
-    // per-reference planning tax the recall trilogy measured at 5x its
-    // execution cost. The checkpoint truncates the lineage to a leaf once
-    // (one job, the pairs plan exactly once), the edge union stays a lazy
-    // projection over the leaf (narrow, recomputed per round for less
-    // than a second cache's bookkeeping), and every round plans against a
-    // leaf table. Same executor-memory persistence and fault story the
-    // loop's own per-round checkpoints already accept; the blocks are
-    // released deterministically on every exit path (the try/finally
-    // below) — the returned plan reads only the final labels checkpoint,
-    // never p.
-    val p = pairs.select(col("a_id"), col("b_id")).localCheckpoint(true)
-    try clustersOverCheckpointedPairs(ids, idCol, p, maxIter)
-    finally releaseLocalCheckpoint(p)
-  }
-
-  private def clustersOverCheckpointedPairs(ids: DataFrame, idCol: String,
-                                            p: DataFrame,
-                                            maxIter: Int): DataFrame = {
-    val edges = p.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(p.select(col("b_id").as("src"), col("a_id").as("dst")))
-    // propagate only over the pair graph's vertex set: every id NOT in a
-    // pair is its own singleton component by definition and never changes,
-    // so iterating over the full corpus would shuffle (at 100 TB) billions
-    // of fixed singleton rows per round for nothing — the loop runs on the
-    // dup-graph vertices only (orders of magnitude smaller than the corpus)
-    // and singletons rejoin once at the end
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-    // an empty pair table means every id is a singleton, and the labels
-    // frame (an uncheckpointed distinct over the possibly-expensive pairs
-    // plan) would be re-executed by the singleton anti-join below —
-    // short-circuit to the pure singleton frame instead: no join, no
-    // recompute of an all-empty mine
-    if (labels.isEmpty) {
-      return ids.select(col(idCol).as("id"))
-        .select(col("id"), col("id").as("cluster"), lit(1L).as("n_members"))
+    for ((df, c) <- Seq(ids -> idCol, pairs -> "a_id", pairs -> "b_id")) {
+      val t = df.schema(c).dataType
+      require(t == LongType,
+        s"Dedup.clusters needs bigint ids: `$c` is ${t.simpleString}")
     }
-    // convergence sum in decimal(38,0), not Long: labels are arbitrary
-    // 63-bit ids, and a Long sum wraps mod 2^64 — a round whose total
-    // label decrease lands on a multiple of 2^64 would read as a
-    // fixpoint and silently return intermediate labels as components
-    // (decimal 38 holds 10^18 rows of 2^63 with room to spare, and an
-    // actual overflow nulls the aggregate, failing the null-safe compare
-    // below into another round rather than a false fixpoint)
-    var prevSum: java.math.BigDecimal = null
+    val part = new HashPartitioner(SQLConf.get.defaultNumShufflePartitions)
+    // round state per vertex: (label, neighbours, label changed this
+    // round); a pair with a null end joins nothing, but its other end is
+    // still a vertex
+    val seed: RDD[(Long, (Long, Array[Long], Boolean))] =
+      pairs.select(col("a_id"), col("b_id")).rdd.flatMap { r =>
+        val a = if (r.isNullAt(0)) None else Some(r.getLong(0))
+        val b = if (r.isNullAt(1)) None else Some(r.getLong(1))
+        a.map(_ -> b) ++ b.map(_ -> a)
+      }.groupByKey(part).map { case (v, ns) => v -> (v, ns.flatten.toArray, true) }
+    def round(s: RDD[(Long, (Long, Array[Long], Boolean))]) = {
+      val nbMin = s.flatMap { case (_, (l, ns, _)) => ns.iterator.map(_ -> l) }
+        .reduceByKey(part, _ min _)
+      // both sides are hash-partitioned by vertex into `part`: partition i
+      // of each holds the same vertices, so the join is narrow
+      s.zipPartitions(nbMin) { (vs, ms) =>
+        val m = ms.toMap
+        vs.map { case (v, (l, ns, _)) =>
+          val n = m.getOrElse(v, l)
+          v -> (n min l, ns, n < l)
+        }
+      }
+    }
+    var state = seed
+    var changed = -1L
     var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbMin = edges.join(labels, edges("src") === labels("id"))
-        .groupBy(col("dst")).agg(min(col("cluster")).as("nb_cluster"))
-      // localCheckpoint, NOT cache: a cached frame keeps its full logical
-      // plan, so round N's tree nests every earlier round and Catalyst
-      // re-analyzes an exponentially growing plan each materialization —
-      // measured 2-4x the whole operator's runtime in driver-side
-      // optimization alone. Checkpointing truncates lineage to the
-      // materialized partitions (executor-memory persisted; iterative
-      // algorithms accept the weaker fault story — a lost executor means
-      // restarting the loop, exactly GraphX's trade-off)
-      // LAZY checkpoint + the convergence aggregate as the materializing
-      // action: one job per round instead of two (eager checkpoint, then
-      // sum) — the loop is job-launch-bound at test scale, and at 100 TB
-      // one fewer full pass over the label table per round
-      val next = labels.join(nbMin, labels("id") === nbMin("dst"), "left")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("nb_cluster"), col("cluster"))).as("cluster"))
-        .localCheckpoint(false)
-      // min-labels only ever decrease: an unchanged sum IS the fixpoint
-      val s = next.agg(sum(col("cluster").cast("decimal(38,0)")))
-        .head().getDecimal(0)
-      converged = s != null && prevSum != null && s.compareTo(prevSum) == 0
-      prevSum = s
-      // next's blocks are fully materialized by the sum action above, so
-      // the previous round's checkpoint is no longer read by any future
-      // job — release it now instead of waiting for driver GC (no-op on
-      // round 1, whose seed labels are uncheckpointed)
-      releaseLocalCheckpoint(labels)
-      labels = next
+    while (changed != 0 && iter < maxIter) {
+      val next = round(state).localCheckpoint()
+      changed = try next.filter(_._2._3).count()
+        catch { case e: Throwable => next.unpersist(blocking = false); throw e }
+        finally state.unpersist(blocking = false)
+      state = next
       iter += 1
     }
     // the unique-fixpoint contract (and the WITH RECURSIVE oracle) is void
     // if the loop ran out of budget mid-propagation — fail loudly rather
     // than return intermediate labels as if they were components
-    if (!converged)
+    if (changed != 0) {
+      state.unpersist(blocking = false)
       throw new IllegalStateException(
         s"Dedup.clusters did not reach the label fixpoint in $maxIter " +
           "iterations (component diameter exceeds maxIter) — raise maxIter")
+    }
+    val spark = ids.sparkSession
+    import spark.implicits._
+    val labels = state.map { case (v, (l, _, _)) => (v, l) }.toDF("id", "cluster")
     val sizes = labels.groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
     val connected = labels.join(sizes, "cluster")
       .select(col("id"), col("cluster"), col("n_members"))

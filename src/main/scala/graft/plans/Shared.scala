@@ -27,9 +27,13 @@ import org.apache.spark.sql.internal.SQLConf
   * '''`localCheckpoint` stays only where it measured better,''' with one
   * line at each site naming its case:
   *  - ''iterative loop'': round K's plan would otherwise embed rounds
-  *    1..K-1 (`Dedup.clusters`, pagerank, bpeTrain); a leaf per round
-  *    keeps planning flat. Superseded rounds are released
-  *    ([[graft.operators.Dedup.releaseLocalCheckpoint]]).
+  *    1..K-1 (pagerank, bpeTrain); a leaf per round keeps planning flat.
+  *    Superseded rounds are released
+  *    ([[graft.operators.Dedup.releaseLocalCheckpoint]]). A loop that
+  *    needs no relational operator per round plans nothing per round:
+  *    `Dedup.clusters` keeps its graph in one co-partitioned RDD and
+  *    checkpoints that RDD per round, one Spark job each, releasing the
+  *    superseded round with `unpersist`.
   *  - ''driver-side reader'': a driver-side fit, `count()` or loop reads
   *    the frame as well as the returned plan. Those are two executions,
   *    so a shared subtree would run twice; the checkpoint runs it once.

@@ -3926,7 +3926,7 @@ object PipelineQueries {
       val pairs = dw.select(explode(expr(windowPairsExpr("toks", 4))).as("p"))
         .select(col("p.wa").as("wa"), col("p.wb").as("wb"))
       val tok = dw.select(explode(col("toks")).as("w"))
-      val nw = share(tok.groupBy("w").agg(count(lit(1)).as("nw")))
+      val nw = tok.groupBy("w").agg(count(lit(1)).as("nw"))
       val nt = tok.agg(count(lit(1)).as("n"))
       val ab = pairs.groupBy("wa", "wb").agg(count(lit(1)).as("nab"))
         .filter(col("nab") >= 50)

@@ -113,13 +113,14 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
-  test("building a sharing query starts no job but Parquet schema inference") {
+  test("building a sharing query starts no job") {
+    // every table's schema is resolved once per session: warm each query's
+    // tables with one build, then measure the next
     val offenders = sharingQueries.flatMap { name =>
-      val (_, jobs) = jobsStartedBy(s"build-$name") {
-        graft.queries.Catalog.byName(name).fn(spark, sf)
-      }
-      jobs.filterNot(_.startsWith("parquet at Tables.scala:"))
-        .map(j => s"$name: $j")
+      val fn = graft.queries.Catalog.byName(name).fn
+      fn(spark, sf)
+      val (_, jobs) = jobsStartedBy(s"build-$name")(fn(spark, sf))
+      jobs.map(j => s"$name: $j")
     }
     assert(offenders.isEmpty,
       s"jobs started while building:\n${offenders.mkString("\n")}")

@@ -82,6 +82,36 @@ class SchemaDriftSpec extends AnyFunSuite {
     assert(got == micros)
   }
 
+  test("table loader: a schema is pinned per file listing; a rewritten file is re-resolved") {
+    val dir = Files.createTempDirectory("graft-pin").toFile
+    dir.deleteOnExit()
+    val table = new java.io.File(dir, "t.parquet")
+    // one single-file table, as the testdata ships them
+    def writeAs(name: String, mtime: Long): Unit = {
+      val out = s"${dir.getAbsolutePath}/out"
+      spark.range(5).select(col("id").as(name)).coalesce(1)
+        .write.mode("overwrite").parquet(out)
+      val part = new java.io.File(out).listFiles.filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, table.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(table.setLastModified(mtime))
+    }
+    val t0 = System.currentTimeMillis() / 1000 * 1000 - 60000
+    writeAs("id", t0)
+    assert(Tables.table(spark, dir.getAbsolutePath, "t").columns.toSeq == Seq("id"))
+    val (_, jobs) = jobsStartedBy("pinned-table-read") {
+      Tables.table(spark, dir.getAbsolutePath, "t")
+    }
+    assert(jobs.isEmpty, s"a second read of an unchanged table started $jobs")
+    // same name, same length, new column name: only the mtime tells
+    val len = table.length
+    writeAs("ix", t0 + 10000)
+    assert(table.length == len)
+    val reread = Tables.table(spark, dir.getAbsolutePath, "t")
+    assert(reread.columns.toSeq == Seq("ix"))
+    assert(reread.agg(sum(col("ix"))).head.getLong(0) == 10L)
+  }
+
   test("live testdata: every table loads with the dtypes the catalog assumes") {
     // the load-bearing columns each query family dereferences — drift in
     // any of these breaks dozens of queries, so pin them all here
